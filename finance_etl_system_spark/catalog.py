@@ -17,6 +17,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .functions.sqltext import pin_sql_text_conf
+
 # Driver star-schema tables (FIXTURES.md §B). Identical across scale
 # factors; one parquet file per table under the sf dir.
 STAR_SCHEMA: dict[str, T.StructType] = {
@@ -167,9 +169,11 @@ def load_table(
     # runtime-settable and required for correct scans regardless of how
     # the session was built: NANOS timestamps (events.ts) read as long,
     # and UTC so timestamp formatting matches the (naive-UTC) fixture
-    # data and the DuckDB oracle.
+    # data and the DuckDB oracle. The query built on this scan parses
+    # engine SQL text, so the parser conf is pinned here as well.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
+    pin_sql_text_conf(spark)
     path = f"{sf_dir}/{name}.parquet"
     df = spark.read.schema(_source_schema(spark, path)).parquet(path)
     # events.ts is TIMESTAMP(NANOS) in the fixture parquet; with

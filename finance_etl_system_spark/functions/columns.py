@@ -81,6 +81,19 @@ def tick_avg(col: Column | str, scale: int = 100, dp: int = 6) -> Column:
     )
 
 
+def half_away_div_sql(num: str, den: str) -> str:
+    """Spark SQL text for ``num / den`` rounded half away from zero,
+    for an integer ``num`` and a positive integer ``den``, in exact
+    integer arithmetic: a float quotient can land either side of a
+    .5 tie, and Spark and DuckDB then round it differently. The
+    DuckDB twin is the same text with ``//`` for ``div`` and
+    ``sign`` for ``CAST(signum(..) AS BIGINT)``."""
+    return (
+        f"CAST(signum({num}) AS BIGINT)"
+        f" * ((2 * abs({num}) + {den}) div (2 * {den}))"
+    )
+
+
 def row_key(*cols: str, sep: str = "§") -> Column:
     """Deterministic surrogate key: sha2 over the concatenated natural
     key. Replaces the reference's `uuid()` id (etl_job.py:257) which

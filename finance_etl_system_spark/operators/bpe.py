@@ -50,7 +50,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, StringType
 
-from .text import normalized
+from .text import tokens
 
 END_OF_WORD = "</w>"
 
@@ -64,8 +64,8 @@ _JVM_WS = re.compile(r"[ \t\n\x0B\f\r]+")
 
 def segment_words(text: str | None) -> list[str]:
     """Python twin of ``word_freq``'s JVM segmentation
-    (``F.split(normalized(text), " ")``): lowercase the WHOLE string
-    first (same operation order as normalized()), then split on the
+    (``operators.text.tokens``): lowercase the WHOLE string first
+    (same operation order as ``normalized``), then split on the
     Java-default ``\\s`` class. Keeping the two rules identical is a
     correctness contract — tests pin it on NBSP/Unicode-space
     fixtures."""
@@ -92,7 +92,7 @@ def word_freq(
     noise, not vocabulary."""
     return (
         df.select(
-            F.explode(F.split(normalized(F.col(text_col)), " ")).alias("term")
+            F.explode(tokens(text_col)).alias("term")
         )
         .filter(
             (F.col("term") != "") & (F.length("term") <= max_word_chars)

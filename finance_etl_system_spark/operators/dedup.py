@@ -28,27 +28,19 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .partitioning import spread_for_expansion
-from .similarity import _as_double, _dot, _norm, _planes, signature_col, signature_udf
-from .text import normalized, tokens
+from .similarity import _as_double_sql, _dot_sql, _norm_sql, _planes, signature_udf
+from .text import fingerprint, tokens, tokens_expr
 
 # MinHash modulus: 31-bit Mersenne prime keeps a*h+b within int64
 # under ANSI overflow checking (a, h < 2^31 → a*h < 2^62).
 _MERSENNE = (1 << 31) - 1
 
 
-def content_fingerprint(text_col):
-    """THE exact-dedup fingerprint: sha2-256 over normalized content.
-    Single definition shared by exact_dedup and the incremental corpus
-    build (pipeline/corpus.py) — the increment ≡ rebuild contract
-    depends on both using the identical fingerprint."""
-    return F.sha2(normalized(text_col), 256)
-
-
 def exact_dedup(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
     """Keep the lowest-id doc per identical normalized content."""
-    hashed = df.withColumn("_fp", content_fingerprint(F.col(text_col)))
+    hashed = df.withColumn("_fp", fingerprint(text_col))
     w = Window.partitionBy("_fp").orderBy(F.col(id_col).asc())
     return (
         hashed.withColumn("_rn", F.row_number().over(w))
@@ -74,7 +66,7 @@ def exact_dedup_by_priority(
     rank = F.lit(len(priority))
     for i, src in reversed(list(enumerate(priority))):
         rank = F.when(F.col(source_col) == src, F.lit(i)).otherwise(rank)
-    hashed = df.withColumn("_fp", content_fingerprint(F.col(text_col)))
+    hashed = df.withColumn("_fp", fingerprint(text_col))
     w = Window.partitionBy("_fp").orderBy(
         rank.asc(), F.col(source_col).asc(), F.col(id_col).asc()
     )
@@ -85,44 +77,22 @@ def exact_dedup_by_priority(
     )
 
 
-def shingles(text_col, n: int = 3):
-    """Word n-gram shingle array (distinct) from normalized text.
-
-    Accepts a Column (legacy) or a plain COLUMN NAME string. The
-    string form assembles the whole expression as ONE SQL string
-    parsed JVM-side (r14, guide §1.2 step 2): the Column form costs
-    ~10 py4j round trips per call — including two lambda-function
-    registrations — which measured 0.1-0.3 s of pure driver time per
-    signature pass. Identical expression tree after parsing (the
-    token subtree is duplicated either way: Catalyst expressions have
-    no DAG sharing)."""
-    if isinstance(text_col, str):
-        toks = _tokens_sql(text_col)
-        if n == 1:
-            return F.expr(f"array_distinct({toks})")
-        return F.expr(
-            f"array_distinct(transform("
-            f"sequence(0, greatest(array_size({toks}) - {int(n)}, 0)),"
-            f" i -> concat_ws(' ', slice({toks}, i + 1, {int(n)}))))"
-        )
-    toks = tokens(text_col)
+def shingles(text_col: str, n: int = 3):
+    """Word n-gram shingle array (distinct) from normalized text
+    (:func:`operators.text.tokens`), as ONE SQL string parsed
+    JVM-side: a Column chain costs ~10 py4j round trips per call —
+    including two lambda-function registrations — which measured
+    0.1-0.3 s of pure driver time per signature pass. The token
+    subtree appears twice either way: Catalyst expressions have no
+    DAG sharing."""
+    toks = tokens_expr(text_col)
     if n == 1:
-        return F.array_distinct(toks)
+        return F.expr(f"array_distinct({toks})")
     # slide a window over the token array: tokens[i : i+n] joined by ' '
-    idx = F.sequence(F.lit(0), F.greatest(F.array_size(toks) - n, F.lit(0)))
-    return F.array_distinct(
-        F.transform(
-            idx,
-            lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)),
-        )
-    )
-
-
-def _tokens_sql(col: str) -> str:
-    """SQL-string twin of ``tokens(F.col(col))`` — keep in lockstep
-    with operators/text.normalized + tokens."""
-    return (
-        f"split(trim(regexp_replace(lower(`{col}`), '\\\\s+', ' ')), ' ')"
+    return F.expr(
+        f"array_distinct(transform("
+        f"sequence(0, greatest(array_size({toks}) - {int(n)}, 0)),"
+        f" i -> concat_ws(' ', slice({toks}, i + 1, {int(n)}))))"
     )
 
 
@@ -720,7 +690,7 @@ def simhash(df: DataFrame, *, text_col: str = "text", id_col: str = "doc_id") ->
     """64-bit SimHash per document."""
     return df.select(
         F.col(id_col).alias("id"),
-        _simhash_udf(tokens(F.col(text_col))).alias("simhash"),
+        _simhash_udf(tokens(text_col)).alias("simhash"),
     )
 
 
@@ -810,8 +780,10 @@ def embedding_cosine_pairs(
     # norm is materialized as its own column first — referencing it
     # from inside the transform lambda would re-fold it per element.
     base = (
-        df.select(F.col(id_col).alias("id"), _as_double(F.col(vec_col)).alias("v0"))
-        .withColumn("_n", _norm(F.col("v0")))
+        df.select(
+            F.col(id_col).alias("id"), F.expr(_as_double_sql(vec_col)).alias("v0")
+        )
+        .withColumn("_n", F.expr(_norm_sql("v0")))
         .select("id", F.transform("v0", lambda x: x / F.col("_n")).alias("v"))
     )
     if lsh_nbits is None:
@@ -869,7 +841,7 @@ def embedding_cosine_pairs(
         cands = pairs.join(
             sig.select(F.col("id").alias("id_a"), F.col("v").alias("va")), "id_a"
         ).join(sig.select(F.col("id").alias("id_b"), F.col("v").alias("vb")), "id_b")
-    cosine = F.round(_dot(F.col("va"), F.col("vb")), round_dp)
+    cosine = F.expr(f"round({_dot_sql('va', 'vb')}, {int(round_dp)})")
     return (
         cands.withColumn("cosine", cosine)
         .filter(F.col("cosine") >= threshold)

@@ -633,18 +633,18 @@ def pq_topk_adc(
             "qid", "rnk", "cid", "score"
         )
 
-    from .similarity import _as_double, _dot, _norm
+    from .similarity import _as_double_sql, _cosine_sql
 
     survivors = ranked.filter(F.col("rnk") <= rerank).select(
         "qid", "cid", F.col("score").alias("adc")
     )
     qv = (rerank_queries if rerank_queries is not None else queries).select(
         F.col(query_id_col).alias("qid"),
-        _as_double(F.col(query_vec_col)).alias("qv"),
+        F.expr(_as_double_sql(query_vec_col)).alias("qv"),
     )
     cv = rerank_with.select(
         F.col(id_col).alias("cid"),
-        _as_double(F.col(corpus_vec_col)).alias("cv"),
+        F.expr(_as_double_sql(corpus_vec_col)).alias("cv"),
     )
     exact = (
         cv.join(F.broadcast(survivors), "cid")
@@ -653,13 +653,9 @@ def pq_topk_adc(
             "qid",
             "cid",
             "adc",
-            F.round(
-                F.try_divide(
-                    _dot(F.col("qv"), F.col("cv")),
-                    _norm(F.col("qv")) * _norm(F.col("cv")),
-                ),
-                6,
-            ).alias("score"),
+            F.expr(f"round({_cosine_sql('qv', 'cv', safe=True)}, 6)").alias(
+                "score"
+            ),
         )
     )
     we = Window.partitionBy("qid").orderBy(
@@ -1039,7 +1035,7 @@ def _cosine_topk_ivf_pq_once(
     into the index's space for routing and ADC; the exact rerank
     keeps the caller's ORIGINAL vectors — cosine is rotation-
     invariant, so the two spaces agree on the final scores."""
-    from .similarity import _as_double, _dot, _norm, _route_queries
+    from .similarity import _as_double_sql, _cosine_sql, _route_queries
 
     _check_not_building(spark, path)
     meta = spark.read.parquet(f"{path}/meta").collect()[0]
@@ -1081,7 +1077,7 @@ def _cosine_topk_ivf_pq_once(
     )
     q = queries.select(
         F.col(query_id).alias("qid"),
-        _as_double(F.col(query_vec_col)).alias("qv"),
+        F.expr(_as_double_sql(query_vec_col)).alias("qv"),
     )
     if R is not None:
         q = rotate_vectors(q, R, vec_col="qv")
@@ -1174,11 +1170,11 @@ def _cosine_topk_ivf_pq_once(
     )
     qv = queries.select(
         F.col(query_id).alias("qid"),
-        _as_double(F.col(query_vec_col)).alias("qv"),
+        F.expr(_as_double_sql(query_vec_col)).alias("qv"),
     )
     cv = rerank_with.select(
         F.col(id_col).alias("cid"),
-        _as_double(F.col(corpus_vec_col)).alias("cv"),
+        F.expr(_as_double_sql(corpus_vec_col)).alias("cv"),
     )
     exact = (
         cv.join(F.broadcast(survivors), "cid")
@@ -1187,13 +1183,9 @@ def _cosine_topk_ivf_pq_once(
             "qid",
             "cid",
             "adc",
-            F.round(
-                F.try_divide(
-                    _dot(F.col("qv"), F.col("cv")),
-                    _norm(F.col("qv")) * _norm(F.col("cv")),
-                ),
-                6,
-            ).alias("score"),
+            F.expr(f"round({_cosine_sql('qv', 'cv', safe=True)}, 6)").alias(
+                "score"
+            ),
         )
     )
     we = Window.partitionBy("qid").orderBy(

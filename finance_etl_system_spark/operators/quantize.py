@@ -30,6 +30,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.sqltext import sql_ident
+
 Q_MAX = 127
 
 
@@ -192,13 +194,13 @@ def cosine_topk_sq8(
     # broadcast the survivor id set into the corpus scan (a
     # semi-join-shaped broadcast hash join — the corpus still never
     # shuffles), queries re-broadcast by qid
-    from .similarity import _as_double_sql, _dot_sql, _norm_sql
+    from .similarity import _as_double_sql, _cosine_sql
 
     qv = queries.selectExpr(
-        f"`{query_id}` AS qid", f"{_as_double_sql(vec_col)} AS qv"
+        f"{sql_ident(query_id)} AS qid", f"{_as_double_sql(vec_col)} AS qv"
     )
     cv = corpus.selectExpr(
-        f"`{corpus_id}` AS cid", f"{_as_double_sql(vec_col)} AS cv"
+        f"{sql_ident(corpus_id)} AS cid", f"{_as_double_sql(vec_col)} AS cv"
     )
     exact = (
         cv.join(F.broadcast(survivors), "cid")
@@ -211,8 +213,7 @@ def cosine_topk_sq8(
             # cosine NULL (ranks last) instead of an ANSI-mode
             # DIVIDE_BY_ZERO abort — quantize_int8's contract
             # explicitly admits all-zero vectors
-            f"round(try_divide({_dot_sql('qv', 'cv')},"
-            f" {_norm_sql('qv')} * {_norm_sql('cv')}), 6) AS cosine",
+            f"round({_cosine_sql('qv', 'cv', safe=True)}, 6) AS cosine",
         )
     )
     we = Window.partitionBy("qid").orderBy(

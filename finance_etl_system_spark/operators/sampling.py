@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.sqltext import sql_ident
+
 _BUCKETS = 16**4  # 4 hex chars
 KEY_SPACE = 2**32  # budget_take order keys are expected in [0, KEY_SPACE)
 
@@ -155,7 +157,7 @@ def budget_take(
     b = b.withColumn(
         "_bucket",
         F.expr(
-            f"(`{order_col}` - pmod(`{order_col}`, {width}))"
+            f"({sql_ident(order_col)} - pmod({sql_ident(order_col)}, {width}))"
             f" div {width}"
         ),
     )

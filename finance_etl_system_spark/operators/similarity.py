@@ -22,30 +22,15 @@ from pyspark.sql import functions as F
 
 from ..functions.confs import partition_overwrite
 from ..functions.errors import error_condition
+from ..functions.sqltext import sql_ident, sql_literal
 
 
-def _as_double(col):
-    return F.transform(col, lambda x: x.cast("double"))
-
-
-def _dot(a, b):
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v
-    )
-
-
-def _norm(a):
-    return F.sqrt(_dot(a, a))
-
-
-# SQL-text twins of the three helpers above — keep in lockstep
-# (r14, guide §1.2 step 2: each Column lambda registration costs py4j
-# round trips; the bruteforce construction measured ~250 ms of pure
-# driver time). The parsed trees are the same expressions — the
-# sequential (acc, v) -> acc + v fold order is untouched, so scores
-# stay bit-identical. Parity pinned in tests/test_retrieval_sqltext.py.
+# The vector building blocks as Spark SQL text: each Column lambda
+# registration costs py4j round trips (the bruteforce construction
+# measured ~250 ms of pure driver time as a Column chain). The
+# sequential (acc, v) -> acc + v fold keeps scores bit-stable.
 def _as_double_sql(col: str) -> str:
-    return f"transform(`{col}`, x -> CAST(x AS DOUBLE))"
+    return f"transform({sql_ident(col)}, x -> CAST(x AS DOUBLE))"
 
 
 def _dot_sql(a: str, b: str) -> str:
@@ -57,6 +42,15 @@ def _dot_sql(a: str, b: str) -> str:
 
 def _norm_sql(a: str) -> str:
     return f"sqrt({_dot_sql(a, a)})"
+
+
+def _cosine_sql(a: str, b: str, *, safe: bool = False) -> str:
+    """cos(a, b); ``safe`` (``try_divide``) gives NULL for a zero
+    vector instead of ANSI mode's DIVIDE_BY_ZERO error."""
+    den = f"{_norm_sql(a)} * {_norm_sql(b)}"
+    if safe:
+        return f"try_divide({_dot_sql(a, b)}, {den})"
+    return f"{_dot_sql(a, b)} / ({den})"
 
 
 def cosine_topk_bruteforce(
@@ -77,21 +71,16 @@ def cosine_topk_bruteforce(
     partition heads). Cosine is rounded BEFORE ranking so ordering is
     deterministic across engines/plans.
     """
-    # projections assembled as JVM-parsed strings (r14): identical
-    # expression trees to the Column chain, ~250 ms less driver time
-    # per construction — see the _*_sql twins above
     q = queries.selectExpr(
-        f"`{query_id}` AS qid", f"{_as_double_sql(vec_col)} AS qv"
+        f"{sql_ident(query_id)} AS qid", f"{_as_double_sql(vec_col)} AS qv"
     )
     c = corpus.selectExpr(
-        f"`{corpus_id}` AS cid", f"{_as_double_sql(vec_col)} AS cv"
+        f"{sql_ident(corpus_id)} AS cid", f"{_as_double_sql(vec_col)} AS cv"
     )
     scored = c.crossJoin(F.broadcast(q)).selectExpr(
         "qid",
         "cid",
-        f"round({_dot_sql('qv', 'cv')}"
-        f" / ({_norm_sql('qv')} * {_norm_sql('cv')}), {int(round_dp)})"
-        " AS cosine",
+        f"round({_cosine_sql('qv', 'cv')}, {int(round_dp)}) AS cosine",
     )
     w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col("cid").asc())
     return (
@@ -105,16 +94,19 @@ def _planes(nbits: int, dim: int, seed: int = 7) -> np.ndarray:
     return np.random.RandomState(seed).randn(nbits, dim)
 
 
-def signature_col(vec_col, planes: np.ndarray):
-    """Random-hyperplane signature: bit i = sign(v · plane_i) — as an
-    array of nbits ints, computed JVM-side from literal plane arrays.
-    Plan size grows as nbits × dim literals: fine to ~16 bits; beyond
-    that use :func:`signature_udf` (Arrow-batched matmul)."""
+def signature_col(vec_sql: str, planes: np.ndarray):
+    """Random-hyperplane signature of the double-array SQL expression
+    ``vec_sql``: bit i = sign(v · plane_i) — as an array of nbits
+    ints, computed JVM-side from literal plane arrays. Plan size grows
+    as nbits × dim literals: fine to ~16 bits; beyond that use
+    :func:`signature_udf` (Arrow-batched matmul)."""
     bits = []
     for row in planes:
-        plane = F.array(*[F.lit(float(x)) for x in row])
-        bits.append(F.when(_dot(vec_col, plane) >= 0, 1).otherwise(0))
-    return F.array(*bits)
+        plane = "array(" + ", ".join(sql_literal(float(x)) for x in row) + ")"
+        bits.append(
+            f"CASE WHEN {_dot_sql(vec_sql, plane)} >= 0 THEN 1 ELSE 0 END"
+        )
+    return F.expr("array(" + ", ".join(bits) + ")")
 
 
 def signature_udf(planes: np.ndarray):
@@ -178,8 +170,9 @@ def cosine_topk_lsh(
     sig_udf = signature_udf(planes) if use_udf else None
 
     def with_bands(df, id_alias):
-        v = _as_double(F.col(vec_col))
-        sig = sig_udf(v) if use_udf else signature_col(v, planes)
+        v_sql = _as_double_sql(vec_col)
+        v = F.expr(v_sql)
+        sig = sig_udf(v) if use_udf else signature_col(v_sql, planes)
         rows = df.select(
             F.col(id_alias[0]).alias(id_alias[1]),
             v.alias(f"{id_alias[1]}_v"),
@@ -220,11 +213,9 @@ def cosine_topk_lsh(
         .select(
             "qid",
             "cid",
-            F.round(
-                _dot(F.col("qid_v"), F.col("cid_v"))
-                / (_norm(F.col("qid_v")) * _norm(F.col("cid_v"))),
-                6,
-            ).alias("cosine"),
+            F.expr(f"round({_cosine_sql('qid_v', 'cid_v')}, 6)").alias(
+                "cosine"
+            ),
         )
     )
     w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col("cid").asc())
@@ -256,7 +247,7 @@ def cosine_topk_ivf(
     c = corpus.select(
         F.col(corpus_id).alias("cid"),
         F.col(cluster_col).alias("cluster"),
-        _as_double(F.col(vec_col)).alias("cv"),
+        F.expr(_as_double_sql(vec_col)).alias("cv"),
     )
     centroids = (
         c.select("cluster", F.posexplode("cv").alias("pos", "x"))
@@ -267,16 +258,13 @@ def cosine_topk_ivf(
         .select("cluster", F.transform("pm", lambda s: s["m"]).alias("centroid"))
     )
     q = queries.select(
-        F.col(query_id).alias("qid"), _as_double(F.col(vec_col)).alias("qv")
+        F.col(query_id).alias("qid"), F.expr(_as_double_sql(vec_col)).alias("qv")
     )
     routed = _route_queries(q, centroids, nprobe)
     scored = c.join(F.broadcast(routed), "cluster").select(
         "qid",
         "cid",
-        F.round(
-            _dot(F.col("qv"), F.col("cv")) / (_norm(F.col("qv")) * _norm(F.col("cv"))),
-            6,
-        ).alias("cosine"),
+        F.expr(f"round({_cosine_sql('qv', 'cv')}, 6)").alias("cosine"),
     )
     w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col("cid").asc())
     return (
@@ -295,10 +283,7 @@ def _route_queries(q: DataFrame, centroids: DataFrame, nprobe: int) -> DataFrame
             "qid",
             "qv",
             "cluster",
-            (
-                _dot(F.col("qv"), F.col("centroid"))
-                / (_norm(F.col("qv")) * _norm(F.col("centroid")))
-            ).alias("c_cos"),
+            F.expr(_cosine_sql("qv", "centroid")).alias("c_cos"),
         )
         .withColumn(
             "crnk",
@@ -718,12 +703,9 @@ def ivf_index_stats(spark, path: str) -> DataFrame:
     vectors = spark.read.parquet(f"{path}/vectors")
     cent = spark.read.parquet(f"{path}/centroids")
     v = vectors.select(
-        "cluster", _as_double(F.col(vec_col)).alias("v")
+        "cluster", F.expr(_as_double_sql(vec_col)).alias("v")
     ).join(F.broadcast(cent), "cluster")
-    resid = F.lit(1.0) - (
-        _dot(F.col("v"), F.col("centroid"))
-        / (_norm(F.col("v")) * _norm(F.col("centroid")))
-    )
+    resid = F.expr(f"1.0D - ({_cosine_sql('v', 'centroid')})")
     per = v.groupBy("cluster").agg(
         F.count(F.lit(1)).alias("n_vectors"),
         F.round(F.avg(resid), 6).alias("mean_residual"),
@@ -881,7 +863,7 @@ def _cosine_topk_ivf_index_once(
                 f"table has {vectors.columns}"
             )
     q = queries.select(
-        F.col(query_id).alias("qid"), _as_double(F.col(vec_col)).alias("qv")
+        F.col(query_id).alias("qid"), F.expr(_as_double_sql(vec_col)).alias("qv")
     )
     # routing is centroid-table-sized work; checkpoint so the collect
     # below and the scoring join don't recompute it
@@ -893,16 +875,12 @@ def _cosine_topk_ivf_index_once(
     c = vectors.select(
         F.col(id_col).alias("cid"),
         "cluster",
-        _as_double(F.col(index_vec_col)).alias("cv"),
+        F.expr(_as_double_sql(index_vec_col)).alias("cv"),
     )
     scored = c.join(F.broadcast(routed), "cluster").select(
         "qid",
         "cid",
-        F.round(
-            _dot(F.col("qv"), F.col("cv"))
-            / (_norm(F.col("qv")) * _norm(F.col("cv"))),
-            6,
-        ).alias("cosine"),
+        F.expr(f"round({_cosine_sql('qv', 'cv')}, 6)").alias("cosine"),
     )
     w = Window.partitionBy("qid").orderBy(
         F.col("cosine").desc(), F.col("cid").asc()

@@ -57,22 +57,14 @@ Scale posture (100 TB)
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.sqltext import sql_ident
 from .partitioning import spread_for_expansion
+from .text import ws_tokens_expr
 
 _H2_SEED = 0x9E3779B9  # second-lane salt for key="hash128"
-
-
-def _toks(text_col: str) -> Column:
-    """Whitespace tokens, lowercased — the ONE repo-wide rule
-    (operators/text.py::ws_tokens, any-whitespace split), shared with
-    queries/curation.py and the DuckDB oracle
-    (operators/text.py::ws_tokens_sql)."""
-    from .text import ws_tokens
-
-    return ws_tokens(F.col(text_col))
 
 
 # The construction paths below assemble their projections as
@@ -88,20 +80,18 @@ def _gram_positions(
     docs: DataFrame, *, text_col: str, id_col: str, k: int
 ) -> DataFrame:
     """(id, i, gram): every k-gram start position, 1-based."""
-    from .text import ws_tokens_expr
-
     k = int(k)
     d = (
         spread_for_expansion(docs, id_col)
-        .selectExpr(f"`{id_col}`", f"{ws_tokens_expr(text_col)} AS _toks")
+        .selectExpr(sql_ident(id_col), f"{ws_tokens_expr(text_col)} AS _toks")
         .filter(f"size(_toks) >= {k}")
     )
     return d.selectExpr(
-        f"`{id_col}`",
+        sql_ident(id_col),
         "_toks",
         f"explode(sequence(1, size(_toks) - {k - 1})) AS i",
     ).selectExpr(
-        f"`{id_col}`",
+        sql_ident(id_col),
         "i",
         f"concat_ws(' ', slice(_toks, i, {k})) AS gram",
     )
@@ -127,7 +117,7 @@ def gram_keys(
     if key == "hash128":
         return (
             grams.selectExpr(
-                f"`{id_col}`",
+                sql_ident(id_col),
                 "i",
                 "xxhash64(gram) AS _h1",
                 f"xxhash64({int(_H2_SEED)}, gram) AS _h2",
@@ -166,7 +156,7 @@ def spans_from_flagged(
     """Merge flagged gram starts (id, i) into maximal non-overlapping
     spans. Window over the flagged subset only, partitioned by id."""
     k = int(k)
-    over = f"OVER (PARTITION BY `{id_col}` ORDER BY i)"
+    over = f"OVER (PARTITION BY {sql_ident(id_col)} ORDER BY i)"
     islands = flagged.selectExpr(
         "*",
         f"CASE WHEN i - lag(i) {over} <= {k} THEN 0 ELSE 1 END AS _new",
@@ -178,7 +168,7 @@ def spans_from_flagged(
             F.expr(f"(max(i) + {k - 1}) AS span_end"),
         )
         .selectExpr(
-            f"`{id_col}`",
+            sql_ident(id_col),
             "CAST(span_start AS BIGINT) AS span_start",
             "CAST(span_end AS BIGINT) AS span_end",
             "CAST(span_end - span_start + 1 AS BIGINT) AS span_tokens",
@@ -302,8 +292,6 @@ def _scrub_with_spans(
     """Shared scrub kernel: drop every token covered by a merged span
     (higher-order exists() inside the document row, no token-level
     shuffle); emit the report frame."""
-    from .text import ws_tokens_expr
-
     per_doc = spans.groupBy(id_col).agg(
         F.expr(
             "sort_array(collect_list(struct(span_start, span_end)))"
@@ -313,7 +301,7 @@ def _scrub_with_spans(
         F.expr("sum(span_tokens) AS dup_tokens"),
     )
     d = docs.selectExpr(
-        f"`{id_col}`", f"{ws_tokens_expr(text_col)} AS _toks"
+        sql_ident(id_col), f"{ws_tokens_expr(text_col)} AS _toks"
     ).join(per_doc, id_col, "left")
     spans_arr = (
         "coalesce(_spans, CAST(array() AS"
@@ -328,7 +316,7 @@ def _scrub_with_spans(
         f" s -> NOT ({covered}))"
     )
     return d.selectExpr(
-        f"`{id_col}`",
+        sql_ident(id_col),
         "CAST(size(_toks) AS BIGINT) AS n_tokens",
         "CAST(coalesce(n_spans, 0) AS BIGINT) AS n_spans",
         "CAST(coalesce(dup_tokens, 0) AS BIGINT) AS dup_tokens",

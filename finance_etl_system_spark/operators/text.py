@@ -14,6 +14,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.sqltext import sql_ident
+
 # tiny per-language marker lexicons for the n-gram/stopword heuristic
 LANG_MARKERS: dict[str, list[str]] = {
     "en": ["the", "and", "of", "to", "a"],
@@ -26,26 +28,47 @@ LANG_MARKERS: dict[str, list[str]] = {
 STOPWORDS_EN = ["the", "a", "an", "and", "or", "of", "to", "in", "is", "it"]
 
 
-def normalized(text: Column) -> Column:
+def normalized_expr(col: str) -> str:
     """Lowercase + whitespace collapse — the canonical form used by
-    every downstream hash/dedup step."""
-    return F.trim(F.regexp_replace(F.lower(text), r"\s+", " "))
+    every downstream hash/dedup step — as Spark SQL text."""
+    return f"trim(regexp_replace(lower({sql_ident(col)}), '\\\\s+', ' '))"
 
 
-def ws_tokens(text: Column) -> Column:
-    """THE repo-wide whitespace tokenizer: lowercase, split on runs of
-    ANY whitespace (Java ``\\s`` class — spaces, tabs, newlines), drop
-    empty tokens. Equivalent to ``F.split(normalized(text), " ")``
-    modulo empties, and to ``bpe.segment_words``'s Python twin. Every
-    corpus-token operator (substring/gram analysis, curation,
-    quality, retrieval, streaming mixture) shares this ONE rule — a
-    second rule (the pre-r9 ``' +'`` space-run split) silently
-    disagreed on tab/newline-joined tokens."""
-    return F.filter(F.split(F.lower(text), r"\s+"), lambda x: x != "")
+def normalized(col: str) -> Column:
+    return F.expr(normalized_expr(col))
+
+
+def tokens_expr(col: str) -> str:
+    """Whitespace tokenization of the normalized text (SQL text). An
+    empty or all-whitespace text gives ``['']``, not ``[]``;
+    :func:`ws_tokens_expr` is the empty-dropping rule."""
+    return f"split({normalized_expr(col)}, ' ')"
+
+
+def tokens(col: str) -> Column:
+    return F.expr(tokens_expr(col))
+
+
+def ws_tokens_expr(col: str) -> str:
+    """THE repo-wide whitespace tokenizer as Spark SQL text: lowercase,
+    split on runs of ANY whitespace (Java ``\\s`` class — spaces,
+    tabs, newlines), drop empty tokens. Equivalent to
+    :func:`tokens` modulo empties, and to ``bpe.segment_words``'s
+    Python twin. Every corpus-token operator (substring/gram
+    analysis, curation, quality, retrieval, streaming mixture) shares
+    this ONE rule — a second rule (the pre-r9 ``' +'`` space-run
+    split) silently disagreed on tab/newline-joined tokens. Built as
+    one JVM-parsed string: a Column chain costs ~8 py4j round trips
+    incl. a lambda registration per construction."""
+    return f"filter(split(lower({sql_ident(col)}), '\\\\s+'), x -> x != '')"
+
+
+def ws_tokens(col: str) -> Column:
+    return F.expr(ws_tokens_expr(col))
 
 
 def ws_tokens_sql(col: str = "text") -> str:
-    """DuckDB twin of :func:`ws_tokens` — keep in lockstep.
+    """DuckDB twin of :func:`ws_tokens_expr` — keep in lockstep.
 
     The class is spelled out instead of ``\\s`` because the engines'
     shorthands differ: Java's ``\\s`` is exactly [ \\t\\n\\x0B\\f\\r]
@@ -59,23 +82,7 @@ def ws_tokens_sql(col: str = "text") -> str:
     )
 
 
-def ws_tokens_expr(col: str) -> str:
-    """Spark-SQL-text twin of :func:`ws_tokens` — keep in lockstep
-    with it and with :func:`ws_tokens_sql` (the DuckDB twin). One
-    JVM-parsed string instead of ~8 py4j round trips incl. a lambda
-    registration (r14, guide §1.2 step 2); the parsed tree is the
-    identical filter(split(lower(...))) chain. Parity pinned in
-    tests/test_retrieval_sqltext.py and tests/test_substring_sqltext
-    .py."""
-    return f"filter(split(lower(`{col}`), '\\\\s+'), x -> x != '')"
-
-
-def tokens(text: Column) -> Column:
-    """Whitespace tokenization of the normalized text."""
-    return F.split(normalized(text), " ")
-
-
-def token_count_bpe_ish(text: Column) -> Column:
+def token_count_bpe_ish(text: str) -> Column:
     """BPE-ish token estimate: word-piece regex split. Counts runs of
     letters, digits, or single punctuation — a deterministic stand-in
     for a real BPE vocab (which would be a broadcast lookup)."""
@@ -85,11 +92,11 @@ def token_count_bpe_ish(text: Column) -> Column:
     return F.array_size(pieces)
 
 
-def word_count(text: Column) -> Column:
+def word_count(text: str) -> Column:
     return F.array_size(tokens(text))
 
 
-def punct_ratio(text: Column) -> Column:
+def punct_ratio(text: str) -> Column:
     """Fraction of characters that are punctuation."""
     stripped = F.regexp_replace(text, r"[^\p{L}\p{N} \t\n\x0B\f\r]", "")
     return (F.length(text) - F.length(stripped)) / F.greatest(
@@ -97,21 +104,19 @@ def punct_ratio(text: Column) -> Column:
     )
 
 
-def stopword_ratio(text: Column, stopwords: list[str] | None = None) -> Column:
+def stopword_ratio(text: str, stopwords: list[str] | None = None) -> Column:
     """Fraction of tokens that are stopwords (quality signal)."""
     sw = F.array(*[F.lit(s) for s in (stopwords or STOPWORDS_EN)])
     toks = tokens(text)
-    hits = F.size(F.array_intersect(toks, sw))  # distinct-hit variant
     n_hits = F.aggregate(
         toks,
         F.lit(0),
         lambda acc, t: acc + F.when(F.array_contains(sw, t), 1).otherwise(0),
     )
-    _ = hits  # distinct-hit kept for reference; ratio uses occurrence count
     return n_hits / F.greatest(F.array_size(toks), F.lit(1))
 
 
-def quality_score(text: Column) -> Column:
+def quality_score(text: str) -> Column:
     """Composite [0,1] quality heuristic: length band + low punctuation
     + reasonable mean word length. Deterministic, SQL-expressible."""
     n_chars = F.length(text)
@@ -123,7 +128,7 @@ def quality_score(text: Column) -> Column:
     return (len_ok + punct_ok + mwl_ok) / 3.0
 
 
-def lang_id(text: Column) -> Column:
+def lang_id(text: str) -> Column:
     """Marker-lexicon language ID: count per-language marker tokens,
     take the argmax (ties → first language in a fixed order, no hits →
     'und'). A real system would use fastText; the heuristic keeps the
@@ -146,15 +151,18 @@ def lang_id(text: Column) -> Column:
     return best_lang
 
 
-def fingerprint(text: Column) -> Column:
-    """Content fingerprint: sha2-256 of the normalized text — the
-    exact-dedup key (SURVEY §2.10 X1 first pass)."""
+def fingerprint(text: str) -> Column:
+    """Content fingerprint: sha2-256 of the normalized text — THE
+    exact-dedup key (SURVEY §2.10 X1 first pass). Single definition
+    shared by dedup.exact_dedup and the incremental corpus build
+    (pipeline/corpus.py): the increment ≡ rebuild contract depends on
+    both using the identical fingerprint."""
     return F.sha2(normalized(text), 256)
 
 
 def add_text_features(df: DataFrame, text_col: str = "text") -> DataFrame:
     """One-pass projection of the full feature set."""
-    t = F.col(text_col)
+    t = text_col
     return (
         df.withColumn("char_count", F.length(t))
         .withColumn("word_count", word_count(t))

@@ -114,7 +114,7 @@ def _postings(
     int per token occurrence — the standard IR trade."""
     toks = docs.select(
         F.col(id_col).alias("doc_id"),
-        F.posexplode(token_array(F.col(text_col), analyzed=analyzed)).alias(
+        F.posexplode(token_array(text_col, analyzed=analyzed)).alias(
             "pos", "term"
         ),
     )

@@ -51,9 +51,9 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.sqltext import pin_sql_text_conf
 from ..operators.chunking import chunk_dup_doc_ids, content_defined_chunks
 from ..operators.dedup import (
-    content_fingerprint,
     exact_dedup,
     minhash_dedup_incremental,
     minhash_lsh_match,
@@ -65,7 +65,7 @@ from ..operators.graph import connected_components
 from ..operators.packing import prefix_pack
 from ..operators.quality_classifier import hashed_text_features, logreg_score
 from ..operators.sampling import train_test_split_by_key
-from ..operators.text import tokens
+from ..operators.text import fingerprint, tokens
 
 NGRAM = 5
 MIN_TOKENS = 8
@@ -123,6 +123,7 @@ def build_training_corpus(
     ``classifier_weights`` (a FROZEN vector from
     operators/quality_classifier.logreg_train, len =
     classifier_n_features+1) enables stage 3b."""
+    pin_sql_text_conf(docs.sparkSession)
     # 1. exact dedup on normalized content
     d = exact_dedup(docs, text_col=text_col, id_col=id_col)
 
@@ -149,7 +150,7 @@ def build_training_corpus(
 
     # 3. quality gate: enough tokens, not too repetitive
     d = (
-        d.withColumn("_toks", tokens(F.col(text_col)))
+        d.withColumn("_toks", tokens(text_col))
         .withColumn("n_tokens", F.size("_toks").cast("long"))
         .withColumn(
             "ttr",
@@ -291,12 +292,13 @@ def corpus_increment(
     the next increment does not re-execute this one's lineage.
     """
     spark = batch_docs.sparkSession
+    pin_sql_text_conf(spark)
 
     # 1. exact dedup: drop in-batch later copies, then anything whose
     #    fingerprint history has seen (monotone ids ⇒ history copy is
     #    the rebuild's min-id representative)
     hashed = batch_docs.withColumn(
-        "_fp", content_fingerprint(F.col(text_col))
+        "_fp", fingerprint(text_col)
     )
     w = Window.partitionBy("_fp").orderBy(F.col(id_col).asc())
     in_batch = (
@@ -363,7 +365,7 @@ def corpus_increment(
 
     # 3. quality gate — per-doc, identical to the rebuild
     d = (
-        d.withColumn("_toks", tokens(F.col(text_col)))
+        d.withColumn("_toks", tokens(text_col))
         .withColumn("n_tokens", F.size("_toks").cast("long"))
         .withColumn(
             "ttr",

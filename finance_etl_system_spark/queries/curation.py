@@ -32,11 +32,12 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..functions.columns import half_away_div_sql
 from ..functions.frames import ranked_topk
 from ..operators.dedup import minhash_lsh_match, minhash_signatures
 from ..operators.packing import prefix_pack
 from ..operators.partitioning import spread_for_expansion
-from ..operators.text import ws_tokens, ws_tokens_sql
+from ..operators.text import tokens, ws_tokens, ws_tokens_sql
 
 NGRAM = 5  # decontamination shingle width (words)
 EVAL_MOD = 23  # doc_id % EVAL_MOD == 0 → held-out "benchmark" doc
@@ -45,10 +46,6 @@ CHUNK_LEN = 32  # chunk width (tokens)
 CHUNK_STRIDE = 24  # chunk stride (tokens; overlap = LEN - STRIDE)
 
 _TOKS_SQL = ws_tokens_sql("text")
-
-
-def _toks() -> Column:
-    return ws_tokens(F.col("text"))
 
 
 def _grams(toks: Column) -> Column:
@@ -79,7 +76,7 @@ def q_decontaminate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
         spread_for_expansion(
             load_table(spark, sf_dir, "documents"), "doc_id"
         )
-        .select("doc_id", _toks().alias("toks"))
+        .select("doc_id", ws_tokens("text").alias("toks"))
         .filter(F.size("toks") >= NGRAM)
         # doc-level materialization barrier (r13, guide §3.3): d
         # feeds THREE branches (eval grams, corpus-hit grams,
@@ -172,7 +169,7 @@ def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     prefix sum — no single-partition window)."""
     d = load_table(spark, sf_dir, "documents").select(
         "doc_id",
-        F.size(_toks()).cast("long").alias("n_tokens"),
+        F.size(ws_tokens("text")).cast("long").alias("n_tokens"),
         (((F.col("doc_id") % F.lit(2147483648)) * F.lit(2654435761)) % F.lit(4294967296)).alias("h"),
     )
     packed = prefix_pack(
@@ -210,7 +207,7 @@ def q_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     models. Pure per-row explode; the tail chunk may be short and
     chunks are attributed to their start offset."""
     d = load_table(spark, sf_dir, "documents").select(
-        "doc_id", _toks().alias("toks")
+        "doc_id", ws_tokens("text").alias("toks")
     )
     d = d.filter(F.size("toks") >= 1)
     starts = F.sequence(F.lit(1), F.size("toks"), F.lit(CHUNK_STRIDE))
@@ -379,11 +376,9 @@ def q_importance_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     V) fold out of the same table as one broadcast row. No all-pairs
     anywhere; top-20 is TakeOrderedAndProject.
     """
-    from pyspark.sql import Window
-
     d = load_table(spark, sf_dir, "documents")
     toks = d.select(
-        "doc_id", "lang", F.explode(_toks()).alias("term")
+        "doc_id", "lang", F.explode(ws_tokens("text")).alias("term")
     )
     # ONE corpus pass (r13, guide §3.3): tf carries lang (a doc
     # attribute — adding it to the grouping keys changes nothing) and
@@ -581,22 +576,16 @@ def q_curriculum_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     distributed prefix sum as pack_sequences.
 
     Determinism: per-(doc, term) log-prob contributions round ONCE to
-    integer micro-nat ticks and sum exactly; the order key is the
-    6dp-rounded per-token average re-expressed as a non-negative
-    integer tick key (prefix_pack's integral-key contract), tiebroken
-    by doc_id. Scale: the same two map-combinable shuffles as TF-IDF
+    integer micro-nat ticks and sum exactly; the per-token average is
+    rounded to 6dp in integer ticks (exact half-away-from-zero on both
+    engines); the order key is that tick negated into a non-negative
+    integer key (prefix_pack's integral-key contract), tiebroken by
+    doc_id. Scale: the same two map-combinable shuffles as TF-IDF
     plus the bucketed prefix sum — no single-partition window."""
     d = load_table(spark, sf_dir, "documents")
     toks = d.select(
         "doc_id",
-        F.explode(
-            F.split(
-                F.trim(
-                    F.regexp_replace(F.lower(F.col("text")), r"\s+", " ")
-                ),
-                " ",
-            )
-        ).alias("term"),
+        F.explode(tokens("text")).alias("term"),
     )
     # per-(doc, term) materialization barrier (r13, guide §3.3): tf
     # feeds the vocab aggregate AND the score join; unmaterialized,
@@ -632,14 +621,17 @@ def q_curriculum_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("lp_ticks"),
         )
     )
-    scored = scored.withColumn(
-        "avg_logprob",
-        F.round(
-            F.col("lp_ticks") / F.lit(1_000_000.0) / F.col("n_tokens"), 6
-        ),
-    ).withColumn(
-        "k",
-        F.round(-F.col("avg_logprob") * 1_000_000).cast("long"),
+    # the 6dp average as an exact integer tick (lp_ticks / n_tokens,
+    # half away from zero), divided by 1e6 once
+    scored = scored.selectExpr(
+        "doc_id",
+        "n_tokens",
+        f"{half_away_div_sql('lp_ticks', 'n_tokens')} AS avg_tick",
+    ).selectExpr(
+        "doc_id",
+        "n_tokens",
+        "avg_tick / 1000000.0D AS avg_logprob",
+        "-avg_tick AS k",
     )
     packed = prefix_pack(
         scored,
@@ -669,12 +661,17 @@ scored AS (
   FROM tf JOIN uni USING (term) CROSS JOIN tot
   GROUP BY tf.doc_id
 ),
+ticked AS (
+  SELECT doc_id, n_tokens,
+         sign(lp_ticks) * ((2 * abs(lp_ticks) + n_tokens) // (2 * n_tokens))
+           AS avg_tick
+  FROM scored
+),
 keyed AS (
   SELECT doc_id, n_tokens,
-         ROUND(lp_ticks / 1000000.0 / n_tokens, 6) AS avg_logprob,
-         CAST(ROUND(-ROUND(lp_ticks / 1000000.0 / n_tokens, 6) * 1000000)
-              AS BIGINT) AS k
-  FROM scored
+         CAST(avg_tick AS DOUBLE) / 1000000.0 AS avg_logprob,
+         -avg_tick AS k
+  FROM ticked
 ),
 c AS (
   SELECT doc_id, n_tokens, avg_logprob,

@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..functions.sqltext import sql_ident, sql_literal
 
 SPLIT_DATE = "1997-01-01"
 N_PSI_BUCKETS = 10
@@ -44,7 +45,7 @@ def _populations(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame
     return ref, cur
 
 
-def bisect_bucket(value, edges: list):
+def bisect_bucket(value: str, edges: list):
     """``1 + bisect_left(edges, value)`` as a BALANCED comparison
     tree over literal sorted edges: bucket = 1 + #edges strictly
     below the value — identical semantics to the linear
@@ -53,50 +54,28 @@ def bisect_bucket(value, edges: list):
     per row instead of O(n). With a centile grid (99 edges) the
     linear fold was 1.1 s of drift_ks_refined's 1.3 s at sf0.1 —
     the tree evaluates ≤7 CASE levels per row. A NULL value takes
-    every ``otherwise`` branch and lands in bucket 1, exactly as
-    the fold did. Edges arrive as collected literals (the 1-row
-    edge-frame collect is query-grid-sized — the permissible class);
-    duplicate edge values bisect correctly (first-match-left).
+    every ``ELSE`` branch and lands in bucket 1, exactly as the fold
+    did. Edges arrive as collected literals (the 1-row edge-frame
+    collect is query-grid-sized — the permissible class); duplicate
+    edge values bisect correctly (first-match-left).
 
-    ``value`` may be a Column (legacy) or a plain COLUMN NAME string:
-    the string form emits the tree as ONE SQL text parsed JVM-side
-    (r14, guide §1.2 step 2) — the Column form costs ~3 py4j round
-    trips per edge (~0.5 s of driver time per invocation on the
-    99-edge centile grid). Identical expression tree after parsing:
-    float edges carry the ``D`` (double) literal suffix so they parse
-    to the exact same DoubleType literal ``F.lit`` produced (repr()
-    is shortest-round-trip, Double.parseDouble returns the same
-    bits); int edges parse to int/bigint exactly as ``F.lit`` does."""
-    if isinstance(value, str):
-        col = f"`{value}`"
+    ``value`` is a column name. The tree is ONE SQL text parsed
+    JVM-side: a Column tree costs ~3 py4j round trips per edge (~0.5 s
+    of driver time per invocation on the 99-edge centile grid). Edges
+    become literals of the type ``F.lit`` gives them
+    (``functions.sqltext.sql_literal``)."""
+    col = sql_ident(value)
 
-        def lit_sql(v) -> str:
-            if isinstance(v, bool):  # bool is an int subclass — reject
-                raise TypeError("boolean edges are not bucketable")
-            if isinstance(v, int):
-                return str(v) if -(2**31) <= v < 2**31 else f"{v}L"
-            return f"{v!r}D"
-
-        def rec_sql(lo: int, hi: int) -> str:
-            if lo == hi:
-                return str(lo + 1)
-            mid = (lo + hi) // 2
-            return (
-                f"CASE WHEN {col} > {lit_sql(edges[mid])} THEN "
-                f"{rec_sql(mid + 1, hi)} ELSE {rec_sql(lo, mid)} END"
-            )
-
-        return F.expr(rec_sql(0, len(edges)))
-
-    def rec(lo: int, hi: int):
+    def rec(lo: int, hi: int) -> str:
         if lo == hi:
-            return F.lit(lo + 1)
+            return str(lo + 1)
         mid = (lo + hi) // 2
-        return F.when(value > F.lit(edges[mid]), rec(mid + 1, hi)).otherwise(
-            rec(lo, mid)
+        return (
+            f"CASE WHEN {col} > {sql_literal(edges[mid])} THEN "
+            f"{rec(mid + 1, hi)} ELSE {rec(lo, mid)} END"
         )
 
-    return rec(0, len(edges))
+    return F.expr(rec(0, len(edges)))
 
 
 def _bucket_counts(

@@ -47,7 +47,7 @@ def q_quality_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     toks = d.select(
         "doc_id",
-        F.explode(ws_tokens(F.col("text"))).alias("tok"),
+        F.explode(ws_tokens("text")).alias("tok"),
     )
     per_tok = toks.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("c"))
     return (

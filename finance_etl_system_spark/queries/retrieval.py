@@ -27,8 +27,9 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..functions.frames import ranked_topk
+from ..functions.sqltext import sql_literal
 from ..operators.similarity import cosine_topk_bruteforce
-from ..operators.text import ws_tokens
+from ..operators.text import ws_tokens, ws_tokens_expr
 
 K1 = 1.2
 B = 0.75
@@ -48,42 +49,10 @@ STOPWORDS = (
 ).split()
 
 
-def _s_stem_col(x):
-    """S-stemmer as a column expression over a lambda variable."""
-    return (
-        F.when(
-            x.endswith("ies")
-            & ~x.endswith("eies")
-            & ~x.endswith("aies")
-            & (F.length(x) >= 4),
-            F.concat(F.substring(x, F.lit(1), F.length(x) - 3), F.lit("y")),
-        )
-        .when(
-            x.endswith("es")
-            & ~x.endswith("aes")
-            & ~x.endswith("ees")
-            & ~x.endswith("oes")
-            & (F.length(x) >= 4),
-            F.substring(x, F.lit(1), F.length(x) - 1),
-        )
-        .when(
-            x.endswith("s")
-            & ~x.endswith("us")
-            & ~x.endswith("ss")
-            & (F.length(x) >= 3),
-            F.substring(x, F.lit(1), F.length(x) - 1),
-        )
-        .otherwise(x)
-    )
-
-
 def _s_stem_sql(x: str) -> str:
-    """SQL-text twin of :func:`_s_stem_col` over the expression ``x``
-    — keep in lockstep (parity pinned in tests/test_retrieval_sqltext
-    .py). Same guide §1.2-step-2 motivation as operators/dedup
-    .shingles: the Column form of the when-chain costs ~35 py4j round
-    trips per construction; this parses JVM-side as one string into
-    the identical CASE tree."""
+    """The S-stemmer as Spark SQL text over the expression ``x`` (a
+    lambda variable). One JVM-parsed CASE: the Column when-chain cost
+    ~35 py4j round trips per construction."""
     return (
         "CASE WHEN "
         f"endswith({x}, 'ies') AND NOT endswith({x}, 'eies')"
@@ -112,39 +81,24 @@ def s_stem(t: str) -> str:
     return t
 
 
-def token_array(text_col, *, analyzed: bool = False):
+def token_array(text_col: str, *, analyzed: bool = False):
     """THE tokenizer: lowercase whitespace split, empty tokens
     dropped; with ``analyzed``, stop-word filter + S-stemmer. The
     single definition shared by the scan-path ranker AND the
     persisted index (operators/textindex.py) — any analyzer change
-    lands in both or the index≠scan parity oracle breaks.
-
-    Accepts a Column (legacy, the textindex path) or a plain COLUMN
-    NAME string; the string form assembles the whole chain as ONE
-    JVM-parsed SQL string (r14, guide §1.2 step 2 — the Column form
-    costs ~45 py4j round trips incl. two lambda registrations and the
-    stemmer when-chain, measured 44/164 ms plain/analyzed per
-    construction). Identical expression tree after parsing; parity
-    pinned in tests/test_retrieval_sqltext.py."""
-    if isinstance(text_col, str):
-        return F.expr(_token_array_sql(text_col, analyzed=analyzed))
-    arr = ws_tokens(text_col)
-    if analyzed:
-        arr = F.transform(
-            F.filter(arr, lambda x: ~x.isin(*STOPWORDS)), _s_stem_col
-        )
-    return arr
+    lands in both or the index≠scan parity oracle breaks."""
+    return F.expr(_token_array_sql(text_col, analyzed=analyzed))
 
 
 def _token_array_sql(col: str, *, analyzed: bool = False) -> str:
-    """SQL-text twin of :func:`token_array` — keep in lockstep with
-    it; the tokenizer half is operators/text.ws_tokens_expr (the ONE
-    repo-wide rule)."""
-    from ..operators.text import ws_tokens_expr
-
+    """:func:`token_array` as Spark SQL text; the tokenizer half is
+    operators/text.ws_tokens_expr (the ONE repo-wide rule). One
+    JVM-parsed string: the Column chain cost ~45 py4j round trips
+    incl. two lambda registrations and the stemmer when-chain
+    (44/164 ms plain/analyzed per construction)."""
     arr = ws_tokens_expr(col)
     if analyzed:
-        stop = ", ".join(f"'{w}'" for w in STOPWORDS)
+        stop = ", ".join(sql_literal(w) for w in STOPWORDS)
         arr = (
             f"transform(filter({arr}, x -> NOT (x IN ({stop}))), "
             f"x -> {_s_stem_sql('x')})"
@@ -198,14 +152,13 @@ def _per_doc_tf(
     step 2) — the Column form measured 96/206 ms plain/analyzed of
     pure driver time per construction; the parsed tree is identical
     (parity pinned in tests/test_retrieval_sqltext.py). Terms are
-    module constants; the assert keeps a quote from ever reaching the
-    f-string."""
-    assert all(t.isalnum() for t in terms), terms
+    quoted by ``sql_literal``."""
     base = d.selectExpr(
         "doc_id", f"{_token_array_sql('text', analyzed=analyzed)} AS _toks"
     )
     tf_items = ", ".join(
-        f"CAST(size(_toks) - size(array_remove(_toks, '{t}')) AS BIGINT)"
+        f"CAST(size(_toks) - size(array_remove(_toks, {sql_literal(t)}))"
+        " AS BIGINT)"
         for t in terms
     )
     return base.selectExpr(
@@ -581,7 +534,7 @@ def q_search_phrase(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     w1, w2 = PHRASE.split(" ")
     d = load_table(spark, sf_dir, "documents")
-    toks = ws_tokens(F.col("text"))
+    toks = ws_tokens("text")
     with_toks = d.select("doc_id", toks.alias("toks"))
     # count adjacent (w1, w2) pairs WITHOUT materializing bigram
     # strings: zip the array against its own 1-shift and sum boolean

@@ -15,7 +15,8 @@ from pyspark.sql import functions as F
 from ..catalog import load_table
 from ..functions import money_sum
 from ..operators.sampling import budget_take, hash_sample, stratified_hash_sample
-from .curation import _TOKS_SQL, _toks
+from ..operators.text import ws_tokens
+from .curation import _TOKS_SQL
 
 
 def q_hash_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -104,7 +105,7 @@ def q_mixture_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents").select(
         "doc_id",
         "source",
-        F.size(_toks()).cast("long").alias("n_tokens"),
+        F.size(ws_tokens("text")).cast("long").alias("n_tokens"),
         (
             ((F.col("doc_id") % F.lit(2147483648)) * F.lit(2654435761))
             % F.lit(4294967296)
@@ -161,7 +162,7 @@ def q_quality_budget_take(spark: SparkSession, sf_dir: str) -> DataFrame:
     sum, same oracle discipline (all-integer key, identical on both
     engines)."""
     d = load_table(spark, sf_dir, "documents")
-    toks = _toks()
+    toks = ws_tokens("text")
     n_tokens = F.size(toks).cast("long")
     ttr_grid = F.round(
         F.size(F.array_distinct(toks))
@@ -232,7 +233,7 @@ def q_mixture_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
     dependence. Scale: ONE map-combinable groupBy(source) plus
     |sources|-row arithmetic."""
     d = load_table(spark, sf_dir, "documents").select(
-        "source", F.size(_toks()).cast("long").alias("n_tokens")
+        "source", F.size(ws_tokens("text")).cast("long").alias("n_tokens")
     )
     per_src = d.groupBy("source").agg(
         F.sum("n_tokens").alias("n_tokens")

@@ -17,11 +17,11 @@ from ..operators.text import (
     STOPWORDS_EN,
     fingerprint,
     lang_id,
-    normalized,
     punct_ratio,
     quality_score,
     stopword_ratio,
     token_count_bpe_ish,
+    tokens,
     word_count,
 )
 
@@ -30,15 +30,14 @@ def q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Char/word/BPE-ish token counts + punctuation and stopword
     ratios, per document."""
     d = load_table(spark, sf_dir, "documents")
-    t = F.col("text")
     return d.select(
         "doc_id",
         "lang",
-        F.length(t).alias("char_count"),
-        word_count(t).alias("word_count"),
-        token_count_bpe_ish(t).alias("token_count"),
-        F.round(punct_ratio(t), 6).alias("punct_ratio"),
-        F.round(stopword_ratio(t), 6).alias("stopword_ratio"),
+        F.length("text").alias("char_count"),
+        word_count("text").alias("word_count"),
+        token_count_bpe_ish("text").alias("token_count"),
+        F.round(punct_ratio("text"), 6).alias("punct_ratio"),
+        F.round(stopword_ratio("text"), 6).alias("stopword_ratio"),
     )
 
 
@@ -68,12 +67,11 @@ FROM tok
 def q_text_quality_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Composite quality score + marker-lexicon language ID."""
     d = load_table(spark, sf_dir, "documents")
-    t = F.col("text")
     return d.select(
         "doc_id",
         "lang",
-        F.round(quality_score(t), 6).alias("quality_score"),
-        lang_id(t).alias("lang_pred"),
+        F.round(quality_score("text"), 6).alias("quality_score"),
+        lang_id("text").alias("lang_pred"),
     )
 
 
@@ -131,7 +129,7 @@ def q_text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """sha2-256 content fingerprint of the normalized text + dup count
     per fingerprint (exact-dedup prep)."""
     d = load_table(spark, sf_dir, "documents")
-    fp = d.select("doc_id", fingerprint(F.col("text")).alias("fingerprint"))
+    fp = d.select("doc_id", fingerprint("text").alias("fingerprint"))
     counts = fp.groupBy("fingerprint").agg(F.count(F.lit(1)).alias("n_docs"))
     return (
         fp.join(counts, "fingerprint")
@@ -167,7 +165,7 @@ def q_text_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_docs = d.count()
     toks = d.select(
         "doc_id",
-        F.explode(F.split(normalized(F.col("text")), " ")).alias("term"),
+        F.explode(tokens("text")).alias("term"),
     )
     # tf feeds BOTH the df aggregation and the score join. The
     # hoped-for ReusedExchange never fires (verified r13: 0 in the
@@ -267,10 +265,8 @@ def q_token_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     count-distinct on doc_id is the one true per-token state.
     """
     d = load_table(spark, sf_dir, "documents")
-    from ..operators.text import tokens
-
     return (
-        d.select("doc_id", F.explode(tokens(F.col("text"))).alias("token"))
+        d.select("doc_id", F.explode(tokens("text")).alias("token"))
         .filter(F.col("token") != "")
         .groupBy("token")
         .agg(
@@ -307,10 +303,9 @@ def q_heavy_hitters_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     n/(k+1), count_lo never above truth, error ≤ n/(k+1)) are pinned
     in tests/test_sketches.py against exact ground truth."""
     from ..operators.sketches import heavy_hitters
-    from ..operators.text import tokens
 
     d = load_table(spark, sf_dir, "documents")
-    toks = d.select(F.explode(tokens(F.col("text"))).alias("token")).filter(
+    toks = d.select(F.explode(tokens("text")).alias("token")).filter(
         F.col("token") != ""
     )
     return heavy_hitters(toks, "token", k=25)
@@ -372,7 +367,7 @@ def q_bigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     d = load_table(spark, sf_dir, "documents")
-    toks = F.split(normalized(F.col("text")), " ")
+    toks = tokens("text")
     tail_len = F.greatest(F.size(toks) - 1, F.lit(0))
     bigrams = F.zip_with(
         F.slice(toks, 1, tail_len),
@@ -398,7 +393,7 @@ def q_bigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum("cb").alias("cctx"))
     )
     uni = (
-        d.select(F.explode(F.split(normalized(F.col("text")), " ")).alias("term"))
+        d.select(F.explode(tokens("text")).alias("term"))
         .groupBy("term")
         .agg(F.count(F.lit(1)).alias("ct"))
     )
@@ -505,7 +500,7 @@ def q_unigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     toks = d.select(
         "doc_id",
-        F.explode(F.split(normalized(F.col("text")), " ")).alias("term"),
+        F.explode(tokens("text")).alias("term"),
     )
     tf = toks.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     # vocab-sized barrier (r13, guide §3.3): uni feeds the score join
@@ -581,7 +576,7 @@ def q_bpe_merge_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load_table(spark, sf_dir, "documents")
     toks = d.select(
-        F.explode(F.split(normalized(F.col("text")), " ")).alias("term")
+        F.explode(tokens("text")).alias("term")
     )
     wf = (
         toks.filter(F.length("term") >= 2)
@@ -679,12 +674,8 @@ def q_source_scorecard(spark: SparkSession, sf_dir: str) -> DataFrame:
     scorecard is |sources|-rows, so the distinct expand is bounded by
     the biggest single source, and approx_count_distinct is the
     documented swap at extreme scale)."""
-    from ..operators.dedup import content_fingerprint
-
     d = load_table(spark, sf_dir, "documents")
-    from ..operators.text import tokens as _tokens
-
-    toks = _tokens(F.col("text"))  # THE canonical tokenizer
+    toks = tokens("text")  # THE canonical tokenizer
     n_tok = F.size(toks).cast("long")
     ttr = F.size(F.array_distinct(toks)) / F.greatest(n_tok, F.lit(1))
     base = d.select(
@@ -692,7 +683,7 @@ def q_source_scorecard(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_tok.alias("n_tok"),
         F.round(ttr, 6).alias("ttr"),
         (F.col("lang") == "en").cast("int").alias("is_en"),
-        content_fingerprint(F.col("text")).alias("fp"),
+        fingerprint("text").alias("fp"),
     )
     return (
         base.groupBy("source")

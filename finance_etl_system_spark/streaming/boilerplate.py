@@ -41,6 +41,7 @@ from pyspark.sql import functions as F
 
 from ..functions.confs import partition_overwrite
 from ..functions.errors import error_condition
+from ..functions.sqltext import pin_sql_text_conf
 from ..operators.substring import gram_keys, spans_from_flagged
 
 _COUNT_SCHEMA = "_h1 bigint, _h2 bigint, n bigint, batch_id bigint"
@@ -87,6 +88,7 @@ def boilerplate_increment_batch(
     """One micro-batch through the streaming boilerplate detector
     (see module docstring). Idempotent under same-batch_id retry."""
     spark = batch_df.sparkSession
+    pin_sql_text_conf(spark)
     if batch_df.isEmpty():
         return
     grams, key_cols = gram_keys(batch_df, k=k, key="hash128")

@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 from ..operators.dedup import minhash_dedup_incremental
 from ..functions.errors import error_condition
 from ..functions.confs import partition_overwrite
+from ..functions.sqltext import pin_sql_text_conf
 
 _SIG_SCHEMA = "id bigint, sig array<bigint>"
 
@@ -82,6 +83,7 @@ def dedup_increment_batch(
     """One micro-batch through the incremental dedup (see module
     docstring). Idempotent under same-batch_id retry."""
     spark = batch_df.sparkSession
+    pin_sql_text_conf(spark)
     if batch_df.isEmpty():
         return
     history = _load_state(spark, state_dir).localCheckpoint(eager=True)

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from ..operators.textindex import _postings
 from ..functions.confs import partition_overwrite
+from ..functions.sqltext import pin_sql_text_conf
 
 
 def index_batch(
@@ -43,6 +44,7 @@ def index_batch(
         batch_df, text_col=text_col, id_col=id_col, analyzed=analyzed
     )
     spark = batch_df.sparkSession
+    pin_sql_text_conf(spark)
     with partition_overwrite(spark, "dynamic"):
         (
             post.withColumn("batch_id", F.lit(batch_id))

@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 from ..operators.sampling import budget_take
 from ..functions.errors import error_condition
 from ..functions.confs import partition_overwrite
+from ..functions.sqltext import pin_sql_text_conf
 from ..operators.text import ws_tokens
 
 def _load_kept(
@@ -136,14 +137,11 @@ def stream_mixture_budget(
     docs = reader.json(source_dir)
 
     def fb(batch_df: DataFrame, batch_id: int) -> None:
+        pin_sql_text_conf(batch_df.sparkSession)
         prepared = batch_df.select(
             "doc_id",
             group_col,
-            F.size(
-                ws_tokens(F.col("text"))
-            )
-            .cast("long")
-            .alias("w"),
+            F.size(ws_tokens("text")).cast("long").alias("w"),
             # pmod keeps the key in [0, 2^32) even for negative
             # doc_ids (Spark's % takes the dividend's sign) — the
             # budget_take order-key contract

@@ -59,7 +59,7 @@ def test_corpus_pipeline_invariants(spark):
     # no two survivors share identical normalized text
     n_docs = surviving.count()
     n_distinct = (
-        surviving.select(normalized(F.col("text")).alias("t")).distinct().count()
+        surviving.select(normalized("text").alias("t")).distinct().count()
     )
     assert n_docs == n_distinct == len(ids)
 
@@ -74,10 +74,10 @@ def test_corpus_pipeline_invariants(spark):
     from finance_etl_system_spark.operators.dedup import shingles
 
     surv_grams = surviving.select(
-        F.explode(shingles(F.col("text"), NGRAM)).alias("g")
+        F.explode(shingles("text", NGRAM)).alias("g")
     ).distinct()
     eval_grams = eval_slice.select(
-        F.explode(shingles(F.col("text"), NGRAM)).alias("g")
+        F.explode(shingles("text", NGRAM)).alias("g")
     ).distinct()
     assert surv_grams.join(eval_grams, "g").count() == 0
 

@@ -45,7 +45,7 @@ def test_pack_matches_naive_cumsum_and_is_bucket_invariant(spark):
     # bucket count is a parallelism knob, not a semantics knob
     base = load_table(spark, SF_SMOKE, "documents").select(
         "doc_id",
-        F.size(ws_tokens(F.col("text")))
+        F.size(ws_tokens("text"))
         .cast("long")
         .alias("n_tokens"),
         (((F.col("doc_id") % F.lit(2147483648)) * F.lit(2654435761)) % F.lit(4294967296)).alias("h"),

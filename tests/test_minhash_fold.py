@@ -32,7 +32,7 @@ def _reference_signatures(df, *, n=3, num_perm=NUM_PERM, seed=42):
     a, b = _perm_params(num_perm, seed)
     sh = df.select(
         F.col("doc_id").alias("id"),
-        shingles(F.col("text"), n).alias("sh"),
+        shingles("text", n).alias("sh"),
     )
     sh = sh.withColumn(
         "h", F.transform("sh", lambda s: F.pmod(F.xxhash64(s), F.lit(_MERSENNE)))

@@ -18,12 +18,8 @@ from finance_etl_system_spark.operators.quantize import (
     cosine_topk_sq8,
     quantize_int8,
 )
-from finance_etl_system_spark.operators.similarity import (
-    _as_double,
-    _dot,
-    _norm,
-)
 
+from tests.column_refs import _as_double, _dot, _norm
 from tests.conftest import SF_SMOKE
 
 
@@ -54,21 +50,27 @@ def test_quantize_int8_sql_matches_columns(spark):
 
 
 def test_sq8_exact_rerank_matches_columns(spark):
-    """End-to-end SQ8 search vs a reference whose exact-rerank block
-    is the pre-r14 Column formulation (the coarse pandas-UDF pass is
-    shared code, so any divergence isolates to the converted
-    projection)."""
+    """SQ8 search vs a reference whose exact-rerank block is the
+    pre-r14 Column formulation, over the WHOLE rerank-50 survivor set
+    (the coarse pandas-UDF pass is shared code, so any divergence
+    isolates to the converted projection). With k == rerank every
+    survivor comes back, so the survivor set is read off that call;
+    a divergence on survivors ranked 11-50 fails here even when it
+    would not change the top 10."""
     from pyspark.sql import Window
 
     e = load_table(spark, SF_SMOKE, "embeddings")
     queries = e.filter(F.col("vec_id") < 4).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    new = cosine_topk_sq8(queries, e, k=10, rerank=50)
+    rerank = 50
+    new_all = cosine_topk_sq8(queries, e, k=rerank, rerank=rerank)
+    new = cosine_topk_sq8(queries, e, k=10, rerank=rerank)
 
-    coarse = cosine_topk_sq8(queries, e, k=10, rerank=50).select(
-        "qid", "cid", "coarse"
-    )
+    coarse = new_all.select("qid", "cid", "coarse")
+    per_q = {r["qid"]: r["n"] for r in coarse.groupBy("qid").agg(
+        F.count(F.lit(1)).alias("n")).collect()}
+    assert per_q == {q: rerank for q in range(4)}, per_q
     qv = queries.select(
         F.col("query_id").alias("qid"),
         _as_double(F.col("embedding")).alias("qv"),
@@ -96,9 +98,8 @@ def test_sq8_exact_rerank_matches_columns(spark):
     w = Window.partitionBy("qid").orderBy(
         F.col("cosine").desc(), F.col("cid").asc()
     )
-    ref = (
-        ref.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= 10)
-        .select("qid", "rnk", "cid", "cosine", "coarse")
+    ref = ref.withColumn("rnk", F.row_number().over(w)).select(
+        "qid", "rnk", "cid", "cosine", "coarse"
     )
-    _frames_equal(new, ref)
+    _frames_equal(new_all, ref)
+    _frames_equal(new, ref.filter(F.col("rnk") <= 10))

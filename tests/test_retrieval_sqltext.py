@@ -16,12 +16,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 
 from finance_etl_system_spark.catalog import load_table
-from finance_etl_system_spark.operators.similarity import (
-    _as_double,
-    _dot,
-    _norm,
-    cosine_topk_bruteforce,
-)
+from finance_etl_system_spark.operators.similarity import cosine_topk_bruteforce
 from finance_etl_system_spark.queries.retrieval import (
     B,
     K1,
@@ -29,12 +24,11 @@ from finance_etl_system_spark.queries.retrieval import (
     STOPWORDS,
     _bm25_scored,
     _per_doc_tf,
-    _s_stem_col,
     analyze_terms,
     token_array,
 )
-from finance_etl_system_spark.operators.text import ws_tokens
 
+from tests.column_refs import _as_double, _dot, _norm, _s_stem_col, ws_tokens
 from tests.conftest import SF_SMOKE
 
 

@@ -95,7 +95,7 @@ def _docs_with_weights(spark):
     return d.select(
         "doc_id",
         "source",
-        F.size(ws_tokens(F.col("text")))
+        F.size(ws_tokens("text"))
         .cast("long")
         .alias("w"),
         (
@@ -224,7 +224,7 @@ def test_quality_budget_take_is_best_first(spark):
         for r in q_quality_budget_take(spark, SF_SMOKE).collect()
     }
     d = load_table(spark, SF_SMOKE, "documents")
-    toks = ws_tokens(F.col("text"))
+    toks = ws_tokens("text")
     n = F.size(toks).cast("long")
     grid = F.round(
         F.size(F.array_distinct(toks)) / F.greatest(n, F.lit(1)) * 1000000

@@ -58,7 +58,7 @@ def test_mg_on_synthetic_skewed_stream(spark):
 
 def test_mg_on_corpus_tokens_vs_exact(spark):
     d = load_table(spark, SF_SMOKE, "documents")
-    toks = d.select(F.explode(tokens(F.col("text"))).alias("token")).filter(
+    toks = d.select(F.explode(tokens("text")).alias("token")).filter(
         F.col("token") != ""
     )
     truth = {

@@ -16,7 +16,6 @@ from finance_etl_system_spark.catalog import load_table
 from finance_etl_system_spark.operators.substring import (
     _H2_SEED,
     _scrub_with_spans,
-    _toks,
     gram_keys,
     repeated_spans,
     scrub_contamination,
@@ -26,6 +25,7 @@ from finance_etl_system_spark.operators.partitioning import (
     spread_for_expansion,
 )
 
+from tests.column_refs import _toks
 from tests.conftest import SF_SMOKE
 
 K = 8

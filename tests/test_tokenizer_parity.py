@@ -69,7 +69,7 @@ def test_spark_duckdb_and_python_tokenizers_agree(spark):
     got_spark = {
         r["id"]: list(r["toks"])
         for r in df.select(
-            "id", ws_tokens(F.col("text")).alias("toks")
+            "id", ws_tokens("text").alias("toks")
         ).collect()
     }
     con = duckdb.connect()

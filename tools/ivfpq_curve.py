@@ -106,14 +106,14 @@ def curve(spark, corpus, label: str):
         # pays); the batch union is larger but amortized across the
         # batch — re-derive routing with the probe's own helper
         from finance_etl_system_spark.operators.similarity import (
-            _as_double,
+            _as_double_sql,
             _route_queries,
         )
 
         cents = spark.read.parquet(f"{path}/centroids")
         q = queries.select(
             F.col("query_id").alias("qid"),
-            _as_double(F.col("embedding")).alias("qv"),
+            F.expr(_as_double_sql("embedding")).alias("qv"),
         )
         per_q: dict[int, int] = {}
         for r in _route_queries(q, cents, nprobe).select(
