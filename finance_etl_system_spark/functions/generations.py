@@ -66,6 +66,11 @@ def hadoop_fs(spark: SparkSession, path: str):
     return p.getFileSystem(conf), jvm.org.apache.hadoop.fs.Path
 
 
+def path_exists(spark: SparkSession, path: str) -> bool:
+    fs, HPath = hadoop_fs(spark, path)
+    return fs.exists(HPath(path))
+
+
 def list_names(spark: SparkSession, dir_path: str) -> list[str]:
     """Child names of ``dir_path`` ([] if it does not exist)."""
     fs, HPath = hadoop_fs(spark, dir_path)

@@ -103,16 +103,6 @@ def _subspaces(x: np.ndarray, m: int) -> np.ndarray:
     return x.reshape(n, m, d // m)
 
 
-def _prep(vmat: np.ndarray, pdf, residual_centroids: np.ndarray | None):
-    """Unit-normalize; in residual mode (IVF-PQ) subtract the row's
-    assigned (normalized) centroid — PQ then codes the residual, which
-    is what keeps codes informative inside a coarse cluster."""
-    x = _normalize(vmat)
-    if residual_centroids is not None:
-        x = x - residual_centroids[pdf["_cl"].to_numpy()]
-    return x
-
-
 def _pq_stats_fn(
     codebooks: np.ndarray, residual_centroids: np.ndarray | None = None
 ):

@@ -11,7 +11,7 @@ whose shuffle keys are 64-hex strings (uniform, no skew).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from ..functions.sqltext import sql_ident
@@ -158,18 +158,3 @@ def fingerprint(text: str) -> Column:
     (pipeline/corpus.py): the increment ≡ rebuild contract depends on
     both using the identical fingerprint."""
     return F.sha2(normalized(text), 256)
-
-
-def add_text_features(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """One-pass projection of the full feature set."""
-    t = text_col
-    return (
-        df.withColumn("char_count", F.length(t))
-        .withColumn("word_count", word_count(t))
-        .withColumn("token_count", token_count_bpe_ish(t))
-        .withColumn("punct_ratio", F.round(punct_ratio(t), 6))
-        .withColumn("stopword_ratio", F.round(stopword_ratio(t), 6))
-        .withColumn("quality_score", F.round(quality_score(t), 6))
-        .withColumn("lang_pred", lang_id(t))
-        .withColumn("fingerprint", fingerprint(t))
-    )

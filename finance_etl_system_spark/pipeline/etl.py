@@ -8,31 +8,52 @@ Mongo append + ES upsert -> watermark upsert. Its anti-patterns
 append-mode duplicates, truncated-history windows at the watermark
 boundary.
 
-This module replaces that with:
-- ONE partitioned job over all symbols (no driver loop)
-- watermark state as a tiny parquet table, predicate pushed to the scan
-- lookback-aware incremental recompute (windows see the history they
-  need — fixes the reference's truncated SMA-200 quirk, etl_job.py:289)
-- idempotent keyed overwrite via dynamic partition overwrite (the
-  engine-level equivalent of ES ``es.mapping.id`` upsert,
-  etl_job.py:142-143,457-459; Mongo append-mode duplication at
-  etl_job.py:391 is deliberately NOT reproduced)
+This module replaces that with ONE partitioned job over all symbols (no
+driver loop) whose incremental batch costs O(new rows + lookback), like
+the reference's ES doc-id upsert (etl_job.py:142-143,454-460), not
+O(affected history):
+
+- The slice. New rows are those past their symbol's watermark. With
+  ``d0`` a symbol's earliest new ``trading_date``, the batch is
+  recomputed together with that symbol's stored rows from ``d0`` on and
+  the ``LOOKBACK_ROWS`` stored rows before ``d0`` (a partition-pruned
+  read of the affected symbols), under one symbol partitioning that
+  serves the dedup window and every indicator window. Windows therefore
+  see the history they need (no truncated SMA-200, etl_job.py:289), and
+  OBV, the one unbounded window, is re-anchored by the stored obv of the
+  slice's first row.
+- Append vs rewrite. When ``d0`` is after the symbol's newest stored
+  date (the daily case) the new rows are appended as new files. When
+  the batch collides with stored dates (a cross-day correction, or a
+  replay after a crash between the table and watermark writes) only
+  that symbol's partition is rewritten copy-on-write: stored rows before
+  ``d0`` kept, the rest replaced. Mongo's append-mode duplication
+  (etl_job.py:391) is deliberately NOT reproduced.
+- The state swap. Watermarks are a tiny parquet table that stays in the
+  JVM: joined to the batch, never collected into a Python list. Each
+  write goes to a staging directory that is then swapped in, and a
+  read tells "no state yet" (path missing) from "state unreadable"
+  (raises).
+
+``compact_partitions`` folds the files the appends add.
 """
 
 from __future__ import annotations
 
 import datetime as dt
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .indicators import technical_indicators
 from ..functions.confs import partition_overwrite
+from ..functions.generations import hadoop_fs, path_exists
 
-# Max indicator window — incremental recompute must re-read this many
-# trailing rows per symbol so SMA-200/OBV see full history
-# (reference recomputes over new rows only: the truncated-window quirk).
+# Stored rows before a symbol's d0 that the incremental recompute
+# re-reads: the widest bounded window (SMA-200) needs 199 of them; OBV is
+# re-anchored instead (reference recomputes over new rows only: the
+# truncated-window quirk).
 LOOKBACK_ROWS = 200
 
 RAW_SCHEMA = T.StructType(
@@ -139,57 +160,97 @@ def compute_processed(clean: DataFrame, *, semantics: str = "reference") -> Data
 
 # --- watermark state (reference etl_watermarks, etl_job.py:99-120) ---
 
-
-def read_watermarks(spark: SparkSession, state_dir: str) -> dict[str, dt.datetime]:
-    """Per-symbol high-water mark; empty on first run."""
-    try:
-        rows = spark.read.parquet(f"{state_dir}/watermarks.parquet").collect()
-    except Exception:  # noqa: BLE001 — missing state dir on first run
-        return {}
-    return {r["symbol"]: r["last_processed_ts"] for r in rows}
+MARKS_SCHEMA = "symbol STRING, last_processed_ts TIMESTAMP, updated_at TIMESTAMP"
 
 
-def write_watermarks(spark: SparkSession, state_dir: str, processed: DataFrame) -> None:
-    """Advance each symbol's mark to max(event_time) after success
-    (reference etl_job.py:494-495,550-555). Marks of symbols untouched
-    by this batch are preserved (merge, not replace)."""
-    new_marks = processed.groupBy("symbol").agg(
-        F.max("event_time").alias("last_processed_ts")
+def _marks_path(state_dir: str) -> str:
+    return f"{state_dir}/watermarks.parquet"
+
+
+def _read_marks(spark: SparkSession, path: str) -> DataFrame | None:
+    """The live marks as a lazy frame, or None when none were ever written.
+
+    A swap that stopped between its delete and its rename left a complete
+    staging copy and no live one; it is finished here. Anything present
+    but unreadable raises at the frame's first action."""
+    fs, HPath = hadoop_fs(spark, path)
+    if not fs.exists(HPath(path)):
+        if not fs.exists(HPath(f"{path}.staging/_SUCCESS")):
+            return None
+        _promote(fs, HPath, path)
+    return spark.read.schema(MARKS_SCHEMA).parquet(path).select(
+        "symbol", "last_processed_ts"
     )
-    path = f"{state_dir}/watermarks.parquet"
-    try:
-        old = (
-            spark.read.parquet(path)
-            .select("symbol", "last_processed_ts")
-            .localCheckpoint(eager=True)  # about to overwrite this path
-        )
-        merged = (
-            old.unionByName(new_marks)
-            .groupBy("symbol")
-            .agg(F.max("last_processed_ts").alias("last_processed_ts"))
-        )
-    except Exception:  # noqa: BLE001 — first run
-        merged = new_marks
-    merged.withColumn("updated_at", F.current_timestamp()).write.mode(
-        "overwrite"
-    ).parquet(path)
 
 
-def write_processed_idempotent(processed: DataFrame, out_dir: str) -> None:
-    """Idempotent keyed overwrite (SURVEY §4 upsert pattern).
+def _promote(fs, HPath, path: str) -> None:
+    if not fs.rename(HPath(f"{path}.staging"), HPath(path)):
+        raise IOError(f"could not promote {path}.staging to {path}")
 
-    Dynamic partition overwrite by symbol: re-running a batch replaces
+
+def read_watermarks(
+    spark: SparkSession, state_dir: str, *, as_frame: bool = False
+) -> dict[str, dt.datetime] | DataFrame | None:
+    """Per-symbol high-water mark as a dict, or with ``as_frame`` as the
+    lazy (symbol, last_processed_ts) frame that stays in the JVM.
+
+    Empty ({} or None) only when no marks were ever written; a mark table
+    that exists but cannot be read raises (the dict form here, the frame
+    form at its first action) instead of passing for a first run."""
+    marks = _read_marks(spark, _marks_path(state_dir))
+    if as_frame:
+        return marks
+    return {} if marks is None else dict(marks.collect())
+
+
+def write_watermarks(spark: SparkSession, state_dir: str, rows: DataFrame) -> None:
+    """Advance each symbol's mark to max(old mark, max ``event_time`` of
+    ``rows``) after success (reference etl_job.py:494-495,550-555). Marks
+    of symbols absent from ``rows`` are kept (merge, not replace).
+
+    The merged table is written as one file to a staging directory and
+    swapped in (delete live, rename staging), so no job reads the files it
+    overwrites and a crash leaves the old or the new marks whole."""
+    path = _marks_path(state_dir)
+    marks = rows.select("symbol", F.col("event_time").alias("last_processed_ts"))
+    old = _read_marks(spark, path)
+    if old is not None:
+        marks = old.unionByName(marks)
+    (
+        marks.groupBy("symbol")
+        .agg(F.max("last_processed_ts").alias("last_processed_ts"))
+        .withColumn("updated_at", F.current_timestamp())
+        .coalesce(1)
+        .write.mode("overwrite")
+        .parquet(f"{path}.staging")
+    )
+    fs, HPath = hadoop_fs(spark, path)
+    fs.delete(HPath(path), True)
+    _promote(fs, HPath, path)
+
+
+def write_processed_idempotent(
+    processed: DataFrame, out_dir: str, *, append: bool = False
+) -> None:
+    """Write ``processed`` into the symbol-partitioned table, one sorted
+    file per touched partition (SURVEY §4 upsert pattern).
+
+    By default a dynamic partition overwrite: re-running a batch replaces
     exactly the symbol partitions it touches — replay-safe like the
-    reference's ES doc-id upsert, without Mongo's append duplicates.
-    """
+    reference's ES doc-id upsert, without Mongo's append duplicates. With
+    ``append`` the rows land as new files beside the stored ones; the
+    caller guarantees that none of their (symbol, trading_date) keys is
+    stored yet."""
+    writer = (
+        processed.repartition("symbol")
+        .sortWithinPartitions("symbol", "trading_date")
+        .write.partitionBy("symbol")
+    )
+    if append:
+        writer.mode("append").parquet(out_dir)
+        return
     with partition_overwrite(processed.sparkSession, "dynamic"):
-        (
-            processed.repartition("symbol")
-            .sortWithinPartitions("symbol", "trading_date")
-            .write.mode("overwrite")
-            .partitionBy("symbol")
-            .parquet(out_dir)
-        )
+        writer.mode("overwrite").parquet(out_dir)
 
 
 def compact_partitions(
@@ -201,8 +262,9 @@ def compact_partitions(
 ) -> int:
     """Small-files compaction for append-mode sinks.
 
-    Streaming foreachBatch appends one file per partition per batch —
-    at 100 TB that's the classic small-files death spiral. Rewrite each
+    Streaming foreachBatch and ``incremental_etl``'s daily appends add
+    one file per touched partition per batch — at 100 TB that's the
+    classic small-files death spiral. Rewrite each
     partition as one sorted file set (sortWithinPartitions restores
     min/max pruning). Returns the file count after compaction.
 
@@ -222,6 +284,58 @@ def compact_partitions(
     return len(glob.glob(f"{table_dir}/**/*.parquet", recursive=True))
 
 
+def _recompute_slice(
+    batch: DataFrame, stored: DataFrame, *, semantics: str
+) -> DataFrame:
+    """The rows of ``batch``'s symbols from each one's ``d0`` (earliest
+    batch date) on, recomputed with the ``LOOKBACK_ROWS`` stored rows
+    before ``d0`` as window context. ``stored`` holds those symbols'
+    stored rows; every window below runs under one symbol partitioning."""
+    by_sym = Window.partitionBy("symbol")
+    both = (
+        batch.withColumn("_new", F.lit(True))
+        .withColumn("_stored_obv", F.lit(None).cast("double"))
+        .unionByName(
+            stored.select(
+                *batch.columns,
+                F.lit(False).alias("_new"),
+                F.col("obv").alias("_stored_obv"),
+            )
+        )
+        .repartition("symbol")
+    )
+    # one row per key, ranked as clean_and_prepare ranks duplicates
+    # (latest event_time wins); the batch row wins a tie
+    w_key = Window.partitionBy("symbol", "trading_date").orderBy(
+        F.col("event_time").desc_nulls_last(), F.col("_new").desc()
+    )
+    # d0 before the dedup: a batch row may lose its key to a stored row
+    d0 = F.min(F.when(F.col("_new"), F.col("trading_date"))).over(by_sym)
+    sliced = (
+        both.withColumn("_write", F.col("trading_date") >= d0)
+        .withColumn("_rn", F.row_number().over(w_key))
+        .filter(F.col("_rn") == 1)
+        # rows from d0 on rank first newest-first; keep LOOKBACK_ROWS more
+        .withColumn(
+            "_back",
+            F.row_number().over(by_sym.orderBy(F.col("trading_date").desc()))
+            - F.count(F.when(F.col("_write"), 1)).over(by_sym),
+        )
+        .filter(F.col("_back") <= LOOKBACK_ROWS)
+    )
+    processed = compute_processed(sliced, semantics=semantics)
+    # OBV is the one unbounded window; the slice's running sum is 0 on its
+    # first row. That row is a stored row before d0, whose stored obv is
+    # exact, or the symbol's first row ever, whose obv is 0: adding its
+    # stored obv re-anchors the whole recomputed series.
+    anchor = F.first("_stored_obv").over(by_sym.orderBy("trading_date"))
+    return (
+        processed.withColumn("obv", F.col("obv") + F.coalesce(anchor, F.lit(0.0)))
+        .filter(F.col("_write"))
+        .drop("_new", "_stored_obv", "_rn", "_write", "_back")
+    )
+
+
 def incremental_etl(
     spark: SparkSession,
     raw: DataFrame,
@@ -232,118 +346,93 @@ def incremental_etl(
 ) -> DataFrame:
     """One incremental batch over ALL symbols (no per-symbol loop).
 
-    New rows = event_time > watermark (per symbol). For each AFFECTED
-    symbol: its LOOKBACK_ROWS of history is unioned back in so window
-    functions see full context, the tail is recomputed, and the
-    symbol's partition is rewritten copy-on-write (old rows outside
-    the recompute range preserved). Unaffected symbols — data and
-    watermarks — are untouched. Replaying a fully-processed batch is a
-    no-op. Returns the frame of newly (re)computed rows.
+    First run (no marks, no table): the whole cleaned input is computed
+    and written; its marks come from the cleaned rows, not the indicators.
 
-    Scale: the rewrite cost is bounded by the affected symbols'
-    partitions, not the table; with a lakehouse table format this
-    becomes a MERGE, but plain parquet + dynamic partition overwrite
-    gives the same idempotency contract.
+    Later runs:
+
+    1. New rows = event_time > the symbol's mark, joined against the mark
+       table in the JVM. The cleaned, filtered batch is materialised once;
+       an empty batch (a replayed one) writes nothing.
+    2. The slice: for each affected symbol, with ``d0`` its earliest new
+       ``trading_date``, a partition-pruned read of its stored rows from
+       ``d0`` on plus the ``LOOKBACK_ROWS`` rows before ``d0``. The slice
+       and the batch are recomputed under one symbol partitioning, and
+       the rows from ``d0`` on are kept.
+    3. Symbols whose ``d0`` is after their newest stored date (the daily
+       case) get those rows appended as new files. A symbol whose batch
+       collides with stored dates — a cross-day correction, or a replay
+       after a crash between the table write and the mark write — has
+       its partition rewritten copy-on-write: stored rows before ``d0``
+       kept, the rest replaced.
+    4. Marks advance to max(old mark, the batch's max event_time) through
+       a staging swap.
+
+    A table without marks, or marks without a table, raises instead of
+    passing for a first run. Returns the rows written (lazy on the append
+    path). The recursive EMA of ``semantics="exact"`` sees only the
+    slice, so it is exact on a first run alone.
     """
     clean = clean_and_prepare(raw)
-    marks = read_watermarks(spark, state_dir)
+    marks = read_watermarks(spark, state_dir, as_frame=True)
+    if marks is None:
+        if path_exists(spark, out_dir):
+            raise RuntimeError(
+                f"{out_dir} exists but {state_dir} holds no watermarks; "
+                "refusing to rebuild the table from this batch alone"
+            )
+        processed = compute_processed(clean, semantics=semantics)
+        write_processed_idempotent(processed, out_dir)
+        write_watermarks(spark, state_dir, clean)
+        return processed
 
-    if marks:
-        mark_df = spark.createDataFrame(
-            [(s, t) for s, t in marks.items()],
-            "symbol STRING, last_processed_ts TIMESTAMP",
-        )
-        # event_time IS NULL (unparseable crawl timestamp) is an explicit
-        # branch: such rows are always treated as new, matching first-run
-        # behavior (which includes them). Without it, `null > mark` is
-        # null and a watermarked symbol would silently drop bad-timestamp
-        # rows that a first run accepts. They re-qualify on every run —
-        # harmless, because the keyed overwrite + (symbol, trading_date)
-        # dedup make reprocessing idempotent.
-        new_rows = clean.join(F.broadcast(mark_df), "symbol", "left").filter(
+    # event_time IS NULL (unparseable crawl timestamp) is an explicit
+    # branch: such rows are always treated as new, matching first-run
+    # behavior (which includes them). Without it, `null > mark` is null
+    # and a watermarked symbol would silently drop bad-timestamp rows
+    # that a first run accepts. They re-qualify on every run and collide
+    # with their stored copy, which the rewrite path merges idempotently.
+    batch = (
+        clean.join(F.broadcast(marks), "symbol", "left")
+        .filter(
             F.col("last_processed_ts").isNull()
             | F.col("event_time").isNull()
             | (F.col("event_time") > F.col("last_processed_ts"))
-        ).drop("last_processed_ts")
-    else:
-        new_rows = clean
-
-    try:
-        existing = spark.read.parquet(out_dir)
-    except Exception:  # noqa: BLE001 — first run, no output yet
-        existing = None
-
-    if existing is None or not marks:
-        processed = compute_processed(new_rows, semantics=semantics)
-        write_processed_idempotent(processed, out_dir)
-        write_watermarks(spark, state_dir, processed)
+        )
+        .drop("last_processed_ts")
+        .localCheckpoint(eager=True)
+    )
+    starts = batch.groupBy("symbol").agg(F.min("trading_date").alias("_d0"))
+    d0 = dict(starts.collect())
+    processed = compute_processed(batch, semantics=semantics)
+    if not d0:
         return processed
 
-    from pyspark.sql import Window
-
-    # restrict to affected symbols; replay of a processed batch = no-op
-    affected = new_rows.select("symbol").distinct()
-    if affected.isEmpty():
-        return spark.createDataFrame([], existing.schema)
-
-    affected_hist = existing.join(
-        F.broadcast(affected), "symbol", "left_semi"
-    ).localCheckpoint(eager=True)  # materialize before overwriting its files
-
-    w = Window.partitionBy("symbol").orderBy(F.col("trading_date").desc())
-    lookback = (
-        affected_hist.select(*new_rows.columns)
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= LOOKBACK_ROWS)
-        .drop("_rn")
+    # a missing table raises here, before anything is written
+    stored = (
+        spark.read.schema(processed.schema)
+        .parquet(out_dir)
+        .filter(F.col("symbol").isin(sorted(d0)))
     )
-    # on (symbol, date) conflict the NEW row wins
-    w_pref = Window.partitionBy("symbol", "trading_date").orderBy(F.col("_prio"))
-    full = (
-        new_rows.withColumn("_prio", F.lit(0))
-        .unionByName(lookback.withColumn("_prio", F.lit(1)))
-        .withColumn("_rn", F.row_number().over(w_pref))
-        .filter(F.col("_rn") == 1)
-        .drop("_prio", "_rn")
-    )
+    newest = dict(stored.groupBy("symbol").agg(F.max("trading_date")).collect())
+    collide = sorted(s for s, d in d0.items() if s in newest and d <= newest[s])
 
-    processed = compute_processed(full, semantics=semantics)
-
-    # Only genuinely NEW rows may be written: the recomputed lookback
-    # rows have truncated windows (their history was clipped at the
-    # lookback boundary) — their previously-correct values stay.
-    new_keys = new_rows.select("symbol", "trading_date")
-    processed_new = processed.join(new_keys, ["symbol", "trading_date"], "left_semi")
-
-    # OBV is an unbounded running sum: the recomputed tail restarts at
-    # the lookback boundary. Re-anchor it with the old cumulative value
-    # at the last lookback row (increments past the anchor are
-    # identical, so one per-symbol offset restores the true series).
-    anchor = lookback.groupBy("symbol").agg(
-        F.max("trading_date").alias("trading_date")
-    )
-    old_at_anchor = affected_hist.join(
-        anchor, ["symbol", "trading_date"], "inner"
-    ).select("symbol", F.col("obv").alias("_old_obv"))
-    new_at_anchor = processed.join(
-        anchor, ["symbol", "trading_date"], "left_semi"
-    ).select("symbol", F.col("obv").alias("_new_obv"))
-    offsets = old_at_anchor.join(new_at_anchor, "symbol", "inner").select(
-        "symbol", (F.col("_old_obv") - F.col("_new_obv")).alias("_obv_off")
-    )
-    processed_new = (
-        processed_new.join(F.broadcast(offsets), "symbol", "left")
-        .withColumn("obv", F.col("obv") + F.coalesce("_obv_off", F.lit(0.0)))
-        .drop("_obv_off")
-    )
-
-    # copy-on-write: keep old rows not rewritten, add the new tail
-    keep_old = affected_hist.join(
-        processed_new.select("symbol", "trading_date"),
-        ["symbol", "trading_date"],
-        "left_anti",
-    )
-    merged = keep_old.select(*processed_new.columns).unionByName(processed_new)
-    write_processed_idempotent(merged, out_dir)
-    write_watermarks(spark, state_dir, processed_new)
-    return processed_new
+    rows = _recompute_slice(batch, stored, semantics=semantics)
+    if not collide:
+        write_processed_idempotent(rows, out_dir, append=True)
+    else:
+        # both frames read the partitions about to be replaced
+        rows = rows.localCheckpoint(eager=True)
+        is_hit = F.col("symbol").isin(collide)
+        kept = (
+            stored.filter(is_hit)
+            .join(F.broadcast(starts), "symbol")
+            .filter(F.col("trading_date") < F.col("_d0"))
+            .select(*rows.columns)
+        )
+        rewrite = kept.unionByName(rows.filter(is_hit)).localCheckpoint(eager=True)
+        if len(collide) < len(d0):
+            write_processed_idempotent(rows.filter(~is_hit), out_dir, append=True)
+        write_processed_idempotent(rewrite, out_dir)
+    write_watermarks(spark, state_dir, batch)
+    return rows

@@ -76,12 +76,6 @@ def write_csv_backup(df: DataFrame, path: str, *, partition_col: str | None = No
     w.csv(path)
 
 
-def read_json_records(spark: SparkSession, path: str, schema: str) -> DataFrame:
-    """JSON-lines source with an explicit schema (never inferred —
-    inference is a full extra scan at scale)."""
-    return spark.read.schema(schema).json(path)
-
-
 def read_binary_assets(spark: SparkSession, path: str, *, glob: str = "*") -> DataFrame:
     """X3 ingest edge: raw files -> (path, modificationTime, length,
     content) via the binaryFile source, mapped onto the multimodal

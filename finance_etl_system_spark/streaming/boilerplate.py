@@ -41,6 +41,7 @@ from pyspark.sql import functions as F
 
 from ..functions.confs import partition_overwrite
 from ..functions.errors import error_condition
+from ..functions.generations import path_exists
 from ..functions.sqltext import pin_sql_text_conf
 from ..operators.substring import gram_keys, spans_from_flagged
 
@@ -64,16 +65,9 @@ def _load_counts(spark: SparkSession, counts_dir: str) -> DataFrame:
         )
     except AnalysisException as e:
         cls = error_condition(e)
-        if cls == "PATH_NOT_FOUND" or not _path_exists(spark, counts_dir):
+        if cls == "PATH_NOT_FOUND" or not path_exists(spark, counts_dir):
             return spark.createDataFrame([], _COUNT_SCHEMA)
         raise
-
-
-def _path_exists(spark: SparkSession, path: str) -> bool:
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    return p.getFileSystem(conf).exists(p)
 
 
 def boilerplate_increment_batch(

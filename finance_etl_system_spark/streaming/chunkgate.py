@@ -45,6 +45,7 @@ from pyspark.sql import functions as F
 
 from ..functions.confs import partition_overwrite
 from ..functions.errors import error_condition
+from ..functions.generations import path_exists
 from ..operators.chunking import chunk_dup_doc_ids, content_defined_chunks
 # re-exported: the chunk index compacts through the shared crash-safe
 # staged-swap protocol all batch_id-partitioned states use
@@ -80,16 +81,9 @@ def _load_chunk_state(
         )
     except AnalysisException as e:
         cls = error_condition(e)
-        if cls == "PATH_NOT_FOUND" or not _path_exists(spark, state_dir):
+        if cls == "PATH_NOT_FOUND" or not path_exists(spark, state_dir):
             return spark.createDataFrame([], _STATE_SCHEMA)
         raise
-
-
-def _path_exists(spark: SparkSession, path: str) -> bool:
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    return p.getFileSystem(conf).exists(p)
 
 
 def chunk_gate_batch(

@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 
 from ..operators.dedup import minhash_dedup_incremental
 from ..functions.errors import error_condition
+from ..functions.generations import path_exists
 from ..functions.confs import partition_overwrite
 from ..functions.sqltext import pin_sql_text_conf
 
@@ -61,16 +62,9 @@ def _load_state(spark: SparkSession, state_dir: str) -> DataFrame:
         # an existence probe through the Hadoop FS API so a changed
         # class name can never crash every first run
         cls = error_condition(e)
-        if cls == "PATH_NOT_FOUND" or not _path_exists(spark, state_dir):
+        if cls == "PATH_NOT_FOUND" or not path_exists(spark, state_dir):
             return spark.createDataFrame([], _SIG_SCHEMA)
         raise
-
-
-def _path_exists(spark: SparkSession, path: str) -> bool:
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    return p.getFileSystem(conf).exists(p)
 
 
 def dedup_increment_batch(

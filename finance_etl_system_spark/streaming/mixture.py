@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 from ..operators.sampling import budget_take
 from ..functions.errors import error_condition
+from ..functions.generations import path_exists
 from ..functions.confs import partition_overwrite
 from ..functions.sqltext import pin_sql_text_conf
 from ..operators.text import ws_tokens
@@ -47,19 +48,12 @@ def _load_kept(
         return spark.read.parquet(kept_dir)
     except AnalysisException as e:
         cls = error_condition(e)
-        if cls == "PATH_NOT_FOUND" or not _path_exists(spark, kept_dir):
+        if cls == "PATH_NOT_FOUND" or not path_exists(spark, kept_dir):
             return spark.createDataFrame(
                 [],
                 f"{group_col} string, {weight_col} bigint, batch_id int",
             )
         raise
-
-
-def _path_exists(spark: SparkSession, path: str) -> bool:
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    return p.getFileSystem(conf).exists(p)
 
 
 def mixture_increment_batch(

@@ -187,6 +187,107 @@ def test_incremental_with_history_beyond_lookback(spark, tmp_path):
     pd.testing.assert_frame_equal(a, b, atol=1e-9)
 
 
+def _assert_full_recompute(spark, out, raw_rows):
+    """The stored table equals one clean + indicator pass over every raw
+    row consumed, with unique (symbol, trading_date) keys."""
+    import pandas as pd
+
+    got = spark.read.parquet(out)
+    expect = compute_processed(
+        clean_and_prepare(spark.createDataFrame(raw_rows, RAW_SCHEMA))
+    )
+    cols = expect.columns
+    a = got.select(*cols).orderBy("symbol", "trading_date").toPandas()
+    b = expect.select(*cols).orderBy("symbol", "trading_date").toPandas()
+    assert not a.duplicated(["symbol", "trading_date"]).any()
+    pd.testing.assert_frame_equal(a, b, atol=1e-9)
+
+
+def _revised(row, close, when):
+    """A late correction of ``row``: new close, crawled at ``when``."""
+    return dict(row, close=close, high=max(row["high"], close),
+                low=min(row["low"], close), timestamp=when)
+
+
+def _day_rows(rows, day):
+    d = (dt.date(2020, 1, 2) + dt.timedelta(days=day)).isoformat()
+    return [r for r in rows if d in r["date"]]
+
+
+def _two_phase(spark, tmp_path, stored, batch):
+    state, out = str(tmp_path / "state"), str(tmp_path / "out")
+    incremental_etl(spark, spark.createDataFrame(stored, RAW_SCHEMA), state, out)
+    incremental_etl(spark, spark.createDataFrame(batch, RAW_SCHEMA), state, out)
+    return out
+
+
+def test_cross_day_correction_inside_lookback(spark, tmp_path):
+    """50 stored days, then a batch with day 50 and a revised close for
+    day 45: the later rows' windows and OBV must see the revision.
+    MSFT gets day 50 only, so one batch takes both the rewrite path
+    (AAPL) and the append path (MSFT)."""
+    rows = _make_raw_rows(symbols=("AAPL", "MSFT"), days=51, seed=11)
+    stored = [r for r in rows if r["timestamp"] < "2020-02-21"]
+    day50 = [r for r in rows if r not in stored]
+    fix = _revised(
+        [r for r in _day_rows(stored, 45) if r["ticker"].upper() == "AAPL"
+         and r["close"] is not None][0],
+        close=1.0, when="2020-02-21T18:00:00",
+    )
+    out = _two_phase(spark, tmp_path, stored, day50 + [fix])
+    _assert_full_recompute(spark, out, rows + [fix])
+
+
+def test_correction_of_newest_stored_day(spark, tmp_path):
+    """A batch holding only a revised close for the newest stored day."""
+    rows = _make_raw_rows(symbols=("AAPL",), days=50, seed=12)
+    last = [r for r in _day_rows(rows, 49) if r["close"] is not None][-1]
+    fix = _revised(last, close=last["close"] * 1.5, when="2020-02-21T09:00:00")
+    out = _two_phase(spark, tmp_path, rows, [fix])
+    _assert_full_recompute(spark, out, rows + [fix])
+
+
+def test_resent_row_without_timestamp_loses_to_stored_row(spark, tmp_path):
+    """A re-sent row with an unparseable timestamp always re-qualifies as
+    new. Against a stored row for the same day it must lose, as it does
+    in clean_and_prepare over the whole feed (latest event_time wins)."""
+    rows = _make_raw_rows(symbols=("AAPL",), days=30, seed=14)
+    old = [r for r in _day_rows(rows, 20) if r["close"] is not None][-1]
+    resent = _revised(old, close=old["close"] * 2, when="not-a-timestamp")
+    out = _two_phase(spark, tmp_path, rows, [resent])
+    _assert_full_recompute(spark, out, rows + [resent])
+
+def test_replay_after_crash_between_append_and_marks(spark, tmp_path, monkeypatch):
+    """The tail is appended, then the mark write dies: re-running the
+    same batch collides with the appended rows and takes the rewrite
+    path, so keys stay unique, values equal a full recompute and the
+    marks advance."""
+    from finance_etl_system_spark.pipeline import etl
+
+    rows = _make_raw_rows(symbols=("AAPL", "MSFT"), days=40, seed=13)
+    stored = [r for r in rows if r["timestamp"] < "2020-02-05"]
+    batch = spark.createDataFrame([r for r in rows if r not in stored], RAW_SCHEMA)
+    state, out = str(tmp_path / "state"), str(tmp_path / "out")
+    incremental_etl(spark, spark.createDataFrame(stored, RAW_SCHEMA), state, out)
+    before = read_watermarks(spark, state)
+    n_stored = spark.read.parquet(out).count()
+
+    def crash(*args, **kwargs):
+        raise RuntimeError("crash before the mark write")
+
+    with monkeypatch.context() as m:
+        m.setattr(etl, "write_watermarks", crash)
+        with pytest.raises(RuntimeError, match="crash before"):
+            incremental_etl(spark, batch, state, out)
+    assert read_watermarks(spark, state) == before
+    assert spark.read.parquet(out).count() > n_stored  # the tail landed
+
+    incremental_etl(spark, batch, state, out)
+    _assert_full_recompute(spark, out, rows)
+    after = read_watermarks(spark, state)
+    assert all(after[s] > before[s] for s in before)
+
+
 # Certification tier (verdict r11 #4; markers registered in
 # tests/conftest.py): this module is excluded from the fast tier
 # `pytest -m "not certify"` and runs in the full per-round gate.

@@ -46,7 +46,6 @@ _CREATE_DATAFRAME_ALLOWED = {
     "operators/pq.py",          # codebooks/centroids (k x d model state)
     "sources/export.py",        # shard manifest rows (O(shards))
     "sources/readers.py",       # fallback symbol list (literal)
-    "pipeline/etl.py",          # watermark row / empty-schema frame
     "pipeline/corpus.py",       # empty increment-state frames
 }
 
