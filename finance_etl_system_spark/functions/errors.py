@@ -1,8 +1,10 @@
 """Shared error-class extraction for Spark exceptions.
 
-Every state/table loader in the engine absorbs ONLY the
-path-not-found error class (a missing dir means "first batch" /
-"no index yet"); anything else must raise. Spark 4 renamed
+State reads go through ``functions/generations.read_state``, which
+absorbs ONLY "no state yet" (a missing path, or a committed directory
+with no data file) and raises on anything else; the probe fences in
+``operators/pq.py`` and ``operators/similarity.py`` read the error
+class to tell a mid-overwrite race from a failure. Spark 4 renamed
 ``getErrorClass`` to ``getCondition`` and the old name now emits a
 FutureWarning per call — this helper prefers the new API and keeps
 the engine warning-clean on any driver-provided Spark version

@@ -50,8 +50,11 @@ from __future__ import annotations
 import json
 import re
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .errors import error_condition
 
 _GEN_RE = re.compile(r"^_GEN_(\d+)\.json$")
 
@@ -217,11 +220,39 @@ def read_live_state(spark: SparkSession, state_dir: str) -> DataFrame:
     generation g+1 concurrently is invisible (its new partition is
     pruned by the g-filter; its inputs survive until the NEXT
     compaction's deferred GC). Raises exactly what
-    ``spark.read.parquet`` raises — callers keep their own
-    missing-dir absorption policies. Frames without a ``batch_id``
-    column (e.g. a batch-built text index) read as-is."""
+    ``spark.read.parquet`` raises; :func:`read_state` adds the one
+    "no state yet" rule on top. Frames without a ``batch_id`` column
+    (e.g. a batch-built text index) read as-is."""
     g, max_folded = current_generation(spark, state_dir)
     df = spark.read.parquet(state_dir)
     if "batch_id" not in df.columns:
         return df
     return df.filter(live_batch_filter(g, max_folded))
+
+
+def read_state(spark: SparkSession, path: str, schema: str) -> DataFrame:
+    """The one read of engine state: an empty frame of ``schema`` when
+    there is no state yet, else :func:`read_live_state`. "No state yet"
+    is a path that does not exist, or a directory holding a committed
+    ``_SUCCESS`` and no data file (what a zero-row static or append
+    ``partitionBy`` write leaves; a zero-row dynamic overwrite leaves
+    an empty directory, so writers skip it). Anything else raises: a
+    corrupt part, an empty directory without ``_SUCCESS``, a
+    half-written ``_temporary`` — an unreadable state read as empty
+    would admit or re-append a whole batch and then overwrite the
+    state with that batch alone."""
+    # probe first: a first run then costs one FS call, not a failed
+    # read that logs a stack trace
+    if not path_exists(spark, path):
+        return spark.createDataFrame([], schema)
+    try:
+        return read_live_state(spark, path)
+    except AnalysisException as e:
+        cond = error_condition(e)
+        # removed between the probe and the read, or committed empty
+        if cond == "PATH_NOT_FOUND" or (
+            cond == "UNABLE_TO_INFER_SCHEMA"
+            and "_SUCCESS" in list_names(spark, path)
+        ):
+            return spark.createDataFrame([], schema)
+        raise

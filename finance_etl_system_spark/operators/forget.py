@@ -34,6 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.generations import hadoop_fs
 from .textindex import _swap_dir, compact_text_index, verify_text_index
 
 
@@ -64,7 +65,7 @@ def _forget_parquet_table(
       therefore REMOVED (via .old, so a crash mid-removal still
       leaves recoverable data): absent-dir is the documented
       bootstrap state of every partitioned state table here
-      (streaming/dedup._load_state treats PATH_NOT_FOUND as "no
+      (functions/generations.read_state reads a missing path as "no
       state yet"), so later reads and appends keep working.
     - the same list against an UNPARTITIONED table writes one
       schema-bearing empty part file — readable, same columns.
@@ -80,11 +81,8 @@ def _forget_parquet_table(
     ).localCheckpoint(eager=True)  # count + write share one anti-join
     after = kept.count()
     if after == 0 and partition_by:
-        jvm = spark.sparkContext._jvm
-        conf = spark.sparkContext._jsc.hadoopConfiguration()
-        Path = jvm.org.apache.hadoop.fs.Path
+        fs, Path = hadoop_fs(spark, path)
         live = Path(path)
-        fs = live.getFileSystem(conf)
         old = Path(f"{path}.old")
         if fs.exists(old):
             fs.delete(old, True)
@@ -106,11 +104,8 @@ def _forget_parquet_table(
 def _delete_dir(spark: SparkSession, path: str) -> None:
     """Remove a stale directory (crashed prior staging write) via the
     Hadoop FS API — same FS-portability contract as _swap_dir."""
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    Path = jvm.org.apache.hadoop.fs.Path
+    fs, Path = hadoop_fs(spark, path)
     p = Path(path)
-    fs = p.getFileSystem(conf)
     if fs.exists(p):
         fs.delete(p, True)
 

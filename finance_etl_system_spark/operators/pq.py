@@ -58,6 +58,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.confs import partition_overwrite
+from ..functions.generations import hadoop_fs
 from .quantize import _round_half_away
 
 
@@ -709,7 +710,6 @@ def build_ivf_pq_index(
     rerank joins the caller's corpus table for shortlist survivors
     only."""
     from .clustering import kmeans_assign, kmeans_fit
-    from .similarity import _ivf_fs
 
     spark = corpus.sparkSession
     # NOTHING under ``path`` is touched until every training phase
@@ -775,7 +775,7 @@ def build_ivf_pq_index(
         _live_append_leases,
     )
 
-    fs, HPath = _ivf_fs(spark, path)
+    fs, HPath = hadoop_fs(spark, path)
     fs.mkdirs(HPath(path))
     marker = HPath(_build_marker(path))
     if not fs.createNewFile(marker):
@@ -878,9 +878,9 @@ def _check_not_building(spark, path: str) -> None:
     additionally re-validate AFTER their scan
     (_verify_probe_consistency), which closes the check-then-read
     race this entry check alone leaves open."""
-    from .similarity import _build_marker, _ivf_fs
+    from .similarity import _build_marker
 
-    fs, HPath = _ivf_fs(spark, path)
+    fs, HPath = hadoop_fs(spark, path)
     if fs.exists(HPath(_build_marker(path))):
         raise RuntimeError(
             f"IVF-PQ index at {path} has a _BUILDING marker: a"
@@ -920,10 +920,9 @@ def _verify_probe_consistency(spark, path: str, meta_entry: dict) -> None:
         ProbeRaceError,
         _build_marker,
         _compact_marker,
-        _ivf_fs,
     )
 
-    fs, HPath = _ivf_fs(spark, path)
+    fs, HPath = hadoop_fs(spark, path)
     if fs.exists(HPath(_build_marker(path))):
         raise ProbeRaceError(
             f"IVF-PQ probe at {path} overlapped a rebuild"
@@ -1198,9 +1197,7 @@ def _load_rotation(spark, path: str, meta_row=None) -> np.ndarray | None:
     rotation-table presence. Callers that already collected the meta
     row pass it as ``meta_row`` to skip a redundant read+collect
     (r10 review finding)."""
-    from .similarity import _ivf_fs
-
-    fs, HPath = _ivf_fs(spark, path)
+    fs, HPath = hadoop_fs(spark, path)
     if meta_row is None:
         meta_df = spark.read.parquet(f"{path}/meta")
         space = (
@@ -1262,11 +1259,10 @@ def append_to_ivf_pq_index(
     from .similarity import (
         _append_lease,
         _compact_marker,
-        _ivf_fs,
     )
 
     spark = new_vectors.sparkSession
-    fs, HPath = _ivf_fs(spark, path)
+    fs, HPath = hadoop_fs(spark, path)
     lease = HPath(_append_lease(path, uuid.uuid4().hex))
     if not fs.createNewFile(lease):  # pragma: no cover - uuid collision
         raise RuntimeError(f"could not take append lease {lease}")
@@ -1373,13 +1369,12 @@ def compact_ivf_pq_index(
     caveat as compact_ivf_index, surfaced as n_duplicate_ids)."""
     from .similarity import (
         _compact_marker,
-        _ivf_fs,
         _live_append_leases,
     )
     from .textindex import _swap_dir
 
     _check_not_building(spark, path)
-    fs, HPath = _ivf_fs(spark, path)
+    fs, HPath = hadoop_fs(spark, path)
     marker = HPath(_compact_marker(path))
     if not fs.createNewFile(marker):
         raise RuntimeError(
@@ -1454,11 +1449,10 @@ def verify_ivf_pq_index(spark, path: str) -> dict:
     from .similarity import (
         _build_marker,
         _compact_marker,
-        _ivf_fs,
         _live_append_leases,
     )
 
-    fs, HPath = _ivf_fs(spark, path)
+    fs, HPath = hadoop_fs(spark, path)
     fences = {
         "stale_compact_marker": bool(
             fs.exists(HPath(_compact_marker(path)))

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from ..functions.confs import partition_overwrite
 from ..functions.errors import error_condition
+from ..functions.generations import hadoop_fs, read_state
 from ..functions.sqltext import sql_ident, sql_literal
 
 
@@ -308,13 +309,7 @@ def _route_queries(q: DataFrame, centroids: DataFrame, nprobe: int) -> DataFrame
 IVF_STREAM_BATCH_BASE = 1_000_000_000
 
 
-def _ivf_fs(spark, path: str):
-    """Hadoop FileSystem handle for an index path (works for local
-    FS and HDFS alike — same machinery as textindex._swap_dir)."""
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    HPath = jvm.org.apache.hadoop.fs.Path
-    return HPath(path).getFileSystem(conf), HPath
+_IVF_META_SCHEMA = "id_col string, vec_col string, k_clusters int, build_id long"
 
 
 def _compact_marker(path: str) -> str:
@@ -403,7 +398,7 @@ def build_ivf_index(
 
     corpus.sparkSession.createDataFrame(
         [(id_col, vec_col, int(k_clusters), int(_time.time_ns()))],
-        "id_col string, vec_col string, k_clusters int, build_id long",
+        _IVF_META_SCHEMA,
     ).write.mode("overwrite").parquet(f"{path}/meta")
     return model
 
@@ -464,7 +459,7 @@ def append_to_ivf_index(
     import uuid
 
     spark = new_vectors.sparkSession
-    fs, HPath = _ivf_fs(spark, path)
+    fs, HPath = hadoop_fs(spark, path)
     lease = HPath(_append_lease(path, uuid.uuid4().hex))
     if not fs.createNewFile(lease):  # pragma: no cover - uuid collision
         raise RuntimeError(f"could not take append lease {lease}")
@@ -581,7 +576,7 @@ def compact_ivf_index(
     offsets==commits in the checkpoint) makes compaction safe."""
     from .textindex import _swap_dir
 
-    fs, HPath = _ivf_fs(spark, path)
+    fs, HPath = hadoop_fs(spark, path)
     marker = HPath(_compact_marker(path))
     if not fs.createNewFile(marker):
         raise RuntimeError(
@@ -664,7 +659,7 @@ def verify_ivf_index(spark, path: str) -> dict:
             ((F.col("cluster") < 0) | (F.col("cluster") >= k)).cast("long")
         ).alias("bad"),
     ).collect()[0]
-    fs, HPath = _ivf_fs(spark, path)
+    fs, HPath = hadoop_fs(spark, path)
     stale_marker = bool(fs.exists(HPath(_compact_marker(path))))
     stale_staging = bool(fs.exists(HPath(f"{path}/vectors.staging")))
     leases = _live_append_leases(fs, HPath, path)
@@ -816,7 +811,7 @@ def _cosine_topk_ivf_index_once(
     # manual-heal message rather than scanning a possibly
     # half-promoted directory (the r12 retry wrapper deliberately
     # does NOT retry this: the marker is standing state, not a race)
-    fs, HPath = _ivf_fs(spark, path)
+    fs, HPath = hadoop_fs(spark, path)
     if fs.exists(HPath(_compact_marker(path))):
         raise RuntimeError(
             f"IVF index at {path} has a _COMPACTING marker: a"
@@ -829,21 +824,9 @@ def _cosine_topk_ivf_index_once(
     # the meta table names the INDEX's columns; the caller's vec_col
     # keeps naming the QUERY frame's vector column — conflating the
     # two would silently score with the wrong query column whenever
-    # the names differ
-    # ONLY the missing-meta (pre-meta index layout) case may fall back
-    # to inference — a transiently unreadable or corrupt meta table
-    # must raise, not silently risk the wrong-column pick the meta
-    # table exists to prevent
-    from pyspark.errors import AnalysisException
-
-    meta = None
-    try:
-        rows = spark.read.parquet(f"{path}/meta").collect()
-        meta = rows[0] if rows else None
-    except AnalysisException as e:
-        cls = error_condition(e)
-        if cls not in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
-            raise
+    # the names differ. Only a pre-meta index layout (no meta yet)
+    # falls back to inference.
+    meta = read_state(spark, f"{path}/meta", _IVF_META_SCHEMA).head()
     if meta is not None:
         id_col, index_vec_col = meta["id_col"], meta["vec_col"]
     else:  # pre-meta index layout: infer, but FAIL loudly
@@ -918,7 +901,7 @@ def _verify_ivf_probe_consistency(spark, path: str, meta_entry) -> None:
     fully committed inside the probe window is detected."""
     from pyspark.errors import AnalysisException
 
-    fs, HPath = _ivf_fs(spark, path)
+    fs, HPath = hadoop_fs(spark, path)
     if fs.exists(HPath(_compact_marker(path))):
         raise ProbeRaceError(
             f"IVF probe at {path} overlapped a compaction"

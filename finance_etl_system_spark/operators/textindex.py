@@ -32,9 +32,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..queries.retrieval import B, K1, token_array
-from ..functions.errors import error_condition
 from ..functions.frames import ranked_topk
 from ..functions.confs import partition_overwrite
+from ..functions.generations import hadoop_fs, path_exists, read_state
 
 N_BUCKETS = 16
 
@@ -59,45 +59,21 @@ def _write_meta(
 
 
 def _read_meta(spark: SparkSession, path: str) -> dict | None:
-    """Index build flags, or None for a pre-meta index. Only the
-    missing-path case degrades to None — a corrupt meta must raise,
-    not silently fall back to schema probing."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        row = spark.read.parquet(f"{path}/meta").head()
-    except AnalysisException as e:
-        cls = error_condition(e)
-        if cls in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
-            return None
-        raise
+    """Index build flags, or None for a pre-meta index."""
+    row = read_state(spark, f"{path}/meta", _META_SCHEMA).head()
     return row.asDict() if row is not None else None
 
 
 def _read_index_table(spark: SparkSession, path: str, schema: str) -> DataFrame:
-    """Read an index table; ONLY the built-but-empty case falls back
-    to an empty frame. build_text_index always creates the dir (an
-    empty corpus leaves _SUCCESS and no parquet files →
-    UNABLE_TO_INFER_SCHEMA), so PATH_NOT_FOUND can only mean a typo'd
-    or never-built path — that must RAISE, not silently return zero
-    hits; a corrupt index raises too."""
-    from pyspark.errors import AnalysisException
-
-    from ..functions.generations import read_live_state
-
-    try:
-        # read_live_state: a streaming-built index's postings/doclen
-        # partition by batch_id and may be concurrently compacted
-        # (streaming/compaction.py::compact_stream_index) — the
-        # generation filter keeps a search atomic against the fold;
-        # for batch-built indexes (no batch_id column, no marker)
-        # this is exactly spark.read.parquet
-        return read_live_state(spark, path)
-    except AnalysisException as e:
-        cls = error_condition(e)
-        if cls == "UNABLE_TO_INFER_SCHEMA":
-            return spark.createDataFrame([], schema)
-        raise
+    """Read an index table. build_text_index always creates the dir
+    (an empty corpus leaves only _SUCCESS, read as an empty frame), so
+    a missing path is a typo'd or never-built index — that raises
+    rather than answering zero hits. The read is generation-resolved:
+    a streaming-built index may be compacted concurrently
+    (streaming/compaction.py::compact_stream_index)."""
+    if not path_exists(spark, path):
+        raise FileNotFoundError(f"no text index table at {path}")
+    return read_state(spark, path, schema)
 
 
 def _postings(
@@ -475,10 +451,7 @@ def _swap_dir(spark: SparkSession, live: str) -> None:
     """Promote ``{live}.staging`` to ``live`` via the Hadoop FS API
     (works for local FS and HDFS alike): live → .old, staging → live,
     drop .old."""
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    Path = jvm.org.apache.hadoop.fs.Path
-    fs = Path(live).getFileSystem(conf)
+    fs, Path = hadoop_fs(spark, live)
     old = Path(live + ".old")
     if fs.exists(old):
         fs.delete(old, True)

@@ -16,7 +16,7 @@ Everything is pure long arithmetic (shift/and/or), unrolled to
 ``bits`` terms per dimension — whole-stage codegen, engine-portable
 (the DuckDB oracle runs the identical expression), replay-stable.
 
-Scale posture: zvalue is a projection (free at scan speed);
+Scale posture: the Morton key is a projection (free at scan speed);
 clustering is ONE repartitionByRange (sampled range boundaries) +
 in-partition sort — the same shuffle any global sort pays, amortized
 once at write time to make every later scan cheaper.
@@ -25,30 +25,16 @@ once at write time to make every later scan cheaper.
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
-
-
-def zvalue(cols: list[Column], *, bits: int) -> Column:
-    """Interleave the low ``bits`` bits of each (long, non-negative,
-    already range-reduced) column: result bit ``b*len(cols)+i`` is bit
-    ``b`` of ``cols[i]``. Fits in a long for bits*len(cols) <= 63."""
-    n = len(cols)
-    if bits * n > 63:
-        raise ValueError("interleaved key must fit in a signed long")
-    out: Column | None = None
-    for i, c in enumerate(cols):
-        for b in range(bits):
-            term = F.shiftleft(
-                F.shiftright(c, b).bitwiseAND(F.lit(1)), b * n + i
-            )
-            out = term if out is None else out.bitwiseOR(term)
-    assert out is not None
-    return out
 
 
 def zvalue_sql(exprs: list[str], *, bits: int) -> str:
-    """The identical interleave as portable SQL (for oracles/pushdown
-    to engines without a zorder builtin)."""
+    """Interleave the low ``bits`` bits of each (long, non-negative,
+    already range-reduced) expression: result bit ``b*len(exprs)+i``
+    is bit ``b`` of ``exprs[i]``. Fits in a long for bits*len(exprs)
+    <= 63. The one source for Spark (``F.expr``) and the DuckDB
+    oracle alike."""
+    if bits * len(exprs) > 63:
+        raise ValueError("interleaved key must fit in a signed long")
     # every term fully parenthesized: Postgres-style engines give
     # &, |, <<, >> ONE shared precedence level (left-associative), so
     # an unparenthesized `a << 1 | b << 2` folds the OR into a shift

@@ -142,7 +142,7 @@ def clean_and_prepare(df: DataFrame) -> DataFrame:
     )
 
 
-def compute_processed(clean: DataFrame, *, semantics: str = "reference") -> DataFrame:
+def compute_processed(clean: DataFrame) -> DataFrame:
     """clean -> 15 indicator columns (one window family, one shuffle)."""
     out = technical_indicators(
         clean,
@@ -150,7 +150,6 @@ def compute_processed(clean: DataFrame, *, semantics: str = "reference") -> Data
         date_col="trading_date",
         close_col="close",
         volume_col="volume",
-        semantics=semantics,
     )
     return out.withColumn(
         "symbol_date_key",
@@ -284,9 +283,7 @@ def compact_partitions(
     return len(glob.glob(f"{table_dir}/**/*.parquet", recursive=True))
 
 
-def _recompute_slice(
-    batch: DataFrame, stored: DataFrame, *, semantics: str
-) -> DataFrame:
+def _recompute_slice(batch: DataFrame, stored: DataFrame) -> DataFrame:
     """The rows of ``batch``'s symbols from each one's ``d0`` (earliest
     batch date) on, recomputed with the ``LOOKBACK_ROWS`` stored rows
     before ``d0`` as window context. ``stored`` holds those symbols'
@@ -323,7 +320,7 @@ def _recompute_slice(
         )
         .filter(F.col("_back") <= LOOKBACK_ROWS)
     )
-    processed = compute_processed(sliced, semantics=semantics)
+    processed = compute_processed(sliced)
     # OBV is the one unbounded window; the slice's running sum is 0 on its
     # first row. That row is a stored row before d0, whose stored obv is
     # exact, or the symbol's first row ever, whose obv is 0: adding its
@@ -341,8 +338,6 @@ def incremental_etl(
     raw: DataFrame,
     state_dir: str,
     out_dir: str,
-    *,
-    semantics: str = "reference",
 ) -> DataFrame:
     """One incremental batch over ALL symbols (no per-symbol loop).
 
@@ -370,8 +365,7 @@ def incremental_etl(
 
     A table without marks, or marks without a table, raises instead of
     passing for a first run. Returns the rows written (lazy on the append
-    path). The recursive EMA of ``semantics="exact"`` sees only the
-    slice, so it is exact on a first run alone.
+    path).
     """
     clean = clean_and_prepare(raw)
     marks = read_watermarks(spark, state_dir, as_frame=True)
@@ -381,7 +375,7 @@ def incremental_etl(
                 f"{out_dir} exists but {state_dir} holds no watermarks; "
                 "refusing to rebuild the table from this batch alone"
             )
-        processed = compute_processed(clean, semantics=semantics)
+        processed = compute_processed(clean)
         write_processed_idempotent(processed, out_dir)
         write_watermarks(spark, state_dir, clean)
         return processed
@@ -404,7 +398,7 @@ def incremental_etl(
     )
     starts = batch.groupBy("symbol").agg(F.min("trading_date").alias("_d0"))
     d0 = dict(starts.collect())
-    processed = compute_processed(batch, semantics=semantics)
+    processed = compute_processed(batch)
     if not d0:
         return processed
 
@@ -417,7 +411,7 @@ def incremental_etl(
     newest = dict(stored.groupBy("symbol").agg(F.max("trading_date")).collect())
     collide = sorted(s for s, d in d0.items() if s in newest and d <= newest[s])
 
-    rows = _recompute_slice(batch, stored, semantics=semantics)
+    rows = _recompute_slice(batch, stored)
     if not collide:
         write_processed_idempotent(rows, out_dir, append=True)
     else:

@@ -25,6 +25,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.confs import partition_overwrite
+from ..functions.generations import read_state
+
+_EVENTS_SCHEMA = "event_id LONG, ts TIMESTAMP, event_type STRING, value DOUBLE"
 
 
 def rollup_aggregate(source: DataFrame, *, bucket: str = "1 day") -> DataFrame:
@@ -79,37 +82,10 @@ def stream_rollup(
     refresh re-aggregates the touched buckets — streaming arrival
     pattern, not log size, drives the work.
     """
-    raw = (
-        spark.readStream.schema(
-            "event_id LONG, ts TIMESTAMP, event_type STRING, value DOUBLE"
-        ).json(source_dir)
-    )
+    raw = spark.readStream.schema(_EVENTS_SCHEMA).json(source_dir)
 
     def refresh(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        sess = batch_df.sparkSession
-        batch = batch_df.withColumn("event_date", F.col("ts").cast("date")).persist()
-        try:
-            days = [r["event_date"] for r in batch.select("event_date").distinct().collect()]
-            try:
-                seen = (
-                    sess.read.parquet(events_dir)
-                    .filter(F.col("event_date").isin(days))
-                    .select("event_id")
-                )
-                fresh = batch.join(seen, "event_id", "left_anti")
-            except Exception:  # noqa: BLE001 — first batch, no log yet
-                fresh = batch
-            (
-                fresh.write.mode("append")
-                .partitionBy("event_date")
-                .parquet(events_dir)
-            )
-            source = sess.read.parquet(events_dir)
-            incremental_time_rollup(source, batch, rollup_dir, bucket=bucket)
-        finally:
-            batch.unpersist()
+        rollup_batch(batch_df, events_dir, rollup_dir, bucket=bucket)
 
     return (
         raw.writeStream.foreachBatch(refresh)
@@ -117,6 +93,38 @@ def stream_rollup(
         .trigger(availableNow=True)
         .start()
     )
+
+
+def rollup_batch(
+    batch_df: DataFrame,
+    events_dir: str,
+    rollup_dir: str,
+    *,
+    bucket: str = "1 day",
+) -> None:
+    """One micro-batch of stream_rollup: append the events the log
+    does not hold yet, then refresh the buckets the batch touches."""
+    if batch_df.isEmpty():
+        return
+    spark = batch_df.sparkSession
+    batch = batch_df.withColumn("event_date", F.col("ts").cast("date")).persist()
+    try:
+        days = [r["event_date"] for r in batch.select("event_date").distinct().collect()]
+        seen = (
+            read_state(spark, events_dir, f"{_EVENTS_SCHEMA}, event_date DATE")
+            .filter(F.col("event_date").isin(days))
+            .select("event_id")
+        )
+        fresh = batch.join(seen, "event_id", "left_anti")
+        (
+            fresh.write.mode("append")
+            .partitionBy("event_date")
+            .parquet(events_dir)
+        )
+        source = spark.read.parquet(events_dir)
+        incremental_time_rollup(source, batch, rollup_dir, bucket=bucket)
+    finally:
+        batch.unpersist()
 
 
 def incremental_time_rollup(

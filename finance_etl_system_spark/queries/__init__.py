@@ -70,10 +70,7 @@ def _load() -> tuple[dict[str, QueryFn], dict[str, str]]:
     queries: dict[str, QueryFn] = {}
     oracle: dict[str, str] = {}
     for mod_name in _MODULES:
-        try:
-            mod = importlib.import_module(f"{__name__}.{mod_name}")
-        except ModuleNotFoundError:
-            continue
+        mod = importlib.import_module(f"{__name__}.{mod_name}")
         for key, fn in getattr(mod, "QUERIES", {}).items():
             if key in queries:
                 raise ValueError(f"duplicate query name {key!r} in {mod_name}")

@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from ..operators.zorder import zvalue, zvalue_sql
+from ..operators.zorder import zvalue_sql
 
 BITS = 12
 MASK = (1 << BITS) - 1
@@ -33,9 +33,9 @@ def q_zorder_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     day = F.datediff(F.col("o_orderdate").cast("date"), F.lit(_EPOCH).cast("date")).cast(
         "long"
     ).bitwiseAND(F.lit(MASK))
-    z = zvalue([ck, day], bits=BITS)
     return (
-        o.select(ck.alias("ck"), day.alias("day"), z.alias("z"))
+        o.select(ck.alias("ck"), day.alias("day"))
+        .withColumn("z", F.expr(zvalue_sql(["ck", "day"], bits=BITS)))
         .select(
             F.expr(f"z div {_BUCKET_DIV}").cast("long").alias("zbucket"),
             "ck",

@@ -35,7 +35,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..functions.errors import error_condition
+from ..functions.generations import read_state
+
+_META_SCHEMA = "id_type string, n_shards int"
 
 
 def write_jsonl_shards(
@@ -68,7 +70,7 @@ def write_jsonl_shards(
         .json(f"{path}/shards")
     )
     spark.createDataFrame(
-        [(id_type, int(n_shards))], "id_type string, n_shards int"
+        [(id_type, int(n_shards))], _META_SCHEMA
     ).write.mode("overwrite").parquet(f"{path}/meta")
     # manifest FROM the written shards (describes the bytes on disk),
     # padded to every shard id so the fixed-count contract is explicit
@@ -96,20 +98,14 @@ def write_jsonl_shards(
 
 def read_jsonl_shards(spark: SparkSession, path: str) -> DataFrame:
     """Read an exported shard set back with the EXPORTED id type (from
-    the meta table; shard is restored from the directory layout)."""
-    # ONLY a missing meta table (pre-meta export) falls back to the
-    # original bigint contract; a corrupt/unreadable meta must raise,
-    # not silently mis-type ids
-    from pyspark.errors import AnalysisException
-
-    try:
-        meta = spark.read.parquet(f"{path}/meta").collect()[0]
-        id_type = T._parse_datatype_json_string(meta["id_type"])
-    except AnalysisException as e:
-        cls = error_condition(e)
-        if cls not in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
-            raise
-        id_type = T.LongType()
+    the meta table; shard is restored from the directory layout). A
+    pre-meta export keeps the original bigint contract."""
+    meta = read_state(spark, f"{path}/meta", _META_SCHEMA).head()
+    id_type = (
+        T.LongType()
+        if meta is None
+        else T._parse_datatype_json_string(meta["id_type"])
+    )
     schema = T.StructType(
         [
             T.StructField("id", id_type),

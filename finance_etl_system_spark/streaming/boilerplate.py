@@ -40,8 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.confs import partition_overwrite
-from ..functions.errors import error_condition
-from ..functions.generations import path_exists
+from ..functions.generations import read_state
 from ..functions.sqltext import pin_sql_text_conf
 from ..operators.substring import gram_keys, spans_from_flagged
 
@@ -49,25 +48,12 @@ _COUNT_SCHEMA = "_h1 bigint, _h2 bigint, n bigint, batch_id bigint"
 
 
 def _load_counts(spark: SparkSession, counts_dir: str) -> DataFrame:
-    """Count log; missing dir = first batch -> empty. Only the
-    path-not-found case is absorbed (same rationale as
-    streaming/dedup.py::_load_state). read_live_state makes this
-    atomic against a concurrent compact_count_log — essential here:
-    the counts are ADDITIVE, so a non-atomic read overlapping a fold
-    would double-count grams."""
-    from pyspark.errors import AnalysisException
-
-    from .compaction import read_live_state
-
-    try:
-        return read_live_state(spark, counts_dir).select(
-            "_h1", "_h2", "n", "batch_id"
-        )
-    except AnalysisException as e:
-        cls = error_condition(e)
-        if cls == "PATH_NOT_FOUND" or not path_exists(spark, counts_dir):
-            return spark.createDataFrame([], _COUNT_SCHEMA)
-        raise
+    """The gram-count log (empty before the first batch). The read is
+    generation-resolved: the counts are ADDITIVE, so a read
+    overlapping a compact_count_log fold must not double-count."""
+    return read_state(spark, counts_dir, _COUNT_SCHEMA).select(
+        "_h1", "_h2", "n", "batch_id"
+    )
 
 
 def boilerplate_increment_batch(

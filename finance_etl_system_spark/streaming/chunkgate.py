@@ -44,8 +44,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.confs import partition_overwrite
-from ..functions.errors import error_condition
-from ..functions.generations import path_exists
+from ..functions.generations import read_state
 from ..operators.chunking import chunk_dup_doc_ids, content_defined_chunks
 # re-exported: the chunk index compacts through the shared crash-safe
 # staged-swap protocol all batch_id-partitioned states use
@@ -54,36 +53,19 @@ from .compaction import (  # noqa: F401 — public API of this module
     compact_chunk_state,
 )
 
-_STATE_SCHEMA = "chunk_hash string"
+_STATE_SCHEMA = "chunk_hash string, batch_id int"
 
 
 def _load_chunk_state(
     spark: SparkSession, state_dir: str, *, exclude_batch_id: int
 ) -> DataFrame:
     """Chunk hashes from every batch EXCEPT ``exclude_batch_id`` (a
-    retried batch must not dedup against its own first attempt).
-    Missing dir = first batch → empty. Only path-not-found is
-    absorbed; any other read failure raises — silently gating against
-    an empty history would admit everything and corrupt the state
-    (the streaming/dedup.py _load_state rule). read_live_state makes
-    this read atomic against a concurrent compact_chunk_state: the
-    live generation is resolved before listing, and the compactor's
-    deferred GC keeps that generation's files alive a full cycle."""
-    from pyspark.errors import AnalysisException
-
-    from .compaction import read_live_state
-
-    try:
-        return (
-            read_live_state(spark, state_dir)
-            .filter(F.col("batch_id") != F.lit(int(exclude_batch_id)))
-            .select("chunk_hash")
-        )
-    except AnalysisException as e:
-        cls = error_condition(e)
-        if cls == "PATH_NOT_FOUND" or not path_exists(spark, state_dir):
-            return spark.createDataFrame([], _STATE_SCHEMA)
-        raise
+    retried batch must not dedup against its own first attempt)."""
+    return (
+        read_state(spark, state_dir, _STATE_SCHEMA)
+        .filter(F.col("batch_id") != F.lit(int(exclude_batch_id)))
+        .select("chunk_hash")
+    )
 
 
 def chunk_gate_batch(

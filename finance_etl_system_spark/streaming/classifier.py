@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.confs import partition_overwrite
+from ..functions.generations import read_state
 from ..operators.quality_classifier import (
     hashed_text_features,
     logreg_score,
@@ -67,9 +68,8 @@ def classifier_gate_batch(
     kept = scored.filter(F.col("quality_prob") >= threshold)
     rejected = scored.filter(F.col("quality_prob") < threshold)
     for frame, path in ((kept, kept_dir), (rejected, rejected_dir)):
-        # empty-partition guard: a data-file-less partitioned dir is
-        # unreadable (the forget/_forget_parquet_table lesson) — skip
-        # the write; downstream reads treat absence as zero rows
+        # a zero-row dynamic overwrite would leave a never-written sink
+        # an empty directory, which the audit's read_state refuses
         if frame.isEmpty():
             continue
         with partition_overwrite(spark, "dynamic"):
@@ -127,19 +127,10 @@ def classifier_gate_audit(
     n_rejected, keep_rate 6dp)."""
 
     def _side(path: str, name: str) -> DataFrame:
-        # ONLY absence means "sink never written"; a corrupt or
-        # unreadable sink must raise — an audit that swallows read
-        # errors would report zero kept rows and look clean exactly
-        # when routing is broken (review finding r9)
-        from ..operators.similarity import _ivf_fs
-
-        fs, HPath = _ivf_fs(spark, path)
-        if not fs.exists(HPath(path)):
-            return spark.createDataFrame(
-                [], f"batch_id long, {name} long"
-            )
+        # an audit that read an unreadable sink as empty would report
+        # zero kept rows and look clean exactly when routing is broken
         return (
-            spark.read.parquet(path)
+            read_state(spark, path, "batch_id long")
             .groupBy("batch_id")
             .agg(F.count(F.lit(1)).alias(name))
         )

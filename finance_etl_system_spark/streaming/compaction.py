@@ -54,11 +54,11 @@ from ..functions.generations import (
     gc_stale_markers,
     hadoop_fs,
     list_names,
-    live_batch_filter,
     live_generation,
     publish_generation,
     read_live_state,  # noqa: F401 — re-exported reader entry point
     read_small_text,
+    read_state,
 )
 
 # generation 1's partition id (generation g lives at batch_id=-g);
@@ -148,7 +148,9 @@ def compact_batch_partitions(
     the next generation's consolidated partition, using ``fold`` to
     merge the rows (its input still carries batch_id; its output
     must NOT). Returns the number of raw partitions folded; 0 when
-    there is nothing to do (including a missing state dir).
+    there is nothing to do, including a store with no commit yet (no
+    partition, no generation marker). A store whose marker or
+    partitions promise data that cannot be read raises.
     Reader-atomic and crash-safe per the module docstring — safe to
     run concurrently with the stream's own batches.
 
@@ -159,28 +161,25 @@ def compact_batch_partitions(
     term-sorted postings for row-group skipping) to the folded
     output.
     """
-    from pyspark.errors import AnalysisException
-
     _recover_legacy_swap(spark, state_dir)
-    if not list_names(spark, state_dir):
-        return 0
     gen, max_folded = current_generation(spark, state_dir)
     # max_folded of generation gen-1, carried in gen's marker payload
     # (absent on pre-r13 markers and the implicit generation 1: -1 =
     # GC no raws this cycle; they fall out one cycle later once a
     # new-format marker lands)
     mk = live_generation(spark, state_dir)
+    if mk is None and not any(
+        n.startswith("batch_id=") for n in list_names(spark, state_dir)
+    ):
+        # no commit yet: the stream's first write may be in flight
+        return 0
     prev_max_folded = (
         int(mk[1].get("prev_max_folded", -1)) if mk is not None else -1
     )
     gc_stale_markers(spark, state_dir, gen)
     _gc_stale_partitions(spark, state_dir, gen, prev_max_folded)
 
-    try:
-        df = spark.read.parquet(state_dir)
-    except AnalysisException:
-        return 0
-    df = df.filter(live_batch_filter(gen, max_folded))
+    df = read_state(spark, state_dir, "batch_id int")
     live_raw = sorted(
         r.batch_id
         for r in df.select("batch_id").distinct().collect()
@@ -250,11 +249,11 @@ def compact_drift_counts(
 ) -> int:
     """Compact the drift monitor's bucket-counts log
     (streaming/drift.py): additive per bucket, so the fold sums n.
-    keep_last matters here for a subtler reason than the read-minus-
-    self operators: a retried newest batch REWRITES its own batch_id
-    partition before the cumulative read — if its first-attempt
-    counts had been folded into the consolidated partition, the
-    retry would double them. Cumulative PSI before/after compaction
+    keep_last guards the retry contract as for the other read-minus-
+    self operators: a retried newest batch adds its counts to the log
+    minus its own batch_id partition — if its first-attempt counts
+    had been folded into the consolidated partition, the retry would
+    double them. Cumulative PSI before/after compaction
     is pinned equal in tests/test_compaction.py."""
     return compact_batch_partitions(
         spark,

@@ -34,8 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.dedup import minhash_dedup_incremental
-from ..functions.errors import error_condition
-from ..functions.generations import path_exists
+from ..functions.generations import read_state
 from ..functions.confs import partition_overwrite
 from ..functions.sqltext import pin_sql_text_conf
 
@@ -43,28 +42,8 @@ _SIG_SCHEMA = "id bigint, sig array<bigint>"
 
 
 def _load_state(spark: SparkSession, state_dir: str) -> DataFrame:
-    """Missing state dir = first batch → empty table. ONLY the
-    path-not-found case is absorbed: any other read failure (corrupt
-    footer, transient FS error) must raise — silently deduping against
-    an empty history would admit the whole corpus as survivors and
-    permanently corrupt the state table. read_live_state makes this
-    atomic against a concurrent compact_sig_state (generation-marker
-    protocol, functions/generations.py)."""
-    from pyspark.errors import AnalysisException
-
-    from .compaction import read_live_state
-
-    try:
-        return read_live_state(spark, state_dir).select("id", "sig")
-    except AnalysisException as e:
-        # detect first-batch by ERROR CLASS, not message substring
-        # (messages vary across Spark versions/locales); fall back to
-        # an existence probe through the Hadoop FS API so a changed
-        # class name can never crash every first run
-        cls = error_condition(e)
-        if cls == "PATH_NOT_FOUND" or not path_exists(spark, state_dir):
-            return spark.createDataFrame([], _SIG_SCHEMA)
-        raise
+    """The signature table (empty before the first batch)."""
+    return read_state(spark, state_dir, _SIG_SCHEMA).select("id", "sig")
 
 
 def dedup_increment_batch(
@@ -93,11 +72,7 @@ def dedup_increment_batch(
         )
         survivors = survivors.localCheckpoint(eager=True)
         if survivors.isEmpty():
-            # an all-duplicate batch must not write an empty
-            # partitioned dir (only _SUCCESS): the next batch's
-            # _load_state would die on UNABLE_TO_INFER_SCHEMA instead
-            # of reading prior state
-            return
+            return  # an all-duplicate batch adds no signatures
         (
             survivors.withColumn("batch_id", F.lit(batch_id))
             .write.mode("overwrite")

@@ -36,9 +36,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.confs import partition_overwrite
-from ..functions.errors import error_condition
+from ..functions.generations import read_state
 
 PSI_ALARM = 0.2
+
+_COUNTS_SCHEMA = "bucket int, n bigint, batch_id long"
 
 
 def bucketize_counts(batch: DataFrame, value_col: str, edges: list[float]) -> DataFrame:
@@ -103,40 +105,30 @@ def drift_monitor_batch(
     # scanned exactly once (write-then-reaggregate would scan twice)
     rows = bucketize_counts(batch_df, value_col, edges).collect()
     batch_counts = {r["bucket"]: r["n"] for r in rows}
+    # cumulative side: |batches|×|buckets| rows — grid-sized, read
+    # before anything is written (an unreadable log raises with both
+    # sinks untouched): the log minus this batch's own partition plus
+    # its counts, so a retry does not meet its first attempt. The
+    # read is generation-resolved: counts are additive, so a read
+    # overlapping a compact_drift_counts fold must not double them.
+    cum_counts = dict(batch_counts)
+    log = read_state(spark, counts_dir, _COUNTS_SCHEMA).filter(
+        F.col("batch_id") != F.lit(int(batch_id))
+    )
+    for r in log.groupBy("bucket").agg(F.sum("n").alias("n")).collect():
+        cum_counts[r["bucket"]] = cum_counts.get(r["bucket"], 0) + r["n"]
     if batch_counts:
         counts = spark.createDataFrame(
             [(b, n, int(batch_id)) for b, n in batch_counts.items()],
-            "bucket int, n bigint, batch_id long",
+            _COUNTS_SCHEMA,
         )
         with partition_overwrite(spark, "dynamic"):
             counts.write.mode("overwrite").partitionBy("batch_id").parquet(
                 counts_dir
             )
     # else: every monitored value in the batch was NULL — nothing to
-    # count (writing zero partitions would leave a schema-less dir
-    # that breaks the next read), but the verdict row below still
-    # lands so the log has one row per non-empty batch
-
-    # cumulative side: |batches|×|buckets| rows — grid-sized. The log
-    # dir may not exist yet if every batch so far was all-NULL.
-    from pyspark.errors import AnalysisException
-
-    from .compaction import read_live_state
-
-    try:
-        # read_live_state: atomic vs a concurrent compact_drift_counts
-        # (counts are additive — a naive read overlapping a fold
-        # would double the cumulative PSI denominator)
-        log = read_live_state(spark, counts_dir)
-        cum_counts = {
-            r["bucket"]: r["sum(n)"]
-            for r in log.groupBy("bucket").agg(F.sum("n")).collect()
-        }
-    except AnalysisException as e:
-        cls = error_condition(e)
-        if cls not in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
-            raise
-        cum_counts = {}
+    # count, but the verdict row below still lands so the log has one
+    # row per non-empty batch
     psi_batch = psi_from_counts(batch_counts, ref_fracs)
     psi_cum = psi_from_counts(cum_counts, ref_fracs)
     verdict = spark.createDataFrame(

@@ -30,8 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.sampling import budget_take
-from ..functions.errors import error_condition
-from ..functions.generations import path_exists
+from ..functions.generations import read_state
 from ..functions.confs import partition_overwrite
 from ..functions.sqltext import pin_sql_text_conf
 from ..operators.text import ws_tokens
@@ -39,21 +38,10 @@ from ..operators.text import ws_tokens
 def _load_kept(
     spark: SparkSession, kept_dir: str, group_col: str, weight_col: str
 ) -> DataFrame:
-    """Missing dir = first batch → empty. Only path-not-found is
-    absorbed; any other failure raises (a silently-empty carry would
-    over-take every budget — same policy as streaming/dedup.py)."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        return spark.read.parquet(kept_dir)
-    except AnalysisException as e:
-        cls = error_condition(e)
-        if cls == "PATH_NOT_FOUND" or not path_exists(spark, kept_dir):
-            return spark.createDataFrame(
-                [],
-                f"{group_col} string, {weight_col} bigint, batch_id int",
-            )
-        raise
+    """The rows kept so far (empty before the first batch)."""
+    return read_state(
+        spark, kept_dir, f"{group_col} string, {weight_col} bigint, batch_id int"
+    )
 
 
 def mixture_increment_batch(
@@ -93,10 +81,9 @@ def mixture_increment_batch(
     kept = kept.localCheckpoint(eager=True)  # compute once: emptiness
     # probe + write must see the same rows
     if kept.isEmpty():
-        # nothing kept (budgets exhausted or all groups unlisted):
-        # writing an empty partitioned frame would create a dir with
-        # only _SUCCESS, and the NEXT batch's state read would die on
-        # UNABLE_TO_INFER_SCHEMA instead of seeing "no carry yet"
+        # budgets exhausted or every group unlisted; a zero-row dynamic
+        # overwrite would leave a first carry an empty directory, which
+        # read_state refuses
         return
     with partition_overwrite(spark, "dynamic"):
         (

@@ -6,6 +6,7 @@ fixture data; nothing in the engine imports this module.
 
 from __future__ import annotations
 
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
@@ -101,3 +102,22 @@ def _s_stem_col(x):
         )
         .otherwise(x)
     )
+
+
+# operators/zorder.py
+def zvalue(cols: list[Column], *, bits: int) -> Column:
+    """Interleave the low ``bits`` bits of each (long, non-negative,
+    already range-reduced) column: result bit ``b*len(cols)+i`` is bit
+    ``b`` of ``cols[i]``. Fits in a long for bits*len(cols) <= 63."""
+    n = len(cols)
+    if bits * n > 63:
+        raise ValueError("interleaved key must fit in a signed long")
+    out: Column | None = None
+    for i, c in enumerate(cols):
+        for b in range(bits):
+            term = F.shiftleft(
+                F.shiftright(c, b).bitwiseAND(F.lit(1)), b * n + i
+            )
+            out = term if out is None else out.bitwiseOR(term)
+    assert out is not None
+    return out

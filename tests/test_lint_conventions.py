@@ -12,7 +12,11 @@ driver-sized. These greps pin that convention:
 - the set of engine modules calling ``createDataFrame`` is CLOSED —
   a new call site fails here until a human confirms the frame is
   driver-sized (empty-state schema frames, collected model state,
-  band/centroid/offset tables) and adds the module below.
+  band/centroid/offset tables) and adds the module below;
+- the set of engine modules catching ``AnalysisException`` is CLOSED
+  too: state reads go through ``functions/generations.read_state``,
+  and only the two index-probe race fences read the error class
+  themselves.
 """
 
 from __future__ import annotations
@@ -29,13 +33,9 @@ ENGINE = pathlib.Path(__file__).parent.parent / "finance_etl_system_spark"
 # ExistingRDD and silently evade both plan lints.
 _CREATE_DATAFRAME_ALLOWED = {
     "functions/frames.py",      # literal_frame itself (LocalTableScan path)
+    "functions/generations.py", # read_state's empty state frame
     "queries/text.py",          # collected driver-side summaries
-    "streaming/dedup.py",       # empty _SIG_SCHEMA state frame
-    "streaming/chunkgate.py",   # empty _STATE_SCHEMA state frame
-    "streaming/classifier.py",  # empty audit frame
-    "streaming/mixture.py",     # empty carry frame
     "streaming/quality.py",     # per-batch verdict rows (O(rules))
-    "streaming/boilerplate.py", # empty _COUNT_SCHEMA state frame
     "streaming/drift.py",       # per-batch histogram counts (O(edges))
     "operators/bpe.py",         # merge table (O(vocab))
     "operators/similarity.py",  # kNN query set (driver-k by contract)
@@ -111,3 +111,25 @@ def test_create_dataframe_call_sites_are_closed():
     # anti-rot: drop entries whose call sites disappeared
     stale = _CREATE_DATAFRAME_ALLOWED - using
     assert not stale, f"stale allowlist entries: {sorted(stale)}"
+
+
+# read_state, plus the probe fences that read a mid-overwrite meta as a
+# retryable race (pq._verify_probe_consistency,
+# similarity._verify_ivf_probe_consistency)
+_ANALYSIS_EXCEPTION_ALLOWED = {
+    "functions/generations.py",
+    "operators/pq.py",
+    "operators/similarity.py",
+}
+
+
+def test_analysis_exception_catch_sites_are_closed():
+    using = {
+        str(p.relative_to(ENGINE))
+        for p in _engine_files()
+        if "except AnalysisException" in p.read_text()
+    }
+    assert using == _ANALYSIS_EXCEPTION_ALLOWED, (
+        "a state read must go through functions/generations.read_state, "
+        f"not its own except AnalysisException: {sorted(using)}"
+    )

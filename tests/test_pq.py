@@ -13,6 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from finance_etl_system_spark.catalog import load_table
+from finance_etl_system_spark.functions.generations import hadoop_fs
 from finance_etl_system_spark.operators.pq import (
     PQModel,
     _normalize,
@@ -506,7 +507,6 @@ def test_ivf_pq_append_refused_during_compaction(spark, corpus, tmp_path):
     from finance_etl_system_spark.operators.similarity import (
         _append_lease,
         _compact_marker,
-        _ivf_fs,
     )
 
     path = str(tmp_path / "ivfpq")
@@ -514,7 +514,7 @@ def test_ivf_pq_append_refused_during_compaction(spark, corpus, tmp_path):
         corpus.filter(F.col("vec_id") >= 100), path, dim=DIM,
         k_clusters=3, m=M, k_codes=K_CODES, id_col="vec_id",
     )
-    fs, HPath = _ivf_fs(spark, path)
+    fs, HPath = hadoop_fs(spark, path)
     marker = HPath(_compact_marker(path))
     assert fs.createNewFile(marker)  # a compaction is "in flight"
     tail = corpus.filter(F.col("vec_id") < 100)

@@ -7,6 +7,7 @@ from __future__ import annotations
 import pytest
 
 from finance_etl_system_spark.catalog import load_table
+from finance_etl_system_spark.functions.generations import hadoop_fs
 from finance_etl_system_spark.operators.similarity import (
     cosine_topk_bruteforce,
     cosine_topk_ivf,
@@ -556,7 +557,6 @@ def test_ivf_append_refused_during_compaction(spark, tmp_path):
     from finance_etl_system_spark.catalog import load_table
     from finance_etl_system_spark.operators.similarity import (
         _compact_marker,
-        _ivf_fs,
         append_to_ivf_index,
         build_ivf_index,
         compact_ivf_index,
@@ -567,7 +567,7 @@ def test_ivf_append_refused_during_compaction(spark, tmp_path):
     build_ivf_index(
         e.filter(F.col("vec_id") < 300), path, k_clusters=3, id_col="vec_id"
     )
-    fs, HPath = _ivf_fs(spark, path)
+    fs, HPath = hadoop_fs(spark, path)
     marker = HPath(_compact_marker(path))
     assert fs.createNewFile(marker)  # a compaction is "in flight"
     tail = e.filter(F.col("vec_id") >= 300)
@@ -647,7 +647,6 @@ def test_verify_ivf_index_detects_crash_and_replay_residue(
     from finance_etl_system_spark.catalog import load_table
     from finance_etl_system_spark.operators.similarity import (
         _compact_marker,
-        _ivf_fs,
         append_to_ivf_index,
         build_ivf_index,
         verify_ivf_index,
@@ -699,7 +698,7 @@ def test_verify_ivf_index_detects_crash_and_replay_residue(
     assert rep["bad_cluster_rows"] == 3 and not rep["consistent"]
 
     # stale compaction residue
-    fs, HPath = _ivf_fs(spark, path)
+    fs, HPath = hadoop_fs(spark, path)
     fs.createNewFile(HPath(_compact_marker(path)))
     fs.mkdirs(HPath(f"{path}/vectors.staging"))
     rep = verify_ivf_index(spark, path)
@@ -721,7 +720,6 @@ def test_ivf_two_flag_protocol_append_lease_vs_compaction(
     from finance_etl_system_spark.operators.similarity import (
         _append_lease,
         _compact_marker,
-        _ivf_fs,
         append_to_ivf_index,
         build_ivf_index,
         compact_ivf_index,
@@ -733,7 +731,7 @@ def test_ivf_two_flag_protocol_append_lease_vs_compaction(
     build_ivf_index(
         e.filter(F.col("vec_id") < 300), path, k_clusters=3, id_col="vec_id"
     )
-    fs, HPath = _ivf_fs(spark, path)
+    fs, HPath = hadoop_fs(spark, path)
 
     # 1) in-flight append (its lease is on disk) -> compaction backs
     #    off AND releases its own marker so the append can finish

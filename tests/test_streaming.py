@@ -668,9 +668,8 @@ def test_stream_dedup_all_duplicate_batch_keeps_state_readable(
     spark, tmp_path
 ):
     """A batch whose docs ALL duplicate history writes no survivors —
-    and must not leave an empty partitioned dir that breaks the next
-    batch's state read (UNABLE_TO_INFER_SCHEMA on a _SUCCESS-only
-    directory)."""
+    and the next batch must still read the state and dedupe against
+    it."""
     from finance_etl_system_spark.streaming.dedup import (
         dedup_increment_batch,
     )

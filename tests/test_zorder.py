@@ -14,7 +14,6 @@ from pyspark.sql import functions as F
 from finance_etl_system_spark.catalog import load_table
 from finance_etl_system_spark.operators.zorder import (
     cluster_by_zvalue,
-    zvalue,
     zvalue_sql,
 )
 from finance_etl_system_spark.queries.layout import (
@@ -23,6 +22,7 @@ from finance_etl_system_spark.queries.layout import (
     _EPOCH,
     q_zorder_stats,
 )
+from tests.column_refs import zvalue
 from tests.conftest import SF_SMOKE
 
 
@@ -72,7 +72,7 @@ def test_zorder_buckets_have_tighter_boxes_than_row_order(spark):
         .bitwiseAND(F.lit(MASK))
         .alias("day"),
     )
-    z = zvalue([F.col("ck"), F.col("day")], bits=BITS)
+    z = F.expr(zvalue_sql(["ck", "day"], bits=BITS))
     zdf = o.withColumn("z", z).withColumn(
         "bucket", F.ntile(16).over(Window.orderBy("z"))
     )
@@ -90,7 +90,7 @@ def test_clustered_parquet_files_prune_both_dimensions(spark, tmp_path):
         .bitwiseAND(F.lit(MASK))
         .alias("day"),
     )
-    z = zvalue([F.col("ck"), F.col("day")], bits=BITS)
+    z = F.expr(zvalue_sql(["ck", "day"], bits=BITS))
     out = str(tmp_path / "zorders")
     cluster_by_zvalue(o, z, num_files=8).write.parquet(out)
     spans_c, spans_d = [], []
