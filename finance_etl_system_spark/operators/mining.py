@@ -78,14 +78,19 @@ def mine_triplets(
         df, vec_col=vec_col, id_col=id_col, k=k_clusters,
         max_iter=max_iter, compute_inertia=False,
     )
-    assigned = kmeans_assign(df, model.centroids, vec_col=vec_col).select(
-        F.col(id_col).alias("_id"),
-        F.col(vec_col).cast("array<double>").alias("_v"),
-        "cluster",
-        (F.pmod(F.xxhash64(F.col(id_col)), F.lit(anchor_mod)) == 0).alias(
-            "_is_anchor"
-        ),
-        F.xxhash64(F.col(id_col)).alias("_h"),
+    # the hash is its own projection: spelled twice in one select, it
+    # is a common subexpression, and Spark orders those by expression
+    # ids, so the generated code would differ from run to run
+    assigned = (
+        kmeans_assign(df, model.centroids, vec_col=vec_col)
+        .withColumn("_h", F.xxhash64(F.col(id_col)))
+        .select(
+            F.col(id_col).alias("_id"),
+            F.col(vec_col).cast("array<double>").alias("_v"),
+            "cluster",
+            (F.pmod(F.col("_h"), F.lit(anchor_mod)) == 0).alias("_is_anchor"),
+            "_h",
+        )
     )
 
     out_schema = (

@@ -824,21 +824,15 @@ def _cosine_topk_ivf_index_once(
     # the meta table names the INDEX's columns; the caller's vec_col
     # keeps naming the QUERY frame's vector column — conflating the
     # two would silently score with the wrong query column whenever
-    # the names differ. Only a pre-meta index layout (no meta yet)
-    # falls back to inference.
+    # the names differ. Every index build_ivf_index writes has a meta
+    # row, so a missing or empty meta table is a broken index.
     meta = read_state(spark, f"{path}/meta", _IVF_META_SCHEMA).head()
-    if meta is not None:
-        id_col, index_vec_col = meta["id_col"], meta["vec_col"]
-    else:  # pre-meta index layout: infer, but FAIL loudly
-        index_vec_col = vec_col
-        cands = [c for c in vectors.columns if c not in (vec_col, "cluster")]
-        if len(cands) != 1:
-            raise ValueError(
-                f"index at {path} has no meta table and an ambiguous "
-                f"id column (candidates {cands}); rebuild with "
-                "build_ivf_index"
-            )
-        id_col = cands[0]
+    if meta is None:
+        raise ValueError(
+            f"IVF index at {path} has no meta table (or an empty one);"
+            " rebuild it with build_ivf_index"
+        )
+    id_col, index_vec_col = meta["id_col"], meta["vec_col"]
     for col, what in ((id_col, "id"), (index_vec_col, "vector")):
         if col not in vectors.columns:
             raise ValueError(

@@ -670,9 +670,9 @@ def score_from_blob(
       groups, where the broadcast dict would OOM the driver. Costs one
       extra shuffle of the (group-sized) model table — negligible next
       to the data shuffle both strategies pay.
-    - ``auto`` (default): count the model table (cheap — it is the
-      small side by construction) and pick cogroup above
-      ``_BROADCAST_GROUP_CEILING`` groups.
+    - ``auto`` (default): collect at most ``_BROADCAST_GROUP_CEILING``
+      + 1 model rows (the small side by construction) in one job, and
+      broadcast them, or pick cogroup when the ceiling is exceeded.
 
     The feature matrix is built from the ``feature_cols`` serialized
     INSIDE each blob (that is why blob_dumps stores them) — the
@@ -683,12 +683,18 @@ def score_from_blob(
     """
     if strategy not in ("auto", "broadcast", "cogroup"):
         raise ValueError(f"unknown strategy {strategy!r}")
-    if strategy == "auto":
-        strategy = (
-            "broadcast"
-            if models.count() <= _BROADCAST_GROUP_CEILING
-            else "cogroup"
-        )
+    if strategy != "cogroup":
+        model_rows = models.select("group_key", "model_blob")
+        if strategy == "auto":
+            # one bounded collect both decides and feeds the broadcast:
+            # at most ceiling + 1 rows reach the driver, the broadcast
+            # path's own budget at the ceiling
+            model_rows = model_rows.limit(_BROADCAST_GROUP_CEILING + 1)
+        rows = model_rows.collect()
+        if strategy == "auto":
+            strategy = (
+                "broadcast" if len(rows) <= _BROADCAST_GROUP_CEILING else "cogroup"
+            )
     expect = set(feature_cols) if feature_cols is not None else None
     schema = T.StructType(
         df.schema.fields + [T.StructField(prediction_col, T.DoubleType())]
@@ -727,7 +733,6 @@ def score_from_blob(
             .applyInPandas(score_co, schema=schema)
         )
 
-    rows = models.select("group_key", "model_blob").collect()
     blobs = {r["group_key"]: bytes(r["model_blob"]) for r in rows}
     bc = df.sparkSession.sparkContext.broadcast(blobs)
 

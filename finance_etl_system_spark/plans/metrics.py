@@ -95,3 +95,14 @@ def executed_metrics(df: DataFrame, *, execute: bool = False) -> dict[str, Any]:
         "broadcast_bytes": broadcast_bytes,
         "peak_memory": peak_memory,
     }
+
+
+def codegen_compiles(spark) -> int:
+    """Classes Janino has compiled in this JVM so far.
+
+    Reads ``CodegenMetrics.METRIC_COMPILATION_TIME``'s count, which
+    grows by one per cache miss of Spark's generated-class cache; a
+    hit compiles nothing. The difference across a warm re-run of a
+    query is the code it generates anew each run."""
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(codegen.METRIC_COMPILATION_TIME().getCount())

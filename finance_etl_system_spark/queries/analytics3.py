@@ -278,24 +278,27 @@ def q_customer_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     the count still ordering 1/3/6+ months later — the two-level
     aggregate + conditional-count shape every growth dashboard runs.
 
-    Both aggregations key on o_custkey first, so the cohort join rides
-    the same hash partitioning; month arithmetic is integer (yyyy*12+mm)
-    on both engines.
+    Month arithmetic is integer (yyyy*12+mm) on both engines. Each
+    customer is in exactly one cohort, so one aggregate per customer
+    (cohort month, last month ordered) turns the four distinct counts
+    into plain conditional counts: no Expand of every row four times,
+    and none of the run-varying Expand order Spark plans for several
+    distinct aggregates.
     """
     o = load_table(spark, sf_dir, "orders")
     mon = F.year("o_orderdate") * 12 + F.month("o_orderdate") - 1
-    per_cust = o.select(F.col("o_custkey").alias("ck"), mon.alias("mon"))
-    first = per_cust.groupBy("ck").agg(F.min("mon").alias("cohort_mon"))
-    j = per_cust.join(first, "ck")
-    age = F.col("mon") - F.col("cohort_mon")
+    per_cust = (
+        o.where(F.col("o_custkey").isNotNull())
+        .groupBy("o_custkey")
+        .agg(F.min(mon).alias("cohort_mon"), F.max(mon).alias("last_mon"))
+        .select("cohort_mon", (F.col("last_mon") - F.col("cohort_mon")).alias("age"))
+    )
+    active = [
+        F.count(F.when(F.col("age") >= m, 1)).alias(f"active_{m}mo") for m in (1, 3, 6)
+    ]
     return (
-        j.groupBy("cohort_mon")
-        .agg(
-            F.countDistinct("ck").alias("cohort_size"),
-            F.countDistinct(F.when(age >= 1, F.col("ck"))).alias("active_1mo"),
-            F.countDistinct(F.when(age >= 3, F.col("ck"))).alias("active_3mo"),
-            F.countDistinct(F.when(age >= 6, F.col("ck"))).alias("active_6mo"),
-        )
+        per_cust.groupBy("cohort_mon")
+        .agg(F.count(F.lit(1)).alias("cohort_size"), *active)
         .orderBy("cohort_mon")
     )
 

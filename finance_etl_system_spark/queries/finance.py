@@ -486,7 +486,10 @@ def q_rolling_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     x = daily.filter(F.col("symbol") == 1).select("d", F.col("ticks").alias("x"))
     y = daily.filter(F.col("symbol") == 2).select("d", F.col("ticks").alias("y"))
-    j = x.join(y, "d")
+    # the hint fixes the build side at plan time; left to AQE, it is
+    # whichever daily series finishes first, and the generated code
+    # differs from run to run
+    j = x.join(F.broadcast(y), "d")
     w = Window.orderBy("d").rowsBetween(-(_ROLL_CORR_WIN - 1), 0)
     n = F.count(F.lit(1)).over(w)
     sx, sy = F.sum("x").over(w), F.sum("y").over(w)

@@ -198,7 +198,10 @@ def embedding_centroids_frame(e: DataFrame) -> DataFrame:
         e=e,
     ).localCheckpoint(eager=True)  # |labels| rows; reused for the
     # dirty probe and the output without a second corpus scan
-    if wide.filter(F.col("_nbad") > 0).limit(1).count() > 0:
+    # a max, not filter().limit(1).count(): Spark names a limit's
+    # codegen counter from a JVM-wide sequence, so a limit inside a
+    # generated stage recompiles on every run
+    if wide.agg(F.max("_nbad")).head()[0]:
         # some label has ragged/null-element vectors: per-dim counts
         # genuinely differ from _nv — run the exact form (costs the
         # extra 64 COUNT aggregates only on dirty data)

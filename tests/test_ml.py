@@ -567,6 +567,37 @@ def test_score_from_blob_cogroup_matches_broadcast(spark, nonlinear_df):
     assert (a["prediction"] == b["prediction"]).all()
 
 
+def test_score_from_blob_auto_picks_by_ceiling(spark, nonlinear_df, monkeypatch):
+    """``strategy="auto"`` decides from one bounded collect: above the
+    ceiling it cogroups, at or below it broadcasts, and both give the
+    explicit broadcast strategy's predictions."""
+    from finance_etl_system_spark.pipeline import trees
+
+    monkeypatch.setattr(trees, "_BROADCAST_GROUP_CEILING", 1)
+    models = trees.train_gbt_per_group(
+        nonlinear_df, group_col="g", feature_cols=["x"], target_col="y",
+        time_col="t",
+    ).cache()
+    kw = dict(group_col="g", feature_cols=["x"])
+
+    def picked(scored):
+        plan = scored._jdf.queryExecution().analyzed().toString()
+        return "cogroup" if "FlatMapCoGroups" in plan else "broadcast"
+
+    def preds(scored):
+        pdf = scored.toPandas().sort_values(["g", "t"]).reset_index(drop=True)
+        return pdf["prediction"].tolist()
+
+    for groups, want in ((["g1", "g2"], "cogroup"), (["g1"], "broadcast")):
+        sub = models.filter(F.col("group_key").isin(groups))
+        auto = trees.score_from_blob(nonlinear_df, sub, strategy="auto", **kw)
+        ref = trees.score_from_blob(nonlinear_df, sub, strategy="broadcast", **kw)
+        assert picked(auto) == want
+        assert picked(ref) == "broadcast"
+        assert preds(auto) == preds(ref)
+    models.unpersist()
+
+
 def test_score_from_blob_cogroup_many_groups_no_collect(spark, monkeypatch):
     """10k model groups scored via cogroup with DataFrame.collect
     forbidden — nothing model-sized may touch the driver (the judge's

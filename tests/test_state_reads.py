@@ -330,9 +330,11 @@ class IvfMeta(Site):
         )
 
     def read(self, spark, root):
-        # no meta: the probe takes the pre-meta path and infers the id
-        # column, which the batch_id partition column makes ambiguous
-        with pytest.raises(ValueError, match="no meta table"):
+        # a missing or empty meta table is a broken index: the probe
+        # names the path and the builder that writes the meta row
+        with pytest.raises(
+            ValueError, match=rf"{root}/ivf has no meta table.*build_ivf_index"
+        ):
             self._probe(spark, root)
 
     def run(self, spark, root):
