@@ -186,6 +186,7 @@ def main() -> None:
 
     timings: dict[str, float] = {}
     io: dict[str, dict] = {}
+    gaps: dict[str, str] = {}  # query -> why its IO counters are missing
     total = 0.0
     for name in names:
         fn = qs[name]
@@ -212,8 +213,8 @@ def main() -> None:
                 "scan_rows": m["scan_rows"],
                 "shuffle_write_bytes": m["shuffle_write_bytes"],
             }
-        except Exception:  # noqa: BLE001 — metrics are best-effort
-            pass
+        except Exception as e:  # noqa: BLE001 — recorded as a gap
+            gaps[name] = repr(e)[:200]
 
     # The driver captures a bounded (~500B) TAIL of stdout; the
     # 75-query per-query map pushed the headline line past that window
@@ -251,7 +252,8 @@ def main() -> None:
         io_path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
                                "bench_io.json")
         with open(io_path, "w") as fh:
-            json.dump({"sf": sf, "io": io}, fh, indent=1, sort_keys=True)
+            json.dump({"sf": sf, "io": io, "gaps": gaps}, fh, indent=1,
+                      sort_keys=True)
     except OSError:
         pass  # a read-only checkout must not fail the bench
     try:

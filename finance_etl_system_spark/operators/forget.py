@@ -164,40 +164,26 @@ def forget_documents(
              b, read_live_state(spark, postings).count())
         )
 
-    if ivf_index is not None:
-        from .similarity import compact_ivf_index, verify_ivf_index
+    from .pq import compact_ivf_pq_index, verify_ivf_pq_index
+    from .similarity import compact_ivf_index, verify_ivf_index
 
-        vectors = f"{ivf_index}/vectors"
-        b = spark.read.parquet(vectors).count()
-        compact_ivf_index(
-            spark, ivf_index,
+    for artifact, root, table, compact, verify in (
+        ("ivf_index", ivf_index, "vectors", compact_ivf_index, verify_ivf_index),
+        ("ivf_pq_index", ivf_pq_index, "codes",
+         compact_ivf_pq_index, verify_ivf_pq_index),
+    ):
+        if root is None:
+            continue
+        b = spark.read.parquet(f"{root}/{table}").count()
+        compact(
+            spark, root,
             deleted_ids=ids.select(F.col("_del_id").alias("vec_id")),
         )
-        ver = verify_ivf_index(spark, ivf_index)
+        ver = verify(spark, root)
         if not ver["consistent"]:
-            raise RuntimeError(f"IVF index inconsistent after forget: {ver}")
+            raise RuntimeError(f"{artifact} inconsistent after forget: {ver}")
         audit.append(
-            ("ivf_index", "vectors",
-             b, spark.read.parquet(vectors).count())
-        )
-
-    if ivf_pq_index is not None:
-        from .pq import compact_ivf_pq_index, verify_ivf_pq_index
-
-        codes = f"{ivf_pq_index}/codes"
-        b = spark.read.parquet(codes).count()
-        compact_ivf_pq_index(
-            spark, ivf_pq_index,
-            deleted_ids=ids.select(F.col("_del_id").alias("vec_id")),
-        )
-        ver = verify_ivf_pq_index(spark, ivf_pq_index)
-        if not ver["consistent"]:
-            raise RuntimeError(
-                f"IVF-PQ index inconsistent after forget: {ver}"
-            )
-        audit.append(
-            ("ivf_pq_index", "codes",
-             b, spark.read.parquet(codes).count())
+            (artifact, table, b, spark.read.parquet(f"{root}/{table}").count())
         )
 
     if dedup_state is not None:

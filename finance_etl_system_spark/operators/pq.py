@@ -57,8 +57,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.confs import partition_overwrite
 from ..functions.generations import hadoop_fs
+from . import ivfstore
 from .quantize import _round_half_away
 
 
@@ -659,6 +659,14 @@ def pq_topk_adc(
     )
 
 
+IVF_PQ = ivfstore.Layout(
+    "ivf_pq",
+    "codes",
+    "id_col string, vec_col string, k_clusters int, m int, k_codes int,"
+    " dim int, space string",
+)
+
+
 def build_ivf_pq_index(
     corpus: DataFrame,
     path: str,
@@ -689,8 +697,7 @@ def build_ivf_pq_index(
       appends rotate with it and a compaction never touches it
       (codes-only fold). The AUTHORITATIVE space flag is the meta
       table's ``space`` column ("opq"/"plain"), written LAST as the
-      commit marker — rotation-table presence alone is only the
-      legacy fallback for indexes built before the column existed
+      commit; a plain rebuild removes a stale rotation after it
 
     ``opq=True`` (or ``"p"``) runs the FAISS ``OPQ<m>,IVF<k>,PQ<m>``
     composition with the parametric eigen-allocation rotation;
@@ -714,23 +721,11 @@ def build_ivf_pq_index(
     spark = corpus.sparkSession
     # NOTHING under ``path`` is touched until every training phase
     # has finished: a failure during the (long) OPQ / k-means / PQ
-    # train over an existing index leaves the OLD index fully intact
-    # and consistent (review finding r9 — the previous up-front
-    # rotation delete could un-flag old rotated codes, so a crashed
-    # rebuild would serve UNROTATED probes against rotated codes).
-    # Once writes start, a ``_BUILDING`` sentinel guards the
-    # inter-table crash windows (r10 review finding: old meta over
-    # partly-new tables can MIX SPACES — e.g. plain-meta over freshly
-    # rotated codes — and no flag consistency check can see it): the
-    # sentinel is created before the first overwrite and removed only
-    # after the meta commit, and every reader (probe / append /
-    # compact / health / verify) fails loudly while it exists.
-    # The entry check alone is check-then-read; probes therefore
-    # RE-VALIDATE after materializing their scan
-    # (_verify_probe_consistency): marker re-check + meta build_id
-    # compare detects a rebuild that started — or even fully
-    # committed — inside the probe window, closing the advisor-r10
-    # residual race without a maintenance-window convention.
+    # train over an existing index leaves the OLD index fully intact.
+    # The writes then run under the store's build fence
+    # (operators/ivfstore.build): old meta over partly-new tables can
+    # MIX SPACES (e.g. plain meta over freshly rotated codes), which no
+    # flag consistency check can see.
     if opq:
         if opq == "np":
             # final_pq_iters=0: only R is needed — the index retrains
@@ -749,7 +744,8 @@ def build_ivf_pq_index(
         corpus, vec_col=vec_col, id_col=id_col, k=k_clusters,
         max_iter=max_iter, compute_inertia=False,
     )
-    cents_hat = _normalize(np.asarray(coarse.centroids, dtype=np.float64))
+    raw_cents = np.asarray(coarse.centroids, dtype=np.float64)
+    cents_hat = _normalize(raw_cents)
     assigned = kmeans_assign(corpus, coarse.centroids, vec_col=vec_col)
     model = pq_train(
         assigned,
@@ -769,194 +765,68 @@ def build_ivf_pq_index(
         cluster_col="cluster",
         residual_centroids=cents_hat,
     )
-    from .similarity import (
-        _build_marker,
-        _compact_marker,
-        _live_append_leases,
-    )
-
-    fs, HPath = hadoop_fs(spark, path)
-    fs.mkdirs(HPath(path))
-    marker = HPath(_build_marker(path))
-    if not fs.createNewFile(marker):
-        raise RuntimeError(
-            f"IVF-PQ index at {path} already has a _BUILDING marker:"
-            " another rebuild is running, or a previous one crashed"
-            " mid-write (the tables may mix spaces). After confirming"
-            " no rebuild is running, delete the marker and rerun — "
-            "the same manual-heal protocol as _COMPACTING"
-        )
-    # the two-flag protocol in the BUILD direction (r10 review): the
-    # marker is taken FIRST (fences new appends/compactions), THEN
-    # in-flight writers are checked — whichever way a rebuild and an
-    # append/compaction interleave, at least one observes the other.
-    # Without this, an append racing the rebuild could encode against
-    # the OLD model and land its batch in the NEW codes table.
-    try:
-        if fs.exists(HPath(_compact_marker(path))):
-            raise RuntimeError(
-                f"IVF-PQ index at {path} is being compacted"
-                " (_COMPACTING marker present); rebuild after the"
-                " compaction finishes — its directory swap would"
-                " promote old-model codes over this build"
-            )
-        leases = _live_append_leases(fs, HPath, path)
-        if leases:
-            raise RuntimeError(
-                f"IVF-PQ index at {path} has in-flight appends"
-                f" ({leases}); rebuild after they finish — a racing"
-                " append would land old-model codes in the new table"
-            )
-    except Exception:
-        fs.delete(marker, False)  # back off: leave no stale fence
-        raise
-    with partition_overwrite(spark, "static"):
-        (
-            codes.select(
-                id_col, "codes", F.lit(0).alias("batch_id"), "cluster"
-            )
-            .write.mode("overwrite")
-            .partitionBy("batch_id", "cluster")
-            .parquet(f"{path}/codes")
-        )
-    raw_cents = np.asarray(coarse.centroids, dtype=np.float64)
-    spark.createDataFrame(
-        [(int(i), [float(x) for x in c]) for i, c in enumerate(raw_cents)],
-        "cluster int, centroid array<double>",
-    ).write.mode("overwrite").parquet(f"{path}/centroids")
     cb = model.codebooks
-    spark.createDataFrame(
-        [
-            (s, j, [float(x) for x in cb[s, j]])
-            for s in range(m)
-            for j in range(k_codes)
-        ],
-        "sub int, code int, vec array<double>",
-    ).write.mode("overwrite").parquet(f"{path}/codebooks")
-    if R is not None:
-        spark.createDataFrame(
+    tables = {
+        "centroids": spark.createDataFrame(
+            [(int(i), [float(x) for x in c]) for i, c in enumerate(raw_cents)],
+            "cluster int, centroid array<double>",
+        ),
+        "codebooks": spark.createDataFrame(
+            [
+                (s, j, [float(x) for x in cb[s, j]])
+                for s in range(m)
+                for j in range(k_codes)
+            ],
+            "sub int, code int, vec array<double>",
+        ),
+        # a plain rebuild over an OPQ index: the stale rotation is
+        # inert once meta says plain, and removed after the commit
+        "rotation": None if R is None else spark.createDataFrame(
             [(int(i), [float(x) for x in row]) for i, row in enumerate(R)],
             "row int, vec array<double>",
-        ).write.mode("overwrite").parquet(f"{path}/rotation")
-    # meta LAST — its ``space`` column is the commit marker probes
-    # trust; a crash before this line leaves the OLD meta, whose
-    # space flag still matches the OLD rotation state. ``build_id``
-    # (wall-clock ns — uniqueness is all that matters) lets a probe
-    # detect a WHOLE rebuild that started and committed inside its
-    # own read window: same-params rebuilds leave every other meta
-    # byte identical, and the _BUILDING marker is already gone by the
-    # probe's post-scan re-check (_verify_probe_consistency).
-    import time as _time
-
-    spark.createDataFrame(
-        [(
+        ),
+    }
+    ivfstore.build(
+        spark, path, IVF_PQ,
+        payload=codes.select(id_col, "codes", "cluster"),
+        tables=tables,
+        meta=(
             id_col, vec_col, int(k_clusters), int(m), int(k_codes),
             int(dim), "opq" if R is not None else "plain",
-            int(_time.time_ns()),
-        )],
-        "id_col string, vec_col string, k_clusters int, m int,"
-        " k_codes int, dim int, space string, build_id long",
-    ).write.mode("overwrite").parquet(f"{path}/meta")
-    if R is None:
-        # a plain rebuild over a previous OPQ index: the stale
-        # rotation is now inert (meta says plain, _load_rotation
-        # ignores it) — removed here only as tidy-up, AFTER the
-        # commit marker so a crash in between changes nothing
-        rot_path = HPath(f"{path}/rotation")
-        if fs.exists(rot_path):
-            fs.delete(rot_path, True)
-    fs.delete(marker, False)  # commit complete — readers may proceed
+        ),
+    )
     return model
 
 
-def _check_not_building(spark, path: str) -> None:
-    """Fail loudly if a rebuild sentinel exists: between
-    build_ivf_pq_index's first overwrite and its meta commit the
-    tables can MIX SPACES (rotated codes under a plain meta, or old-R
-    codes under new-R rotation) — states no flag-consistency check
-    can detect. Every index reader calls this first; probes
-    additionally re-validate AFTER their scan
-    (_verify_probe_consistency), which closes the check-then-read
-    race this entry check alone leaves open."""
-    from .similarity import _build_marker
-
-    fs, HPath = hadoop_fs(spark, path)
-    if fs.exists(HPath(_build_marker(path))):
-        raise RuntimeError(
-            f"IVF-PQ index at {path} has a _BUILDING marker: a"
-            " rebuild is in progress or crashed between table"
-            " overwrites — the codes/centroids/rotation/meta tables"
-            " may disagree on the vector space. After confirming no"
-            " rebuild is running, delete the marker and rerun"
-            " build_ivf_pq_index to completion before reading"
-        )
-
-
-def _verify_probe_consistency(spark, path: str, meta_entry: dict) -> None:
-    """Close the check-then-read race (advisor r10, verdict r11 #3):
-    the entry-time ``_check_not_building`` cannot protect a probe
-    whose scan a LATER rebuild overlaps. Called after the probe has
-    MATERIALIZED its codes scan (eager localCheckpoint) and before
-    its result is returned; raises loudly — the caller retries — if
-    any of three interleavings happened mid-probe:
-
-    - a rebuild is in flight NOW (``_BUILDING`` present): the scan
-      may have read half-old, half-new tables;
-    - a codes compaction is in flight NOW (``_COMPACTING``): the
-      directory swap may have doubled or dropped scanned partitions;
-    - a whole rebuild started AND committed inside the probe window
-      (both markers already gone): detected by comparing the meta
-      row — ``build_id`` changes every build even when all
-      parameters are identical.
-
-    After this check passes, the returned frame touches no index
-    table (the shortlist is checkpointed; the exact rerank joins the
-    caller's own corpus frame), so the result is consistent with the
-    single generation of the index that was live at entry."""
-    from pyspark.errors import AnalysisException
-
-    from ..functions.errors import error_condition
-    from .similarity import (
-        ProbeRaceError,
-        _build_marker,
-        _compact_marker,
+def _load_model(spark, path: str, meta) -> tuple:
+    """The frozen model every probe, append and health report uses:
+    (rotation or None, RAW coarse centroids (k, d), PQModel). The meta
+    row's ``space`` is authoritative: "opq" REQUIRES the rotation
+    table (missing ⇒ half-built index, fail loudly rather than serve
+    unrotated queries against rotated codes); "plain" ignores any
+    stale rotation."""
+    R = None
+    if meta["space"] == "opq":
+        fs, HPath = hadoop_fs(spark, path)
+        if not fs.exists(HPath(f"{path}/rotation")):
+            raise RuntimeError(
+                f"IVF-PQ index at {path} is half-built: meta declares"
+                " space='opq' but the rotation table is missing —"
+                " rebuild with build_ivf_pq_index(opq=...)"
+            )
+        rows = spark.read.parquet(f"{path}/rotation").orderBy("row").collect()
+        R = np.vstack([np.asarray(r["vec"], dtype=np.float64) for r in rows])
+    cent_rows = (
+        spark.read.parquet(f"{path}/centroids").orderBy("cluster").collect()
     )
-
-    fs, HPath = hadoop_fs(spark, path)
-    if fs.exists(HPath(_build_marker(path))):
-        raise ProbeRaceError(
-            f"IVF-PQ probe at {path} overlapped a rebuild"
-            " (_BUILDING appeared during the scan) — the shortlist"
-            " may mix old and new tables; retry the probe after the"
-            " rebuild finishes"
-        )
-    if fs.exists(HPath(_compact_marker(path))):
-        raise ProbeRaceError(
-            f"IVF-PQ probe at {path} overlapped a codes compaction"
-            " (_COMPACTING appeared during the scan); retry the"
-            " probe after the compaction finishes"
-        )
-    # Absorb a mid-overwrite meta (advisor r12): a concurrent rebuild
-    # between the old meta's delete and the new one's commit makes
-    # this read fail with PATH_NOT_FOUND/UNABLE_TO_INFER_SCHEMA or
-    # return zero rows — all three mean "meta changed under us",
-    # i.e. the retryable race, not a crash (mirrors
-    # _verify_ivf_probe_consistency in operators/similarity.py).
-    now = None
-    try:
-        rows = spark.read.parquet(f"{path}/meta").collect()
-        now = rows[0].asDict() if rows else None
-    except AnalysisException as e:
-        if error_condition(e) not in (
-            "PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"
-        ):
-            raise
-    if now != meta_entry:
-        raise ProbeRaceError(
-            f"IVF-PQ probe at {path} overlapped a completed rebuild"
-            f" (meta changed during the scan: {meta_entry!r} →"
-            f" {now!r}); retry the probe against the new index"
-        )
+    raw_cents = np.vstack(
+        [np.asarray(r["centroid"], dtype=np.float64) for r in cent_rows]
+    )
+    m, dim = int(meta["m"]), int(meta["dim"])
+    cb = np.zeros((m, int(meta["k_codes"]), dim // m))
+    for r in spark.read.parquet(f"{path}/codebooks").collect():
+        cb[r["sub"], r["code"]] = np.asarray(r["vec"], dtype=np.float64)
+    return R, raw_cents, PQModel(codebooks=cb, dim=dim)
 
 
 def cosine_topk_ivf_pq(
@@ -975,43 +845,6 @@ def cosine_topk_ivf_pq(
     retries: int = 2,
     _race_hook=None,
 ) -> DataFrame:
-    """Query a persisted IVF-PQ index with bounded self-heal: when
-    the post-scan consistency guard detects an overlapping rebuild or
-    compaction (``_verify_probe_consistency``), the probe simply
-    re-runs — entry re-resolves meta/fences, so the retry reads the
-    NEW index generation. Only the 'overlapped' detection retries
-    (up to ``retries`` times); a STANDING fence (a ``_BUILDING``
-    marker left by a crashed rebuild) raises the manual-heal entry
-    error on the next attempt and is never spun on."""
-    from .similarity import _retry_on_probe_race
-
-    return _retry_on_probe_race(
-        lambda hook: _cosine_topk_ivf_pq_once(
-            spark, path, queries, k=k, nprobe=nprobe,
-            rerank_with=rerank_with, rerank=rerank, query_id=query_id,
-            query_vec_col=query_vec_col, corpus_vec_col=corpus_vec_col,
-            verify_consistency=verify_consistency, _race_hook=hook,
-        ),
-        retries,
-        _race_hook,
-    )
-
-
-def _cosine_topk_ivf_pq_once(
-    spark,
-    path: str,
-    queries: DataFrame,
-    *,
-    k: int = 10,
-    nprobe: int = 2,
-    rerank_with: DataFrame | None = None,
-    rerank: int = 50,
-    query_id: str = "query_id",
-    query_vec_col: str = "embedding",
-    corpus_vec_col: str = "embedding",
-    verify_consistency: bool = True,
-    _race_hook=None,
-) -> DataFrame:
     """Query a persisted IVF-PQ index: route each query to its nprobe
     nearest coarse centroids (broadcast k-row table), push the routed
     cluster ids as a LITERAL partition filter (static pruning — the
@@ -1020,132 +853,114 @@ def _cosine_topk_ivf_pq_once(
     residual decomposition), shortlist per partition, exact-cosine
     rerank against ``rerank_with`` survivors.
 
-    OPQ indexes (a ``{path}/rotation`` table exists): queries rotate
-    into the index's space for routing and ADC; the exact rerank
-    keeps the caller's ORIGINAL vectors — cosine is rotation-
-    invariant, so the two spaces agree on the final scores."""
-    from .similarity import _as_double_sql, _cosine_sql, _route_queries
+    OPQ indexes (meta ``space`` = "opq"): queries rotate into the
+    index's space for routing and ADC; the exact rerank keeps the
+    caller's ORIGINAL vectors — cosine is rotation-invariant, so the
+    two spaces agree on the final scores.
 
-    _check_not_building(spark, path)
-    meta = spark.read.parquet(f"{path}/meta").collect()[0]
-    meta_entry = meta.asDict()
-    id_col, m = meta["id_col"], int(meta["m"])
-    R = _load_rotation(spark, path, meta_row=meta)
-    cent_rows = (
-        spark.read.parquet(f"{path}/centroids").orderBy("cluster").collect()
-    )
-    # persisted centroids are the RAW k-means means (the append path
-    # assigns with them); score offsets and routing want the
-    # normalized form — cosine routing is norm-invariant anyway
-    cents = _normalize(
-        np.vstack(
-            [np.asarray(r["centroid"], dtype=np.float64) for r in cent_rows]
-        )
-    )
-    cb_rows = spark.read.parquet(f"{path}/codebooks").collect()
-    cb = np.zeros((m, int(meta["k_codes"]), int(meta["dim"]) // m))
-    for r in cb_rows:
-        cb[r["sub"], r["code"]] = np.asarray(r["vec"], dtype=np.float64)
-
-    q_rows = queries.select(
-        F.col(query_id).alias("qid"),
-        F.col(query_vec_col).cast("array<double>").alias("qv"),
-    ).collect()
-    qids = [int(r["qid"]) for r in q_rows]
-    qx = _normalize(
-        np.vstack([np.asarray(r["qv"], dtype=np.float64) for r in q_rows])
-    )
-    if R is not None:
-        qx = qx @ R.T  # into the index's rotated space
-    luts = np.einsum("qsd,skd->qsk", _subspaces(qx, m), cb)
-    offsets = qx @ cents.T  # (nq, k_clusters): q̂·ĉ
-
-    centroids_df = spark.createDataFrame(
-        [(int(i), [float(x) for x in c]) for i, c in enumerate(cents)],
-        "cluster int, centroid array<double>",
-    )
-    q = queries.select(
-        F.col(query_id).alias("qid"),
-        F.expr(_as_double_sql(query_vec_col)).alias("qv"),
-    )
-    if R is not None:
-        q = rotate_vectors(q, R, vec_col="qv")
-    routed = _route_queries(q, centroids_df, nprobe)
-    probed = sorted(
-        r["cluster"] for r in routed.select("cluster").distinct().collect()
-    )
-    codes_df = spark.read.parquet(f"{path}/codes").filter(
-        F.col("cluster").isin(probed)
-    )
-    n_local = rerank if rerank_with is not None else k
-    qprobes = {
-        int(r["qid"]): set() for r in q_rows
-    }
-    for r in routed.select("qid", "cluster").collect():
-        qprobes[int(r["qid"])].add(int(r["cluster"]))
-    cols = np.arange(m)
-
-    def score(batches):
-        import pyarrow as pa
-
-        for b in batches:
-            if not b.num_rows:
-                continue
-            codes = (
-                b.column("codes")
-                .flatten()
-                .to_numpy(zero_copy_only=False)
-                .reshape(b.num_rows, m)
-            )
-            cids = b.column("_cid").to_numpy(zero_copy_only=False)
-            cls = b.column("cluster").to_numpy(zero_copy_only=False)
-            out_q, out_c, out_s = [], [], []
-            for qi, qid in enumerate(qids):
-                mask = np.isin(cls, list(qprobes[qid]))
-                if not mask.any():
-                    continue
-                sc = offsets[qi, cls[mask]] + luts[qi][
-                    cols, codes[mask]
-                ].sum(axis=1)
-                top = min(n_local, len(sc))
-                idx = np.argpartition(-sc, top - 1)[:top]
-                out_q.append(np.full(top, qid, dtype=np.int64))
-                out_c.append(cids[mask][idx].astype(np.int64))
-                out_s.append(_round_half_away(sc[idx], 6))
-            if out_q:
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(np.concatenate(out_q), pa.int64()),
-                        pa.array(np.concatenate(out_c), pa.int64()),
-                        pa.array(np.concatenate(out_s), pa.float64()),
-                    ],
-                    names=["qid", "cid", "score"],
-                )
-
+    The shortlist scan runs under the store's fences
+    (operators/ivfstore.probe): a standing build or compaction fence
+    refuses at entry; the scan is materialised and re-checked, and an
+    overlapping rebuild or compaction re-runs it (up to ``retries``)
+    against the new generation. After that check the returned frame
+    touches no index table (the exact rerank joins the caller's own
+    corpus). ``verify_consistency=False`` keeps the frame lazy for
+    plan inspection."""
     from pyspark.sql import Window
 
-    if _race_hook is not None:
-        _race_hook()  # test seam: the check-then-read window
-    local = codes_df.select(
-        F.col(id_col).alias("_cid"), "cluster", "codes"
-    ).mapInArrow(score, schema="qid long, cid long, score double")
-    if verify_consistency:
-        # eager: materialize the ONLY scan that touches index tables,
-        # then re-check the fences/meta — this closes the
-        # check-then-read race (the returned frame only joins caller
-        # frames). ``verify_consistency=False`` keeps the frame lazy
-        # for plan inspection (the partition-pruning tests); the scan
-        # itself is identical either way.
-        try:
-            local = local.localCheckpoint(eager=True)
-        except Exception:
-            # the scan failure may itself BE the race (a rebuild
-            # replaced the codes files under this probe's listing):
-            # attribute it if so — _verify raises the explicit race
-            # error — else re-raise the original failure
-            _verify_probe_consistency(spark, path, meta_entry)
-            raise
-        _verify_probe_consistency(spark, path, meta_entry)
+    from .similarity import _as_double_sql, _cosine_sql, _route_queries
+
+    n_local = rerank if rerank_with is not None else k
+
+    def scan(meta):
+        m = int(meta["m"])
+        R, raw_cents, model = _load_model(spark, path, meta)
+        # persisted centroids are the RAW k-means means (the append path
+        # assigns with them); score offsets and routing want the
+        # normalized form — cosine routing is norm-invariant anyway
+        cents = _normalize(raw_cents)
+        q_rows = queries.select(
+            F.col(query_id).alias("qid"),
+            F.col(query_vec_col).cast("array<double>").alias("qv"),
+        ).collect()
+        qids = [int(r["qid"]) for r in q_rows]
+        qx = _normalize(
+            np.vstack([np.asarray(r["qv"], dtype=np.float64) for r in q_rows])
+        )
+        if R is not None:
+            qx = qx @ R.T  # into the index's rotated space
+        luts = np.einsum("qsd,skd->qsk", _subspaces(qx, m), model.codebooks)
+        offsets = qx @ cents.T  # (nq, k_clusters): q̂·ĉ
+
+        centroids_df = spark.createDataFrame(
+            [(int(i), [float(x) for x in c]) for i, c in enumerate(cents)],
+            "cluster int, centroid array<double>",
+        )
+        q = queries.select(
+            F.col(query_id).alias("qid"),
+            F.expr(_as_double_sql(query_vec_col)).alias("qv"),
+        )
+        if R is not None:
+            q = rotate_vectors(q, R, vec_col="qv")
+        routed = _route_queries(q, centroids_df, nprobe)
+        probed = sorted(
+            r["cluster"] for r in routed.select("cluster").distinct().collect()
+        )
+        codes_df = spark.read.parquet(f"{path}/codes").filter(
+            F.col("cluster").isin(probed)
+        )
+        qprobes = {
+            int(r["qid"]): set() for r in q_rows
+        }
+        for r in routed.select("qid", "cluster").collect():
+            qprobes[int(r["qid"])].add(int(r["cluster"]))
+        cols = np.arange(m)
+
+        def score(batches):
+            import pyarrow as pa
+
+            for b in batches:
+                if not b.num_rows:
+                    continue
+                codes = (
+                    b.column("codes")
+                    .flatten()
+                    .to_numpy(zero_copy_only=False)
+                    .reshape(b.num_rows, m)
+                )
+                cids = b.column("_cid").to_numpy(zero_copy_only=False)
+                cls = b.column("cluster").to_numpy(zero_copy_only=False)
+                out_q, out_c, out_s = [], [], []
+                for qi, qid in enumerate(qids):
+                    mask = np.isin(cls, list(qprobes[qid]))
+                    if not mask.any():
+                        continue
+                    sc = offsets[qi, cls[mask]] + luts[qi][
+                        cols, codes[mask]
+                    ].sum(axis=1)
+                    top = min(n_local, len(sc))
+                    idx = np.argpartition(-sc, top - 1)[:top]
+                    out_q.append(np.full(top, qid, dtype=np.int64))
+                    out_c.append(cids[mask][idx].astype(np.int64))
+                    out_s.append(_round_half_away(sc[idx], 6))
+                if out_q:
+                    yield pa.RecordBatch.from_arrays(
+                        [
+                            pa.array(np.concatenate(out_q), pa.int64()),
+                            pa.array(np.concatenate(out_c), pa.int64()),
+                            pa.array(np.concatenate(out_s), pa.float64()),
+                        ],
+                        names=["qid", "cid", "score"],
+                    )
+
+        return codes_df.select(
+            F.col(meta["id_col"]).alias("_cid"), "cluster", "codes"
+        ).mapInArrow(score, schema="qid long, cid long, score double")
+
+    meta, local = ivfstore.probe(
+        spark, path, IVF_PQ, scan, verify_consistency=verify_consistency,
+        retries=retries, race_hook=_race_hook,
+    )
     w = Window.partitionBy("qid").orderBy(
         F.col("score").desc(), F.col("cid").asc()
     )
@@ -1162,7 +977,7 @@ def _cosine_topk_ivf_pq_once(
         F.expr(_as_double_sql(query_vec_col)).alias("qv"),
     )
     cv = rerank_with.select(
-        F.col(id_col).alias("cid"),
+        F.col(meta["id_col"]).alias("cid"),
         F.expr(_as_double_sql(corpus_vec_col)).alias("cv"),
     )
     exact = (
@@ -1187,44 +1002,6 @@ def _cosine_topk_ivf_pq_once(
     )
 
 
-def _load_rotation(spark, path: str, meta_row=None) -> np.ndarray | None:
-    """The OPQ pretransform, if this index has one. The meta table's
-    ``space`` column is authoritative: "opq" REQUIRES the rotation
-    table (missing ⇒ half-built index, fail loudly rather than serve
-    unrotated queries against rotated codes — advisor finding r9);
-    "plain" ignores any stale rotation a crashed rebuild left behind.
-    Indexes written before the column existed fall back to
-    rotation-table presence. Callers that already collected the meta
-    row pass it as ``meta_row`` to skip a redundant read+collect
-    (r10 review finding)."""
-    fs, HPath = hadoop_fs(spark, path)
-    if meta_row is None:
-        meta_df = spark.read.parquet(f"{path}/meta")
-        space = (
-            meta_df.collect()[0]["space"]
-            if "space" in meta_df.columns
-            else None
-        )
-    else:
-        # Row.__contains__ tests VALUES, not field names — go via dict
-        space = meta_row.asDict().get("space")
-    if space == "plain":
-        return None
-    has_rot = fs.exists(HPath(f"{path}/rotation"))
-    if space == "opq" and not has_rot:
-        raise RuntimeError(
-            f"IVF-PQ index at {path} is half-built: meta declares"
-            " space='opq' but the rotation table is missing —"
-            " rebuild with build_ivf_pq_index(opq=...)"
-        )
-    if not has_rot:
-        return None
-    rows = spark.read.parquet(f"{path}/rotation").orderBy("row").collect()
-    return np.vstack(
-        [np.asarray(r["vec"], dtype=np.float64) for r in rows]
-    )
-
-
 def append_to_ivf_pq_index(
     new_vectors: DataFrame,
     path: str,
@@ -1238,108 +1015,32 @@ def append_to_ivf_pq_index(
     appending as their own ``batch_id`` partition with DYNAMIC
     overwrite — a retried append with the same explicit batch_id
     replaces its own (batch, cluster) partitions instead of
-    duplicating (the append_to_ivf_index contract). Centroids and
-    codebooks are deliberately NOT retrained per batch: probe routing
-    and ADC LUTs must stay stable between retrains. Quantization
-    quality decays as the distribution drifts — rebuild on budget,
-    the FAISS retrain cadence.
-
-    Mutual exclusion with :func:`compact_ivf_pq_index` is the same
-    two-flag protocol as append_to_ivf_index (round 8 — added WITH
-    the compaction path, exactly as the IVF vectors index grew its
-    fence): the append takes an ``_APPENDING.<token>`` lease BEFORE
-    checking ``_COMPACTING``, so whichever way an append and a
-    compaction interleave, at least one observes the other and
-    refuses. The remaining caller duty is two concurrent
-    AUTO-assigned appends racing max+1 to the same batch_id —
-    serialize those, or give each writer an explicit batch_id
-    namespace (the streaming pattern)."""
-    import uuid
-
-    from .similarity import (
-        _append_lease,
-        _compact_marker,
-    )
-
-    spark = new_vectors.sparkSession
-    fs, HPath = hadoop_fs(spark, path)
-    lease = HPath(_append_lease(path, uuid.uuid4().hex))
-    if not fs.createNewFile(lease):  # pragma: no cover - uuid collision
-        raise RuntimeError(f"could not take append lease {lease}")
-    try:
-        if fs.exists(HPath(_compact_marker(path))):
-            raise RuntimeError(
-                f"IVF-PQ index at {path} is being compacted "
-                "(_COMPACTING marker present); retry the append after "
-                "the compaction finishes — a write racing the "
-                "directory swap would be silently lost"
-            )
-        _append_to_ivf_pq_index_locked(
-            new_vectors, path, batch_id=batch_id
-        )
-    finally:
-        fs.delete(lease, False)
-
-
-def _append_to_ivf_pq_index_locked(
-    new_vectors: DataFrame,
-    path: str,
-    *,
-    batch_id: int | None = None,
-) -> None:
-    """Body of append_to_ivf_pq_index, running under its lease."""
+    duplicating (the append_to_ivf_index contract, one store:
+    operators/ivfstore.append). Centroids and codebooks are
+    deliberately NOT retrained per batch: probe routing and ADC LUTs
+    must stay stable between retrains. Quantization quality decays
+    as the distribution drifts — rebuild on budget, the FAISS retrain
+    cadence."""
     from .clustering import kmeans_assign
 
     spark = new_vectors.sparkSession
-    _check_not_building(spark, path)
-    meta = spark.read.parquet(f"{path}/meta").collect()[0]
-    id_col, vec_col, m = meta["id_col"], meta["vec_col"], int(meta["m"])
-    R = _load_rotation(spark, path, meta_row=meta)
-    if R is not None:  # OPQ index: append in the index's space
-        new_vectors = rotate_vectors(new_vectors, R, vec_col=vec_col)
-    cent_rows = (
-        spark.read.parquet(f"{path}/centroids").orderBy("cluster").collect()
-    )
-    raw_cents = np.vstack(
-        [np.asarray(r["centroid"], dtype=np.float64) for r in cent_rows]
-    )
-    cb_rows = spark.read.parquet(f"{path}/codebooks").collect()
-    cb = np.zeros((m, int(meta["k_codes"]), int(meta["dim"]) // m))
-    for r in cb_rows:
-        cb[r["sub"], r["code"]] = np.asarray(r["vec"], dtype=np.float64)
-    model = PQModel(codebooks=cb, dim=int(meta["dim"]))
-    if batch_id is None:
-        from .similarity import IVF_STREAM_BATCH_BASE
 
-        # auto-assign ignores the streaming namespace (>= BASE) so a
-        # manual append can never land on a micro-batch's id and
-        # dynamic-overwrite-delete its codes — the append_to_ivf_index
-        # precedent
-        existing = spark.read.parquet(f"{path}/codes").filter(
-            F.col("batch_id") < IVF_STREAM_BATCH_BASE
-        )
-        batch_id = (
-            existing.agg(F.max("batch_id").alias("mx")).collect()[0]["mx"]
-            or 0
-        ) + 1
-    assigned = kmeans_assign(new_vectors, raw_cents, vec_col=vec_col)
-    codes = pq_encode(
-        assigned,
-        model,
-        vec_col=vec_col,
-        cluster_col="cluster",
-        residual_centroids=_normalize(raw_cents),
-    )
-    with partition_overwrite(spark, "dynamic"):
-        (
-            codes.select(
-                id_col, "codes", F.lit(int(batch_id)).alias("batch_id"),
-                "cluster",
-            )
-            .write.mode("overwrite")
-            .partitionBy("batch_id", "cluster")
-            .parquet(f"{path}/codes")
-        )
+    def encode(meta):
+        vec_col = meta["vec_col"]
+        R, raw_cents, model = _load_model(spark, path, meta)
+        batch = new_vectors
+        if R is not None:  # OPQ index: append in the index's space
+            batch = rotate_vectors(batch, R, vec_col=vec_col)
+        assigned = kmeans_assign(batch, raw_cents, vec_col=vec_col)
+        return pq_encode(
+            assigned,
+            model,
+            vec_col=vec_col,
+            cluster_col="cluster",
+            residual_centroids=_normalize(raw_cents),
+        ).select(meta["id_col"], "codes", "cluster")
+
+    ivfstore.append(spark, path, IVF_PQ, encode, batch_id)
 
 
 def compact_ivf_pq_index(
@@ -1351,191 +1052,45 @@ def compact_ivf_pq_index(
     small (batch_id, cluster) partitions from appends become one
     file set per cluster, restoring scan efficiency without touching
     centroids or codebooks (routing and ADC LUTs stay valid; a
-    RETRAIN is build_ivf_pq_index again). Staging + directory-swap:
-    the live index is never half-written — a crash leaves the old
-    codes tree or the new one.
-
-    SINGLE-WRITER CONTRACT (asserted): takes ``_COMPACTING`` under
-    the index root for the whole run; appends raise while it is
-    held. After taking the marker it checks for in-flight
-    ``_APPENDING.*`` leases and backs off (releasing the marker) if
-    any exist — the two-flag protocol's other half. The marker is
-    released only on SUCCESS: a failed compaction keeps the index
-    fenced; run verify_ivf_pq_index, repair (promote or remove
-    ``codes.staging``), then delete ``{path}/_COMPACTING`` to heal.
-    Streaming appends: compact only with the stream stopped on a
-    committed checkpoint (an uncommitted batch replayed after its
-    codes were folded into batch 0 re-adds duplicates — same
-    caveat as compact_ivf_index, surfaced as n_duplicate_ids)."""
-    from .similarity import (
-        _compact_marker,
-        _live_append_leases,
-    )
-    from .textindex import _swap_dir
-
-    _check_not_building(spark, path)
-    fs, HPath = hadoop_fs(spark, path)
-    marker = HPath(_compact_marker(path))
-    if not fs.createNewFile(marker):
-        raise RuntimeError(
-            f"IVF-PQ index at {path} already has a _COMPACTING "
-            "marker: another compaction is running, or a previous "
-            "one failed — verify_ivf_pq_index, repair, then delete "
-            "the marker to heal"
-        )
-    leases = _live_append_leases(fs, HPath, path)
-    if leases:
-        # back off cleanly: nothing was written, so un-fence
-        fs.delete(marker, False)
-        raise RuntimeError(
-            f"IVF-PQ index at {path} has in-flight append lease(s) "
-            f"{leases}; retry the compaction after they finish (a "
-            "stale lease from a killed append must be deleted by "
-            "the operator — see verify_ivf_pq_index)"
-        )
-    meta = spark.read.parquet(f"{path}/meta").collect()[0]
-    id_col = meta["id_col"]
-    codes = spark.read.parquet(f"{path}/codes")
-    if deleted_ids is not None:
-        ids = F.broadcast(
-            deleted_ids.select(
-                F.col(deleted_ids.columns[0]).alias(id_col)
-            ).distinct()
-        )
-        codes = codes.join(ids, id_col, "left_anti")
-    with partition_overwrite(spark, "static"):
-        (
-            codes.drop("batch_id")
-            .select("*", F.lit(0).alias("batch_id"))
-            .select(id_col, "codes", "batch_id", "cluster")
-            .write.mode("overwrite")
-            .partitionBy("batch_id", "cluster")
-            .parquet(f"{path}/codes.staging")
-        )
-    _swap_dir(spark, f"{path}/codes")
-    # released on SUCCESS only — a raise above leaves the index fenced
-    fs.delete(marker, False)
+    RETRAIN is build_ivf_pq_index again). Staging + directory swap
+    under the store's compaction fence (operators/ivfstore.compact);
+    a failed compaction keeps the index fenced — run
+    verify_ivf_pq_index, repair (promote or remove ``codes.staging``),
+    then delete the marker to heal."""
+    ivfstore.compact(spark, path, IVF_PQ, deleted_ids)
 
 
 def verify_ivf_pq_index(spark, path: str) -> dict:
-    """Consistency check for the IVF-PQ layout — the verify_ivf_index
-    twin, adapted to a codes table. Detects, without repairing:
+    """Consistency check for the IVF-PQ layout: the store's report
+    (operators/ivfstore.verify: out-of-range cluster rows, missing
+    centroids, duplicate ids, fence residue), plus
 
-    - ``bad_cluster_rows``: codes routed outside the centroid range
-      (probe-invisible rows);
     - ``bad_code_rows``: code vectors whose length ≠ m or whose
       entries fall outside [0, k_codes) — a codebook/table mismatch
       (e.g. codes written against a different model than the
       persisted codebooks);
-    - ``missing_centroids`` / ``missing_codewords``: gaps in the
-      contiguous ranges the meta table promises;
-    - ``n_duplicate_ids``: ids stored more than once (a replayed
-      batch outside its own batch_id partition, or a stream batch
-      replayed after a compaction folded it into batch 0);
-    - ``stale_compact_marker`` / ``stale_staging_dir`` /
-      ``stale_append_leases``: fence residue of a failed compaction
-      or a hard-killed append (round 8, with the compaction path —
-      same fields as verify_ivf_index).
+    - ``missing_codewords``: gaps in the m×k_codes range the meta
+      table promises."""
 
-    One scan of the codes table; all aggregates id- or shape-sized.
-
-    Fence flags are checked BEFORE any table read (r10 review): the
-    crashed-mid-rebuild state the ``_BUILDING`` marker exists for can
-    leave the meta/codes dirs half-written, and the verifier is
-    exactly the tool the heal protocol says to run then — a table
-    read that fails while any fence flag is set is reported as
-    ``read_error`` in a minimal (inconsistent) report instead of
-    raising."""
-    from .similarity import (
-        _build_marker,
-        _compact_marker,
-        _live_append_leases,
-    )
-
-    fs, HPath = hadoop_fs(spark, path)
-    fences = {
-        "stale_compact_marker": bool(
-            fs.exists(HPath(_compact_marker(path)))
-        ),
-        "stale_staging_dir": bool(
-            fs.exists(HPath(f"{path}/codes.staging"))
-        ),
-        "stale_append_leases": _live_append_leases(fs, HPath, path),
-        # a rebuild crashed between table overwrites: the tables may
-        # MIX SPACES; probes/appends/health refuse while this exists
-        "stale_build_marker": bool(
-            fs.exists(HPath(_build_marker(path)))
-        ),
-    }
-    fenced = any(bool(v) for v in fences.values())
-    try:
-        meta = spark.read.parquet(f"{path}/meta").collect()[0]
-    except Exception as e:  # noqa: BLE001 — report under a fence
-        if fenced:
-            return {**fences, "consistent": False,
-                    "read_error": repr(e)[:200]}
-        raise
-    id_col = meta["id_col"]
-    k_clusters, m, k_codes = (
-        int(meta["k_clusters"]), int(meta["m"]), int(meta["k_codes"])
-    )
-    try:
-        cent_ids = {
-            r["cluster"]
-            for r in spark.read.parquet(f"{path}/centroids")
-            .select("cluster").collect()
-        }
-        missing_centroids = sorted(set(range(k_clusters)) - cent_ids)
-        cb = spark.read.parquet(f"{path}/codebooks")
-        have_codewords = {
+    def audit(meta):
+        m, k_codes = int(meta["m"]), int(meta["k_codes"])
+        have = {
             (r["sub"], r["code"])
-            for r in cb.select("sub", "code").collect()
+            for r in spark.read.parquet(f"{path}/codebooks")
+            .select("sub", "code").collect()
         }
-        missing_codewords = sorted(
-            {(s, j) for s in range(m) for j in range(k_codes)}
-            - have_codewords
+        missing = sorted(
+            {(s, j) for s in range(m) for j in range(k_codes)} - have
         )
-        codes = spark.read.parquet(f"{path}/codes")
         bad_code = (F.size("codes") != m) | F.exists(
             "codes", lambda x: (x < 0) | (x >= k_codes)
         )
-        agg = codes.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.count_distinct(F.col(id_col)).alias("n_ids"),
-            F.sum(
-                (
-                    (F.col("cluster") < 0)
-                    | (F.col("cluster") >= k_clusters)
-                ).cast("long")
-            ).alias("bad_cluster"),
-            F.sum(bad_code.cast("long")).alias("bad_code"),
-        ).collect()[0]
-    except Exception as e:  # noqa: BLE001 — report under a fence
-        if fenced:
-            return {**fences, "consistent": False,
-                    "read_error": repr(e)[:200]}
-        raise
-    out = {
-        "k_clusters": k_clusters,
-        "m": m,
-        "k_codes": k_codes,
-        "n_vectors": int(agg["n"]),
-        "bad_cluster_rows": int(agg["bad_cluster"] or 0),
-        "bad_code_rows": int(agg["bad_code"] or 0),
-        "missing_centroids": missing_centroids,
-        "missing_codewords": missing_codewords,
-        "n_duplicate_ids": int(agg["n"]) - int(agg["n_ids"]),
-        **fences,
-    }
-    out["consistent"] = (
-        out["bad_cluster_rows"] == 0
-        and out["bad_code_rows"] == 0
-        and not missing_centroids
-        and not missing_codewords
-        and out["n_duplicate_ids"] == 0
-        and not fenced
-    )
-    return out
+        return (
+            {"m": m, "k_codes": k_codes, "missing_codewords": missing},
+            {"bad_code_rows": bad_code},
+        )
+
+    return ivfstore.verify(spark, path, IVF_PQ, audit)
 
 
 def ivf_pq_index_stats(
@@ -1560,75 +1115,53 @@ def ivf_pq_index_stats(
     OPQ indexes: the caller's float corpus rotates into the index's
     space before the error kernel (the stored centroids/codebooks
     live there)."""
-    _check_not_building(spark, path)
-    meta = spark.read.parquet(f"{path}/meta").collect()[0]
-    id_col, m = meta["id_col"], int(meta["m"])
-    R = _load_rotation(spark, path, meta_row=meta)
-    if R is not None:
-        corpus = rotate_vectors(
-            corpus.select(F.col(id_col), F.col(vec_col).cast("array<double>")),
-            R,
-            vec_col=vec_col,
-        )
-    cent_rows = (
-        spark.read.parquet(f"{path}/centroids").orderBy("cluster").collect()
-    )
-    cents_hat = _normalize(
-        np.vstack(
-            [np.asarray(r["centroid"], dtype=np.float64) for r in cent_rows]
-        )
-    )
-    cb_rows = spark.read.parquet(f"{path}/codebooks").collect()
-    cb = np.zeros((m, int(meta["k_codes"]), int(meta["dim"]) // m))
-    for r in cb_rows:
-        cb[r["sub"], r["code"]] = np.asarray(r["vec"], dtype=np.float64)
 
-    @F.pandas_udf("double")
-    def recon_err(
-        vecs: pd.Series, codes: pd.Series, clusters: pd.Series
-    ) -> pd.Series:
-        # unmatched index rows carry a null vector — keep their error
-        # null (they count in n_unmatched, not in the means)
-        matched = vecs.notna().to_numpy()
-        out = np.full(len(vecs), np.nan)
-        if matched.any():
-            x = _normalize(_as_matrix(vecs[matched]))
-            cd = np.vstack(codes[matched].to_numpy())  # (n, m)
-            cl = clusters.to_numpy()[matched]
-            recon = cents_hat[cl] + np.concatenate(
-                [cb[s][cd[:, s]] for s in range(m)], axis=1
+    def per_cluster(meta):
+        id_col, m = meta["id_col"], int(meta["m"])
+        R, raw_cents, model = _load_model(spark, path, meta)
+        cents_hat, cb = _normalize(raw_cents), model.codebooks
+        floats = corpus
+        if R is not None:
+            floats = rotate_vectors(
+                corpus.select(F.col(id_col), F.col(vec_col).cast("array<double>")),
+                R,
+                vec_col=vec_col,
             )
-            out[matched] = np.sqrt(((x - recon) ** 2).sum(axis=1))
-        return pd.Series(out)
 
-    codes = spark.read.parquet(f"{path}/codes")
-    joined = codes.join(
-        corpus.select(
-            F.col(id_col), F.col(vec_col).cast("array<double>").alias("_v")
-        ),
-        id_col,
-        "left",
-    ).select(
-        "cluster",
-        F.col("_v").isNull().alias("_unmatched"),
-        recon_err(F.col("_v"), F.col("codes"), F.col("cluster")).alias("err"),
-    )
-    per = joined.groupBy("cluster").agg(
-        F.count(F.lit(1)).alias("n_vectors"),
-        F.sum(F.col("_unmatched").cast("long")).alias("n_unmatched"),
-        F.round(F.avg("err"), 6).alias("mean_recon_err"),
-        F.round(F.max("err"), 6).alias("max_recon_err"),
-    )
-    total = per.agg(F.sum("n_vectors").alias("n_total"))
-    return (
-        per.crossJoin(F.broadcast(total))
-        .select(
+        @F.pandas_udf("double")
+        def recon_err(
+            vecs: pd.Series, codes: pd.Series, clusters: pd.Series
+        ) -> pd.Series:
+            # unmatched index rows carry a null vector — keep their error
+            # null (they count in n_unmatched, not in the means)
+            matched = vecs.notna().to_numpy()
+            out = np.full(len(vecs), np.nan)
+            if matched.any():
+                x = _normalize(_as_matrix(vecs[matched]))
+                cd = np.vstack(codes[matched].to_numpy())  # (n, m)
+                cl = clusters.to_numpy()[matched]
+                recon = cents_hat[cl] + np.concatenate(
+                    [cb[s][cd[:, s]] for s in range(m)], axis=1
+                )
+                out[matched] = np.sqrt(((x - recon) ** 2).sum(axis=1))
+            return pd.Series(out)
+
+        joined = spark.read.parquet(f"{path}/codes").join(
+            floats.select(
+                F.col(id_col), F.col(vec_col).cast("array<double>").alias("_v")
+            ),
+            id_col,
+            "left",
+        ).select(
             "cluster",
-            "n_vectors",
-            "n_unmatched",
-            F.round(F.col("n_vectors") / F.col("n_total"), 6).alias("share"),
-            "mean_recon_err",
-            "max_recon_err",
+            F.col("_v").isNull().alias("_unmatched"),
+            recon_err(F.col("_v"), F.col("codes"), F.col("cluster")).alias("err"),
         )
-        .orderBy("cluster")
-    )
+        return joined.groupBy("cluster").agg(
+            F.count(F.lit(1)).alias("n_vectors"),
+            F.sum(F.col("_unmatched").cast("long")).alias("n_unmatched"),
+            F.round(F.avg("err"), 6).alias("mean_recon_err"),
+            F.round(F.max("err"), 6).alias("max_recon_err"),
+        )
+
+    return ivfstore.stats(spark, path, IVF_PQ, per_cluster)

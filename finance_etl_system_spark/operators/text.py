@@ -82,6 +82,15 @@ def ws_tokens_sql(col: str = "text") -> str:
     )
 
 
+def normalized_sql(col: str = "text") -> str:
+    """DuckDB twin of :func:`normalized_expr`, with the whitespace
+    class spelled out as in :func:`ws_tokens_sql`."""
+    return (
+        f"trim(regexp_replace(lower({col}),"
+        " '[ \\t\\n\\x0B\\f\\r]+', ' ', 'g'))"
+    )
+
+
 def token_count_bpe_ish(text: str) -> Column:
     """BPE-ish token estimate: word-piece regex split. Counts runs of
     letters, digits, or single punctuation — a deterministic stand-in

@@ -37,7 +37,7 @@ from ..functions.frames import ranked_topk
 from ..operators.dedup import minhash_lsh_match, minhash_signatures
 from ..operators.packing import prefix_pack
 from ..operators.partitioning import spread_for_expansion
-from ..operators.text import tokens, ws_tokens, ws_tokens_sql
+from ..operators.text import normalized_sql, tokens, ws_tokens, ws_tokens_sql
 
 NGRAM = 5  # decontamination shingle width (words)
 EVAL_MOD = 23  # doc_id % EVAL_MOD == 0 → held-out "benchmark" doc
@@ -46,6 +46,7 @@ CHUNK_LEN = 32  # chunk width (tokens)
 CHUNK_STRIDE = 24  # chunk stride (tokens; overlap = LEN - STRIDE)
 
 _TOKS_SQL = ws_tokens_sql("text")
+_NORM_SQL = normalized_sql("text")
 
 
 def _grams(toks: Column) -> Column:
@@ -648,7 +649,7 @@ def q_curriculum_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
 _CURRICULUM_PACK_SQL = f"""
 WITH toks AS (
   SELECT doc_id,
-         unnest(string_split(trim(regexp_replace(lower(text), '[ \\t\\n\\x0B\\f\\r]+', ' ', 'g')), ' ')) AS term
+         unnest(string_split({_NORM_SQL}, ' ')) AS term
   FROM documents
 ),
 tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM toks GROUP BY doc_id, term),

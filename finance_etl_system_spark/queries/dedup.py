@@ -22,6 +22,9 @@ from ..operators.dedup import (
     ngram_jaccard_pairs,
     simhash_near_pairs,
 )
+from ..operators.text import normalized_sql
+
+_NORM_SQL = normalized_sql("text")
 
 
 def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -30,11 +33,11 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     return exact_dedup(d).select("doc_id", "lang", "source", "n_chars")
 
 
-_DEDUP_EXACT_SQL = """
+_DEDUP_EXACT_SQL = f"""
 SELECT doc_id, lang, source, n_chars
 FROM (
   SELECT *, ROW_NUMBER() OVER (
-    PARTITION BY sha256(trim(regexp_replace(lower(text), '[ \\t\\n\\x0B\\f\\r]+', ' ', 'g')))
+    PARTITION BY sha256({_NORM_SQL})
     ORDER BY doc_id
   ) AS rn
   FROM documents
@@ -50,10 +53,10 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ngram_jaccard_pairs(d, n=3, threshold=0.2).orderBy("id_a", "id_b")
 
 
-_DEDUP_NGRAM_JACCARD_SQL = """
+_DEDUP_NGRAM_JACCARD_SQL = f"""
 WITH tok AS (
   SELECT doc_id AS id,
-         string_split(trim(regexp_replace(lower(text), '[ \\t\\n\\x0B\\f\\r]+', ' ', 'g')), ' ') AS toks
+         string_split({_NORM_SQL}, ' ') AS toks
   FROM documents
 ),
 sh AS (
@@ -156,7 +159,7 @@ _DEDUP_EXACT_PRIORITY_SQL = f"""
 SELECT doc_id, lang, source, n_chars
 FROM (
   SELECT *, ROW_NUMBER() OVER (
-    PARTITION BY sha256(trim(regexp_replace(lower(text), '[ \\t\\n\\x0B\\f\\r]+', ' ', 'g')))
+    PARTITION BY sha256({_NORM_SQL})
     ORDER BY {_PRIORITY_CASE},
              source, doc_id
   ) AS rn
@@ -191,10 +194,10 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # transitive closure via recursive CTE: tiny here (the near-dup pair
 # set), and UNION (not UNION ALL) dedups rows so cycles terminate
-_DEDUP_CLUSTERS_SQL = """
+_DEDUP_CLUSTERS_SQL = f"""
 WITH RECURSIVE tok AS (
   SELECT doc_id AS id,
-         string_split(trim(regexp_replace(lower(text), '[ \\t\\n\\x0B\\f\\r]+', ' ', 'g')), ' ') AS toks
+         string_split({_NORM_SQL}, ' ') AS toks
   FROM documents
 ),
 sh AS (
@@ -281,10 +284,10 @@ def q_dedup_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_DEDUP_SAFE_SPLIT_SQL = """
+_DEDUP_SAFE_SPLIT_SQL = f"""
 WITH RECURSIVE tok AS (
   SELECT doc_id AS id,
-         string_split(trim(regexp_replace(lower(text), '[ \\t\\n\\x0B\\f\\r]+', ' ', 'g')), ' ') AS toks
+         string_split({_NORM_SQL}, ' ') AS toks
   FROM documents
 ),
 sh AS (

@@ -17,6 +17,7 @@ from ..operators.text import (
     STOPWORDS_EN,
     fingerprint,
     lang_id,
+    normalized_sql,
     punct_ratio,
     quality_score,
     stopword_ratio,
@@ -24,6 +25,8 @@ from ..operators.text import (
     tokens,
     word_count,
 )
+
+_NORM_SQL = normalized_sql("text")
 
 
 def q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -44,7 +47,7 @@ def q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 _TEXT_STATS_SQL = f"""
 WITH norm AS (
   SELECT doc_id, lang, text,
-         trim(regexp_replace(lower(text), '[ \\t\\n\\x0B\\f\\r]+', ' ', 'g')) AS ntext
+         {_NORM_SQL} AS ntext
   FROM documents
 ),
 tok AS (
@@ -97,7 +100,7 @@ _HITS_SQL, _LANG_FOLD = _lang_case_sql()
 _TEXT_QUALITY_LANG_SQL = f"""
 WITH tok AS (
   SELECT doc_id, lang, text,
-         string_split(trim(regexp_replace(lower(text), '[ \\t\\n\\x0B\\f\\r]+', ' ', 'g')), ' ') AS toks
+         string_split({_NORM_SQL}, ' ') AS toks
   FROM documents
 ),
 hits AS (
@@ -137,10 +140,10 @@ def q_text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_TEXT_FINGERPRINT_SQL = """
+_TEXT_FINGERPRINT_SQL = f"""
 WITH fp AS (
   SELECT doc_id,
-         sha256(trim(regexp_replace(lower(text), '[ \\t\\n\\x0B\\f\\r]+', ' ', 'g'))) AS fingerprint
+         sha256({_NORM_SQL}) AS fingerprint
   FROM documents
 )
 SELECT f.doc_id, f.fingerprint, c.n_docs
@@ -196,10 +199,10 @@ def q_text_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_TEXT_TFIDF_SQL = """
+_TEXT_TFIDF_SQL = f"""
 WITH toks AS (
   SELECT doc_id,
-         unnest(string_split(trim(regexp_replace(lower(text), '[ \\t\\n\\x0B\\f\\r]+', ' ', 'g')), ' ')) AS term
+         unnest(string_split({_NORM_SQL}, ' ')) AS term
   FROM documents
 ),
 tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM toks GROUP BY doc_id, term),
@@ -278,10 +281,10 @@ def q_token_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_TOKEN_TOPK_SQL = """
+_TOKEN_TOPK_SQL = f"""
 WITH tok AS (
   SELECT doc_id,
-         unnest(string_split(trim(regexp_replace(lower(text), '[ \\t\\n\\x0B\\f\\r]+', ' ', 'g')), ' ')) AS token
+         unnest(string_split({_NORM_SQL}, ' ')) AS token
   FROM documents
 )
 SELECT token,
@@ -429,7 +432,7 @@ def q_bigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
 _BIGRAM_SURPRISAL_SQL = f"""
 WITH docs AS (
   SELECT doc_id,
-         string_split(trim(regexp_replace(lower(text), '[ \\t\\n\\x0B\\f\\r]+', ' ', 'g')), ' ')
+         string_split({_NORM_SQL}, ' ')
            AS toks
   FROM documents
 ),
@@ -536,10 +539,10 @@ def q_unigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_UNIGRAM_SURPRISAL_SQL = """
+_UNIGRAM_SURPRISAL_SQL = f"""
 WITH toks AS (
   SELECT doc_id,
-         unnest(string_split(trim(regexp_replace(lower(text), '[ \\t\\n\\x0B\\f\\r]+', ' ', 'g')), ' ')) AS term
+         unnest(string_split({_NORM_SQL}, ' ')) AS term
   FROM documents
 ),
 tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM toks GROUP BY doc_id, term),
@@ -595,9 +598,9 @@ def q_bpe_merge_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ranked_topk(agg, key, 20).select("rnk", "pair", "total")
 
 
-_BPE_MERGE_PAIRS_SQL = """
+_BPE_MERGE_PAIRS_SQL = f"""
 WITH toks AS (
-  SELECT unnest(string_split(trim(regexp_replace(lower(text), '[ \\t\\n\\x0B\\f\\r]+', ' ', 'g')), ' ')) AS term
+  SELECT unnest(string_split({_NORM_SQL}, ' ')) AS term
   FROM documents
 ),
 wf AS (SELECT term, COUNT(*) AS freq FROM toks WHERE length(term) >= 2 GROUP BY term),
@@ -711,18 +714,18 @@ def q_source_scorecard(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SOURCE_SCORECARD_SQL = """
+_SOURCE_SCORECARD_SQL = f"""
 WITH base AS (
   SELECT source,
-         len(string_split(trim(regexp_replace(lower(text), '[ \\t\\n\\x0B\\f\\r]+', ' ', 'g')), ' '))
+         len(string_split({_NORM_SQL}, ' '))
            AS n_tok,
          ROUND(len(list_distinct(
-                 string_split(trim(regexp_replace(lower(text), '[ \\t\\n\\x0B\\f\\r]+', ' ', 'g')), ' ')))
+                 string_split({_NORM_SQL}, ' ')))
                / CAST(greatest(len(
-                 string_split(trim(regexp_replace(lower(text), '[ \\t\\n\\x0B\\f\\r]+', ' ', 'g')), ' ')), 1)
+                 string_split({_NORM_SQL}, ' ')), 1)
                  AS DOUBLE), 6) AS ttr,
          CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS is_en,
-         sha256(trim(regexp_replace(lower(text), '[ \\t\\n\\x0B\\f\\r]+', ' ', 'g'))) AS fp
+         sha256({_NORM_SQL}) AS fp
   FROM documents
 )
 SELECT source,

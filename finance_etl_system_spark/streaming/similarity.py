@@ -23,6 +23,33 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 
+def _append_batch(append, batch_df: DataFrame, batch_id: int, path: str) -> None:
+    """Both kinds' foreachBatch body (see :func:`ivf_append_batch`)."""
+    from ..operators.ivfstore import IVF_STREAM_BATCH_BASE
+
+    if batch_df.isEmpty():
+        return
+    append(batch_df, path, batch_id=IVF_STREAM_BATCH_BASE + int(batch_id))
+
+
+def _stream_append(spark, body, source_dir, schema, index_path,
+                   checkpoint_dir, max_files_per_trigger):
+    """Start an availableNow file-source stream with foreachBatch
+    ``body`` writing into the index at ``index_path``."""
+    reader = spark.readStream.schema(schema)
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", int(max_files_per_trigger))
+    return (
+        reader.json(source_dir)
+        .writeStream.foreachBatch(
+            lambda df, bid: body(df, bid, path=index_path)
+        )
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
 def ivf_append_batch(batch_df: DataFrame, batch_id: int, *, path: str) -> None:
     """foreachBatch body: one micro-batch into the index. Empty
     batches write nothing (no empty partition dirs).
@@ -34,7 +61,7 @@ def ivf_append_batch(batch_df: DataFrame, batch_id: int, *, path: str) -> None:
     max+1) interleaved with an active or resumed stream could reuse
     an id and dynamic-overwrite-DELETE the other writer's vectors in
     every overlapping (batch, cluster) partition. Auto-assignment now
-    ignores ids >= the base (operators/similarity.py), so the two
+    ignores ids >= the base (operators/ivfstore.py), so the two
     counters can never meet; a replayed micro-batch still rewrites
     exactly its own partitions.
 
@@ -48,16 +75,9 @@ def ivf_append_batch(batch_df: DataFrame, batch_id: int, *, path: str) -> None:
     ``compact_ivf_index`` (folds every legacy batch into batch 0 and
     vacates the manual range), and verify. New indexes and fresh
     checkpoints are unaffected."""
-    from ..operators.similarity import (
-        IVF_STREAM_BATCH_BASE,
-        append_to_ivf_index,
-    )
+    from ..operators.similarity import append_to_ivf_index
 
-    if batch_df.isEmpty():
-        return
-    append_to_ivf_index(
-        batch_df, path, batch_id=IVF_STREAM_BATCH_BASE + int(batch_id)
-    )
+    _append_batch(append_to_ivf_index, batch_df, batch_id, path)
 
 
 def ivf_pq_append_batch(
@@ -68,13 +88,8 @@ def ivf_pq_append_batch(
     frozen codebooks, own (BASE+micro_batch, cluster) partitions,
     dynamic overwrite, empty batches write nothing."""
     from ..operators.pq import append_to_ivf_pq_index
-    from ..operators.similarity import IVF_STREAM_BATCH_BASE
 
-    if batch_df.isEmpty():
-        return
-    append_to_ivf_pq_index(
-        batch_df, path, batch_id=IVF_STREAM_BATCH_BASE + int(batch_id)
-    )
+    _append_batch(append_to_ivf_pq_index, batch_df, batch_id, path)
 
 
 def stream_append_ivf_pq(
@@ -90,17 +105,9 @@ def stream_append_ivf_pq(
     embedding ingestion lands as residual PQ codes — the stream pays
     the 16× compression at write time, so the index a probe reads
     stays codes-sized however long the stream runs."""
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", int(max_files_per_trigger))
-    src = reader.json(source_dir)
-    return (
-        src.writeStream.foreachBatch(
-            lambda df, bid: ivf_pq_append_batch(df, bid, path=index_path)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _stream_append(
+        spark, ivf_pq_append_batch, source_dir, schema, index_path,
+        checkpoint_dir, max_files_per_trigger,
     )
 
 
@@ -118,15 +125,7 @@ def stream_append_ivf(
     source-agnostic) into the IVF index. Returns the started query.
     ``max_files_per_trigger`` bounds micro-batch size (availableNow
     honors it and drains in several batches)."""
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", int(max_files_per_trigger))
-    src = reader.json(source_dir)
-    return (
-        src.writeStream.foreachBatch(
-            lambda df, bid: ivf_append_batch(df, bid, path=index_path)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _stream_append(
+        spark, ivf_append_batch, source_dir, schema, index_path,
+        checkpoint_dir, max_files_per_trigger,
     )

@@ -113,13 +113,11 @@ def test_create_dataframe_call_sites_are_closed():
     assert not stale, f"stale allowlist entries: {sorted(stale)}"
 
 
-# read_state, plus the probe fences that read a mid-overwrite meta as a
-# retryable race (pq._verify_probe_consistency,
-# similarity._verify_ivf_probe_consistency)
+# read_state, plus the index store's post-scan check, which reads a
+# mid-overwrite meta as a retryable race
 _ANALYSIS_EXCEPTION_ALLOWED = {
     "functions/generations.py",
-    "operators/pq.py",
-    "operators/similarity.py",
+    "operators/ivfstore.py",
 }
 
 

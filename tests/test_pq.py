@@ -504,7 +504,7 @@ def test_ivf_pq_append_refused_during_compaction(spark, corpus, tmp_path):
         compact_ivf_pq_index,
         verify_ivf_pq_index,
     )
-    from finance_etl_system_spark.operators.similarity import (
+    from finance_etl_system_spark.operators.ivfstore import (
         _append_lease,
         _compact_marker,
     )
@@ -551,8 +551,8 @@ def test_probe_detects_mid_scan_rebuild(spark, corpus, tmp_path):
     #3): a rebuild that starts — or starts AND commits — inside a
     probe's read window makes the probe fail LOUDLY instead of
     silently scoring new codes with the old model. The _race_hook
-    seam fires in exactly the window the entry-time
-    _check_not_building cannot cover."""
+    seam fires in exactly the window the entry fence cannot
+    cover."""
     import os
 
     from finance_etl_system_spark.operators.pq import (

@@ -555,8 +555,8 @@ def test_ivf_append_refused_during_compaction(spark, tmp_path):
     import pytest as _pytest
 
     from finance_etl_system_spark.catalog import load_table
+    from finance_etl_system_spark.operators.ivfstore import _compact_marker
     from finance_etl_system_spark.operators.similarity import (
-        _compact_marker,
         append_to_ivf_index,
         build_ivf_index,
         compact_ivf_index,
@@ -645,8 +645,8 @@ def test_verify_ivf_index_detects_crash_and_replay_residue(
     rows (probe-invisible partitions), a stale _COMPACTING marker,
     and a leftover staging tree."""
     from finance_etl_system_spark.catalog import load_table
+    from finance_etl_system_spark.operators.ivfstore import _compact_marker
     from finance_etl_system_spark.operators.similarity import (
-        _compact_marker,
         append_to_ivf_index,
         build_ivf_index,
         verify_ivf_index,
@@ -717,9 +717,11 @@ def test_ivf_two_flag_protocol_append_lease_vs_compaction(
 
     from finance_etl_system_spark.catalog import load_table
     from finance_etl_system_spark.operators import textindex
-    from finance_etl_system_spark.operators.similarity import (
+    from finance_etl_system_spark.operators.ivfstore import (
         _append_lease,
         _compact_marker,
+    )
+    from finance_etl_system_spark.operators.similarity import (
         append_to_ivf_index,
         build_ivf_index,
         compact_ivf_index,
