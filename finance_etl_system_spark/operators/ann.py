@@ -21,6 +21,12 @@ full compression × recall × probe-cost × maintenance matrix):
 | ivf_index      | index_path   | in-probe      | build-once/query-many, partition-pruned |
 | ivf_pq_index   | index_path   | no (rerank)   | the 100-TB shape: pruning x compression |
 
+Every method ends in the shared tail of operators/similarity.py (one
+safe cosine, one per-query rank, one exact rerank), so a zero-norm
+corpus vector scores NULL and ranks last in every method, whatever
+the ANSI setting (``ivf_pq_index`` on its exact-rerank path, with
+``corpus=``; its ADC-only scores come from codes that hold no norm).
+
 The reference system has no vector tier (/root/reference/spark-job/
 etl_job.py stops at OHLCV rows); this is the X2 extension's façade.
 """

@@ -86,8 +86,13 @@ def content_defined_chunks(
     (id, chunk_idx, chunk_start, chunk_len, chunk_hash) — offsets in
     UTF-8 bytes, hash = sha256 hex of the chunk bytes. ``avg_size``
     must be a power of two (it defines the boundary mask)."""
-    assert avg_size & (avg_size - 1) == 0, "avg_size must be a power of 2"
-    assert min_size <= avg_size <= max_size
+    if avg_size & (avg_size - 1):
+        raise ValueError(f"avg_size={avg_size} must be a power of 2")
+    if not min_size <= avg_size <= max_size:
+        raise ValueError(
+            f"need min_size <= avg_size <= max_size, got {min_size},"
+            f" {avg_size}, {max_size}"
+        )
 
     @F.pandas_udf(
         "array<struct<chunk_idx:int,chunk_start:long,"

@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .partitioning import spread_for_expansion
-from .similarity import _as_double_sql, _dot_sql, _norm_sql, _planes, signature_udf
+from .similarity import _dot_sql, _norm_sql, _planes, as_double_sql, signature_udf
 from .text import fingerprint, tokens, tokens_expr
 
 # MinHash modulus: 31-bit Mersenne prime keeps a*h+b within int64
@@ -355,7 +355,8 @@ def minhash_dedup_incremental(
     """
     from pyspark.sql import Window
 
-    assert num_perm % bands == 0
+    if num_perm % bands:
+        raise ValueError(f"num_perm={num_perm} must divide into bands={bands}")
     rpb = num_perm // bands
     new_sig = minhash_signatures(
         new_df,
@@ -476,7 +477,8 @@ def minhash_lsh_pairs(
     band buckets before the self-join (see _cap_hot_buckets) — the
     skew guard for boilerplate-heavy corpora.
     """
-    assert num_perm % bands == 0
+    if num_perm % bands:
+        raise ValueError(f"num_perm={num_perm} must divide into bands={bands}")
     rpb = num_perm // bands
     sig = minhash_signatures(
         df,
@@ -554,7 +556,8 @@ def minhash_lsh_match(
     materialized (checkpointed); this function will not re-barrier
     them.
     """
-    assert num_perm % bands == 0
+    if num_perm % bands:
+        raise ValueError(f"num_perm={num_perm} must divide into bands={bands}")
     rpb = num_perm // bands
     kw = dict(text_col=text_col, id_col=id_col, n=n,
               num_perm=num_perm, seed=seed)
@@ -616,7 +619,8 @@ def lsh_candidate_stats(
     |surviving buckets|·cap² no matter how the data's duplicate
     structure grows. All aggregates here are bucket-table-sized;
     nothing collects per-doc data."""
-    assert num_perm % bands == 0
+    if num_perm % bands:
+        raise ValueError(f"num_perm={num_perm} must divide into bands={bands}")
     rpb = num_perm // bands
     sig = minhash_signatures(
         df, text_col=text_col, id_col=id_col, n=n, num_perm=num_perm,
@@ -781,7 +785,7 @@ def embedding_cosine_pairs(
     # from inside the transform lambda would re-fold it per element.
     base = (
         df.select(
-            F.col(id_col).alias("id"), F.expr(_as_double_sql(vec_col)).alias("v0")
+            F.col(id_col).alias("id"), F.expr(as_double_sql(vec_col)).alias("v0")
         )
         .withColumn("_n", F.expr(_norm_sql("v0")))
         .select("id", F.transform("v0", lambda x: x / F.col("_n")).alias("v"))
@@ -791,7 +795,10 @@ def embedding_cosine_pairs(
         b = base.select(F.col("id").alias("id_b"), F.col("v").alias("vb"))
         cands = a.crossJoin(F.broadcast(b)).filter(F.col("id_a") < F.col("id_b"))
     else:
-        assert lsh_nbits % bands == 0
+        if lsh_nbits % bands:
+            raise ValueError(
+                f"lsh_nbits={lsh_nbits} must divide into bands={bands}"
+            )
         rpb = lsh_nbits // bands
         # dim is a query-build parameter; the one-row probe fallback
         # costs an extra Spark job (see cosine_topk_lsh docstring)

@@ -73,7 +73,11 @@ def mine_triplets(
     map-combinable aggregate over the assigned frame (k rows out);
     it re-traverses the scan lineage rather than caching a
     corpus-sized frame."""
-    assert neg_lo < neg_hi <= pos_threshold
+    if not neg_lo < neg_hi <= pos_threshold:
+        raise ValueError(
+            f"need neg_lo < neg_hi <= pos_threshold, got {neg_lo}, {neg_hi},"
+            f" {pos_threshold}"
+        )
     model = kmeans_fit(
         df, vec_col=vec_col, id_col=id_col, k=k_clusters,
         max_iter=max_iter, compute_inertia=False,

@@ -60,6 +60,7 @@ from pyspark.sql import functions as F
 from ..functions.generations import hadoop_fs
 from . import ivfstore
 from .quantize import _round_half_away
+from .similarity import exact_rerank, query_vectors, rank_per_query, route_queries
 
 
 @dataclass
@@ -241,7 +242,8 @@ def opq_rotation(
     (lane, pid) order at both levels and eigenvector signs are
     canonicalized (largest-|component| positive), so the rotation is
     replay-stable for a fixed input layout."""
-    assert dim % m == 0, "dim must divide into m equal subspaces"
+    if dim % m:
+        raise ValueError(f"dim={dim} must divide into m={m} equal subspaces")
     if sample_fraction is not None:
         df = df.sample(fraction=sample_fraction, seed=7)
 
@@ -449,7 +451,8 @@ def pq_train(
     Passing ``cluster_col`` + ``residual_centroids`` (the normalized
     coarse-centroid matrix) trains on IVF residuals instead — the
     classic IVF-PQ refinement."""
-    assert dim % m == 0, "dim must divide into m equal subspaces"
+    if dim % m:
+        raise ValueError(f"dim={dim} must divide into m={m} equal subspaces")
     cols = [
         F.col(vec_col).cast("array<double>").alias("_v"),
         F.col(id_col).alias("_id"),
@@ -564,19 +567,62 @@ def pq_topk_adc(
     unrotated corpus — cosine is rotation-invariant, so the rerank
     scores match the rotated-space ones while the corpus skips a
     per-probe rotation pass. Defaults to ``queries``."""
-    q_rows = queries.select(
-        F.col(query_id_col).alias("qid"),
-        F.col(query_vec_col).cast("array<double>").alias("qv"),
-    ).collect()
-    qids = [int(r["qid"]) for r in q_rows]
-    qx = _normalize(
-        np.vstack([np.asarray(r["qv"], dtype=np.float64) for r in q_rows])
+    qids, luts, offsets = _query_luts(
+        queries, query_id_col, query_vec_col, model, np.zeros((1, model.dim))
     )
-    c = model.codebooks
-    m = model.m
-    # (nq, m, k_codes): LUT[q, s, j] = q_s · codeword_{s,j}
-    luts = np.einsum("qsd,skd->qsk", _subspaces(qx, m), c)
-    n_local = rerank if rerank_with is not None else k
+    shortlist = _adc_shortlist(
+        codes_df.select(
+            F.col(id_col).alias("_cid"), F.lit(0).alias("cluster"), "codes"
+        ),
+        qids, luts, offsets, [[0]] * len(qids),
+        rerank if rerank_with is not None else k,
+    )
+    return _adc_topk(
+        shortlist, k=k, rerank=rerank, rerank_with=rerank_with,
+        queries=rerank_queries if rerank_queries is not None else queries,
+        query_id=query_id_col, query_vec_col=query_vec_col,
+        corpus_id=id_col, corpus_vec_col=corpus_vec_col,
+    )
+
+
+def _query_luts(
+    queries: DataFrame,
+    query_id: str,
+    vec_col: str,
+    model: PQModel,
+    cents: np.ndarray,
+    rotation: np.ndarray | None = None,
+):
+    """The ADC query side: collect the (driver-sized) query set,
+    normalize it (and rotate it into an OPQ index's space), and build
+    per query the (m, k_codes) LUT of subspace inner products,
+    LUT[q, s, j] = q_s · codeword_{s,j}, plus the q̂·ĉ offset to each
+    coarse centroid in ``cents``. Returns (qids, luts, offsets)."""
+    rows = queries.select(
+        F.col(query_id).alias("qid"),
+        F.col(vec_col).cast("array<double>").alias("qv"),
+    ).collect()
+    qx = _normalize(
+        np.vstack([np.asarray(r["qv"], dtype=np.float64) for r in rows])
+    )
+    if rotation is not None:
+        qx = qx @ rotation.T
+    luts = np.einsum("qsd,skd->qsk", _subspaces(qx, model.m), model.codebooks)
+    return [int(r["qid"]) for r in rows], luts, qx @ cents.T
+
+
+def _adc_shortlist(
+    codes: DataFrame, qids, luts: np.ndarray, offsets: np.ndarray, probes,
+    n_local: int,
+) -> DataFrame:
+    """The ADC scorer over a (_cid, cluster, codes) frame: per Arrow
+    batch and query, score = offset[q, cluster] + Σ_s LUT[q, s,
+    code_s] over the rows of the query's ``probes`` clusters, and emit
+    only the batch's top ``n_local`` (np.argpartition) as (qid, cid,
+    score 6dp), so the global rank runs over candidates × batches
+    rows. Plain PQ is one cluster (0) with offset 0."""
+    m = luts.shape[1]
+    cols = np.arange(m)
 
     def score(batches):
         import pyarrow as pa
@@ -592,70 +638,62 @@ def pq_topk_adc(
             )  # pin both dims: flatten() drops null entries, so -1
             # could silently misalign codes with cids (r13 advisor)
             cids = b.column("_cid").to_numpy(zero_copy_only=False)
-            cols = np.arange(m)
+            cls = b.column("cluster").to_numpy(zero_copy_only=False)
             out_q, out_c, out_s = [], [], []
             for qi, qid in enumerate(qids):
-                sc = luts[qi][cols, codes].sum(axis=1)  # (n,)
+                mask = np.isin(cls, probes[qi])
+                if not mask.any():
+                    continue
+                sc = offsets[qi, cls[mask]] + luts[qi][cols, codes[mask]].sum(
+                    axis=1
+                )
                 top = min(n_local, len(sc))
                 idx = np.argpartition(-sc, top - 1)[:top]
                 out_q.append(np.full(top, qid, dtype=np.int64))
-                out_c.append(cids[idx].astype(np.int64))
+                out_c.append(cids[mask][idx].astype(np.int64))
                 out_s.append(_round_half_away(sc[idx], 6))
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(np.concatenate(out_q), pa.int64()),
-                    pa.array(np.concatenate(out_c), pa.int64()),
-                    pa.array(np.concatenate(out_s), pa.float64()),
-                ],
-                names=["qid", "cid", "score"],
-            )
+            if out_q:
+                yield pa.RecordBatch.from_arrays(
+                    [
+                        pa.array(np.concatenate(out_q), pa.int64()),
+                        pa.array(np.concatenate(out_c), pa.int64()),
+                        pa.array(np.concatenate(out_s), pa.float64()),
+                    ],
+                    names=["qid", "cid", "score"],
+                )
 
-    from pyspark.sql import Window
+    return codes.mapInArrow(score, schema="qid long, cid long, score double")
 
-    local = codes_df.select(
-        F.col(id_col).alias("_cid"), "codes"
-    ).mapInArrow(score, schema="qid long, cid long, score double")
-    w = Window.partitionBy("qid").orderBy(
-        F.col("score").desc(), F.col("cid").asc()
-    )
-    ranked = local.withColumn("rnk", F.row_number().over(w))
+
+def _adc_topk(
+    shortlist: DataFrame,
+    *,
+    k: int,
+    rerank: int,
+    rerank_with: DataFrame | None,
+    queries: DataFrame,
+    query_id: str,
+    query_vec_col: str,
+    corpus_id: str,
+    corpus_vec_col: str,
+) -> DataFrame:
+    """Both ADC kernels' tail: the per-query top-``k`` of the ADC
+    scores, or, with ``rerank_with``, the top-``rerank`` ADC survivors
+    (as ``adc``) reranked by exact cosine (as ``score``)."""
     if rerank_with is None:
-        return ranked.filter(F.col("rnk") <= k).select(
-            "qid", "rnk", "cid", "score"
-        )
-
-    from .similarity import _as_double_sql, _cosine_sql
-
-    survivors = ranked.filter(F.col("rnk") <= rerank).select(
-        "qid", "cid", F.col("score").alias("adc")
-    )
-    qv = (rerank_queries if rerank_queries is not None else queries).select(
-        F.col(query_id_col).alias("qid"),
-        F.expr(_as_double_sql(query_vec_col)).alias("qv"),
-    )
-    cv = rerank_with.select(
-        F.col(id_col).alias("cid"),
-        F.expr(_as_double_sql(corpus_vec_col)).alias("cv"),
-    )
-    exact = (
-        cv.join(F.broadcast(survivors), "cid")
-        .join(F.broadcast(qv), "qid")
-        .select(
-            "qid",
-            "cid",
-            "adc",
-            F.expr(f"round({_cosine_sql('qv', 'cv', safe=True)}, 6)").alias(
-                "score"
-            ),
-        )
-    )
-    we = Window.partitionBy("qid").orderBy(
-        F.col("score").desc(), F.col("cid").asc()
-    )
-    return (
-        exact.withColumn("rnk", F.row_number().over(we))
-        .filter(F.col("rnk") <= k)
-        .select("qid", "rnk", "cid", "score", "adc")
+        return rank_per_query(shortlist, "score", k)
+    return exact_rerank(
+        rank_per_query(shortlist, "score", rerank).withColumnRenamed(
+            "score", "adc"
+        ),
+        queries,
+        rerank_with,
+        k=k,
+        score="score",
+        query_id=query_id,
+        query_vec_col=query_vec_col,
+        corpus_id=corpus_id,
+        corpus_vec_col=corpus_vec_col,
     )
 
 
@@ -866,139 +904,48 @@ def cosine_topk_ivf_pq(
     touches no index table (the exact rerank joins the caller's own
     corpus). ``verify_consistency=False`` keeps the frame lazy for
     plan inspection."""
-    from pyspark.sql import Window
-
-    from .similarity import _as_double_sql, _cosine_sql, _route_queries
-
-    n_local = rerank if rerank_with is not None else k
-
     def scan(meta):
-        m = int(meta["m"])
         R, raw_cents, model = _load_model(spark, path, meta)
         # persisted centroids are the RAW k-means means (the append path
         # assigns with them); score offsets and routing want the
         # normalized form — cosine routing is norm-invariant anyway
         cents = _normalize(raw_cents)
-        q_rows = queries.select(
-            F.col(query_id).alias("qid"),
-            F.col(query_vec_col).cast("array<double>").alias("qv"),
-        ).collect()
-        qids = [int(r["qid"]) for r in q_rows]
-        qx = _normalize(
-            np.vstack([np.asarray(r["qv"], dtype=np.float64) for r in q_rows])
+        qids, luts, offsets = _query_luts(
+            queries, query_id, query_vec_col, model, cents, R
         )
-        if R is not None:
-            qx = qx @ R.T  # into the index's rotated space
-        luts = np.einsum("qsd,skd->qsk", _subspaces(qx, m), model.codebooks)
-        offsets = qx @ cents.T  # (nq, k_clusters): q̂·ĉ
-
         centroids_df = spark.createDataFrame(
             [(int(i), [float(x) for x in c]) for i, c in enumerate(cents)],
             "cluster int, centroid array<double>",
         )
-        q = queries.select(
-            F.col(query_id).alias("qid"),
-            F.expr(_as_double_sql(query_vec_col)).alias("qv"),
-        )
+        q = query_vectors(queries, query_id, query_vec_col)
         if R is not None:
             q = rotate_vectors(q, R, vec_col="qv")
-        routed = _route_queries(q, centroids_df, nprobe)
+        routed = route_queries(q, centroids_df, nprobe)
         probed = sorted(
             r["cluster"] for r in routed.select("cluster").distinct().collect()
         )
-        codes_df = spark.read.parquet(f"{path}/codes").filter(
+        qprobes = {qid: [] for qid in qids}
+        for r in routed.select("qid", "cluster").collect():
+            qprobes[int(r["qid"])].append(int(r["cluster"]))
+        codes = spark.read.parquet(f"{path}/codes").filter(
             F.col("cluster").isin(probed)
         )
-        qprobes = {
-            int(r["qid"]): set() for r in q_rows
-        }
-        for r in routed.select("qid", "cluster").collect():
-            qprobes[int(r["qid"])].add(int(r["cluster"]))
-        cols = np.arange(m)
+        return _adc_shortlist(
+            codes.select(
+                F.col(meta["id_col"]).alias("_cid"), "cluster", "codes"
+            ),
+            qids, luts, offsets, [qprobes[qid] for qid in qids],
+            rerank if rerank_with is not None else k,
+        )
 
-        def score(batches):
-            import pyarrow as pa
-
-            for b in batches:
-                if not b.num_rows:
-                    continue
-                codes = (
-                    b.column("codes")
-                    .flatten()
-                    .to_numpy(zero_copy_only=False)
-                    .reshape(b.num_rows, m)
-                )
-                cids = b.column("_cid").to_numpy(zero_copy_only=False)
-                cls = b.column("cluster").to_numpy(zero_copy_only=False)
-                out_q, out_c, out_s = [], [], []
-                for qi, qid in enumerate(qids):
-                    mask = np.isin(cls, list(qprobes[qid]))
-                    if not mask.any():
-                        continue
-                    sc = offsets[qi, cls[mask]] + luts[qi][
-                        cols, codes[mask]
-                    ].sum(axis=1)
-                    top = min(n_local, len(sc))
-                    idx = np.argpartition(-sc, top - 1)[:top]
-                    out_q.append(np.full(top, qid, dtype=np.int64))
-                    out_c.append(cids[mask][idx].astype(np.int64))
-                    out_s.append(_round_half_away(sc[idx], 6))
-                if out_q:
-                    yield pa.RecordBatch.from_arrays(
-                        [
-                            pa.array(np.concatenate(out_q), pa.int64()),
-                            pa.array(np.concatenate(out_c), pa.int64()),
-                            pa.array(np.concatenate(out_s), pa.float64()),
-                        ],
-                        names=["qid", "cid", "score"],
-                    )
-
-        return codes_df.select(
-            F.col(meta["id_col"]).alias("_cid"), "cluster", "codes"
-        ).mapInArrow(score, schema="qid long, cid long, score double")
-
-    meta, local = ivfstore.probe(
+    meta, shortlist = ivfstore.probe(
         spark, path, IVF_PQ, scan, verify_consistency=verify_consistency,
         retries=retries, race_hook=_race_hook,
     )
-    w = Window.partitionBy("qid").orderBy(
-        F.col("score").desc(), F.col("cid").asc()
-    )
-    ranked = local.withColumn("rnk", F.row_number().over(w))
-    if rerank_with is None:
-        return ranked.filter(F.col("rnk") <= k).select(
-            "qid", "rnk", "cid", "score"
-        )
-    survivors = ranked.filter(F.col("rnk") <= rerank).select(
-        "qid", "cid", F.col("score").alias("adc")
-    )
-    qv = queries.select(
-        F.col(query_id).alias("qid"),
-        F.expr(_as_double_sql(query_vec_col)).alias("qv"),
-    )
-    cv = rerank_with.select(
-        F.col(meta["id_col"]).alias("cid"),
-        F.expr(_as_double_sql(corpus_vec_col)).alias("cv"),
-    )
-    exact = (
-        cv.join(F.broadcast(survivors), "cid")
-        .join(F.broadcast(qv), "qid")
-        .select(
-            "qid",
-            "cid",
-            "adc",
-            F.expr(f"round({_cosine_sql('qv', 'cv', safe=True)}, 6)").alias(
-                "score"
-            ),
-        )
-    )
-    we = Window.partitionBy("qid").orderBy(
-        F.col("score").desc(), F.col("cid").asc()
-    )
-    return (
-        exact.withColumn("rnk", F.row_number().over(we))
-        .filter(F.col("rnk") <= k)
-        .select("qid", "rnk", "cid", "score", "adc")
+    return _adc_topk(
+        shortlist, k=k, rerank=rerank, rerank_with=rerank_with,
+        queries=queries, query_id=query_id, query_vec_col=query_vec_col,
+        corpus_id=meta["id_col"], corpus_vec_col=corpus_vec_col,
     )
 
 

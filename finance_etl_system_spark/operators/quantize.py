@@ -30,7 +30,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.sqltext import sql_ident
+from .similarity import as_double_sql, exact_rerank, rank_per_query
 
 Q_MAX = 127
 
@@ -67,9 +67,7 @@ def quantize_int8(
     scale subtree is duplicated inside the codes lambda either way —
     Catalyst expressions have no DAG sharing). Parity pinned in
     tests/test_quantize_sqltext.py."""
-    from .similarity import _as_double_sql
-
-    v = _as_double_sql(vec_col)
+    v = as_double_sql(vec_col)
     scale = f"array_max(transform({v}, x -> abs(x))) / {float(Q_MAX)!r}D"
     codes = (
         f"transform({v}, x -> CASE WHEN {scale} = 0"
@@ -125,10 +123,9 @@ def cosine_topk_sq8(
 
     Plan shape: corpus never shuffles (one UDF pass + posexplode),
     coarse top-``rerank`` per query via window, exact cosine on
-    survivors only, top-``k``.
+    survivors only, top-``k`` (operators/similarity's shared
+    ``rank_per_query`` and ``exact_rerank``).
     """
-    from pyspark.sql import Window
-
     # query codes: JVM quantize, |queries|-row collect
     qrows = (
         quantize_int8(queries, vec_col, out_codes="c", out_scale="s")
@@ -181,46 +178,14 @@ def cosine_topk_sq8(
             "coarse",
         )
     )
-    wc = Window.partitionBy("qid").orderBy(
-        F.col("coarse").desc(), F.col("cid").asc()
-    )
-    survivors = (
-        coarse_scored.withColumn("crnk", F.row_number().over(wc))
-        .filter(F.col("crnk") <= rerank)
-        .select("qid", "cid", "coarse")
-    )
-
-    # float vectors fetched ONLY for the ≤ n_queries×rerank survivors:
-    # broadcast the survivor id set into the corpus scan (a
-    # semi-join-shaped broadcast hash join — the corpus still never
-    # shuffles), queries re-broadcast by qid
-    from .similarity import _as_double_sql, _cosine_sql
-
-    qv = queries.selectExpr(
-        f"{sql_ident(query_id)} AS qid", f"{_as_double_sql(vec_col)} AS qv"
-    )
-    cv = corpus.selectExpr(
-        f"{sql_ident(corpus_id)} AS cid", f"{_as_double_sql(vec_col)} AS cv"
-    )
-    exact = (
-        cv.join(F.broadcast(survivors), "cid")
-        .join(F.broadcast(qv), "qid")
-        .selectExpr(
-            "qid",
-            "cid",
-            "coarse",
-            # try_divide: a zero-norm vector reaching the rerank gets
-            # cosine NULL (ranks last) instead of an ANSI-mode
-            # DIVIDE_BY_ZERO abort — quantize_int8's contract
-            # explicitly admits all-zero vectors
-            f"round({_cosine_sql('qv', 'cv', safe=True)}, 6) AS cosine",
-        )
-    )
-    we = Window.partitionBy("qid").orderBy(
-        F.col("cosine").desc(), F.col("cid").asc()
-    )
-    return (
-        exact.withColumn("rnk", F.row_number().over(we))
-        .filter(F.col("rnk") <= k)
-        .select("qid", "rnk", "cid", "cosine", "coarse")
+    return exact_rerank(
+        rank_per_query(coarse_scored, "coarse", rerank),
+        queries,
+        corpus,
+        k=k,
+        score="cosine",
+        query_id=query_id,
+        query_vec_col=vec_col,
+        corpus_id=corpus_id,
+        corpus_vec_col=vec_col,
     )

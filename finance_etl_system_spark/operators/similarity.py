@@ -11,6 +11,11 @@ Three tiers, as a real 100 TB pipeline would deploy them:
 - ``cosine_topk_ivf``: inverted-file — corpus pre-bucketed by coarse
   centroid (here: per-label mean, standing in for k-means), queries
   probe the ``nprobe`` nearest centroids only.
+
+Every ANN kernel here and in operators/{quantize,pq}.py ends in one
+shared tail: ``cosine_score_sql`` (the safe cosine, rounded before
+ranking), ``rank_per_query`` (score desc, ``cid`` tiebreak, first k)
+and, for the compressed tiers, ``exact_rerank`` over the shortlist.
 """
 
 from __future__ import annotations
@@ -29,7 +34,7 @@ from .ivfstore import IVF_STREAM_BATCH_BASE, ProbeRaceError  # noqa: F401 — pu
 # registration costs py4j round trips (the bruteforce construction
 # measured ~250 ms of pure driver time as a Column chain). The
 # sequential (acc, v) -> acc + v fold keeps scores bit-stable.
-def _as_double_sql(col: str) -> str:
+def as_double_sql(col: str) -> str:
     return f"transform({sql_ident(col)}, x -> CAST(x AS DOUBLE))"
 
 
@@ -44,13 +49,82 @@ def _norm_sql(a: str) -> str:
     return f"sqrt({_dot_sql(a, a)})"
 
 
-def _cosine_sql(a: str, b: str, *, safe: bool = False) -> str:
-    """cos(a, b); ``safe`` (``try_divide``) gives NULL for a zero
-    vector instead of ANSI mode's DIVIDE_BY_ZERO error."""
-    den = f"{_norm_sql(a)} * {_norm_sql(b)}"
-    if safe:
-        return f"try_divide({_dot_sql(a, b)}, {den})"
-    return f"{_dot_sql(a, b)} / ({den})"
+def _cosine_sql(a: str, b: str) -> str:
+    """cos(a, b). ``try_divide`` gives a zero-norm vector a NULL
+    cosine, which ranks last, under either ANSI setting (a plain
+    division raises DIVIDE_BY_ZERO with ANSI on, Spark 4's default)."""
+    return f"try_divide({_dot_sql(a, b)}, {_norm_sql(a)} * {_norm_sql(b)})"
+
+
+def cosine_score_sql(a: str, b: str, round_dp: int = 6) -> str:
+    """The score every ANN path ranks by: the safe cosine, rounded
+    BEFORE ranking so ordering is deterministic across engines/plans."""
+    return f"round({_cosine_sql(a, b)}, {int(round_dp)})"
+
+
+def query_vectors(queries: DataFrame, query_id: str, vec_col: str) -> DataFrame:
+    """(qid, qv): the query set as double arrays."""
+    return queries.selectExpr(
+        f"{sql_ident(query_id)} AS qid", f"{as_double_sql(vec_col)} AS qv"
+    )
+
+
+def corpus_vectors(
+    corpus: DataFrame, corpus_id: str, vec_col: str, *keep: str
+) -> DataFrame:
+    """(cid, *keep, cv): the corpus as double arrays."""
+    return corpus.selectExpr(
+        f"{sql_ident(corpus_id)} AS cid",
+        *keep,
+        f"{as_double_sql(vec_col)} AS cv",
+    )
+
+
+def rank_per_query(scored: DataFrame, score: str, k: int, *cols: str) -> DataFrame:
+    """The per-query top-k every ANN kernel ends in: rank each qid's
+    rows by ``score`` descending (NULL last) with ``cid`` ascending as
+    the tiebreak, keep the first ``k``, and return (qid, rnk, cid,
+    score, *cols)."""
+    w = Window.partitionBy("qid").orderBy(F.col(score).desc(), F.col("cid").asc())
+    return (
+        scored.withColumn("rnk", F.row_number().over(w))
+        .filter(F.col("rnk") <= k)
+        .select("qid", "rnk", "cid", score, *cols)
+    )
+
+
+def exact_rerank(
+    shortlist: DataFrame,
+    queries: DataFrame,
+    corpus: DataFrame,
+    *,
+    k: int,
+    score: str,
+    query_id: str,
+    query_vec_col: str,
+    corpus_id: str,
+    corpus_vec_col: str,
+) -> DataFrame:
+    """Exact cosine over a coarse shortlist (a :func:`rank_per_query`
+    frame): float vectors are fetched ONLY for the ≤ n_queries×rerank
+    survivors (the survivor set broadcasts into the corpus scan, a
+    semi-join-shaped broadcast hash join, so the corpus never
+    shuffles), the queries broadcast by qid, and the safe cosine
+    re-ranks the top ``k``. Returns (qid, rnk, cid, score, *coarse),
+    where *coarse are the shortlist's own score columns."""
+    coarse = [c for c in shortlist.columns if c not in ("qid", "rnk", "cid")]
+    exact = (
+        corpus_vectors(corpus, corpus_id, corpus_vec_col)
+        .join(F.broadcast(shortlist.select("qid", "cid", *coarse)), "cid")
+        .join(F.broadcast(query_vectors(queries, query_id, query_vec_col)), "qid")
+        .selectExpr(
+            "qid",
+            "cid",
+            *map(sql_ident, coarse),
+            f"{cosine_score_sql('qv', 'cv')} AS {sql_ident(score)}",
+        )
+    )
+    return rank_per_query(exact, score, k, *coarse)
 
 
 def cosine_topk_bruteforce(
@@ -71,23 +145,14 @@ def cosine_topk_bruteforce(
     partition heads). Cosine is rounded BEFORE ranking so ordering is
     deterministic across engines/plans.
     """
-    q = queries.selectExpr(
-        f"{sql_ident(query_id)} AS qid", f"{_as_double_sql(vec_col)} AS qv"
+    scored = (
+        corpus_vectors(corpus, corpus_id, vec_col)
+        .crossJoin(F.broadcast(query_vectors(queries, query_id, vec_col)))
+        .selectExpr(
+            "qid", "cid", f"{cosine_score_sql('qv', 'cv', round_dp)} AS cosine"
+        )
     )
-    c = corpus.selectExpr(
-        f"{sql_ident(corpus_id)} AS cid", f"{_as_double_sql(vec_col)} AS cv"
-    )
-    scored = c.crossJoin(F.broadcast(q)).selectExpr(
-        "qid",
-        "cid",
-        f"round({_cosine_sql('qv', 'cv')}, {int(round_dp)}) AS cosine",
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col("cid").asc())
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("qid", "rnk", "cid", "cosine")
-    )
+    return rank_per_query(scored, "cosine", k)
 
 
 def _planes(nbits: int, dim: int, seed: int = 7) -> np.ndarray:
@@ -161,7 +226,8 @@ def cosine_topk_lsh(
     Spark job (a cold one-row scan of the corpus at 100 TB) on the
     query-BUILD path.
     """
-    assert nbits % bands == 0
+    if nbits % bands:
+        raise ValueError(f"nbits={nbits} must divide into bands={bands}")
     rpb = nbits // bands
     if dim is None:
         dim = len(corpus.select(vec_col).first()[0])
@@ -170,7 +236,7 @@ def cosine_topk_lsh(
     sig_udf = signature_udf(planes) if use_udf else None
 
     def with_bands(df, id_alias):
-        v_sql = _as_double_sql(vec_col)
+        v_sql = as_double_sql(vec_col)
         v = F.expr(v_sql)
         sig = sig_udf(v) if use_udf else signature_col(v_sql, planes)
         rows = df.select(
@@ -210,20 +276,11 @@ def cosine_topk_lsh(
     cands = (
         cb.join(F.broadcast(qb), ["band", "sigb"])
         .dropDuplicates(["qid", "cid"])
-        .select(
-            "qid",
-            "cid",
-            F.expr(f"round({_cosine_sql('qid_v', 'cid_v')}, 6)").alias(
-                "cosine"
-            ),
+        .selectExpr(
+            "qid", "cid", f"{cosine_score_sql('qid_v', 'cid_v')} AS cosine"
         )
     )
-    w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col("cid").asc())
-    return (
-        cands.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("qid", "rnk", "cid", "cosine")
-    )
+    return rank_per_query(cands, "cosine", k)
 
 
 def cosine_topk_ivf(
@@ -244,10 +301,8 @@ def cosine_topk_ivf(
     (query × centroid) distances — tiny; the corpus is scanned with a
     cluster-membership semi-filter, which at scale is a partition-
     pruned read when the table is partitioned by cluster."""
-    c = corpus.select(
-        F.col(corpus_id).alias("cid"),
-        F.col(cluster_col).alias("cluster"),
-        F.expr(_as_double_sql(vec_col)).alias("cv"),
+    c = corpus_vectors(
+        corpus, corpus_id, vec_col, f"{sql_ident(cluster_col)} AS cluster"
     )
     centroids = (
         c.select("cluster", F.posexplode("cv").alias("pos", "x"))
@@ -257,24 +312,22 @@ def cosine_topk_ivf(
         .agg(F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("pm"))
         .select("cluster", F.transform("pm", lambda s: s["m"]).alias("centroid"))
     )
-    q = queries.select(
-        F.col(query_id).alias("qid"), F.expr(_as_double_sql(vec_col)).alias("qv")
+    routed = route_queries(
+        query_vectors(queries, query_id, vec_col), centroids, nprobe
     )
-    routed = _route_queries(q, centroids, nprobe)
-    scored = c.join(F.broadcast(routed), "cluster").select(
-        "qid",
-        "cid",
-        F.expr(f"round({_cosine_sql('qv', 'cv')}, 6)").alias("cosine"),
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col("cid").asc())
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("qid", "rnk", "cid", "cosine")
-    )
+    return _score_routed(c, routed, k)
 
 
-def _route_queries(q: DataFrame, centroids: DataFrame, nprobe: int) -> DataFrame:
+def _score_routed(c: DataFrame, routed: DataFrame, k: int) -> DataFrame:
+    """Exact cosine of each routed (qid, qv, cluster) against the
+    (cid, cluster, cv) rows of its probed clusters, then the top-k."""
+    scored = c.join(F.broadcast(routed), "cluster").selectExpr(
+        "qid", "cid", f"{cosine_score_sql('qv', 'cv')} AS cosine"
+    )
+    return rank_per_query(scored, "cosine", k)
+
+
+def route_queries(q: DataFrame, centroids: DataFrame, nprobe: int) -> DataFrame:
     """(qid, qv) × broadcast centroid table → the nprobe nearest
     clusters per query (cosine routing, deterministic tiebreak)."""
     return (
@@ -457,7 +510,7 @@ def ivf_index_stats(spark, path: str) -> DataFrame:
 
     def per_cluster(meta):
         v = spark.read.parquet(f"{path}/vectors").select(
-            "cluster", F.expr(_as_double_sql(meta["vec_col"])).alias("v")
+            "cluster", F.expr(as_double_sql(meta["vec_col"])).alias("v")
         ).join(F.broadcast(spark.read.parquet(f"{path}/centroids")), "cluster")
         resid = F.expr(f"1.0D - ({_cosine_sql('v', 'centroid')})")
         return v.groupBy("cluster").agg(
@@ -504,9 +557,7 @@ def cosine_topk_ivf_index(
     or compaction re-runs the probe (up to ``retries``) against the
     new generation. ``verify_consistency=False`` keeps the frame lazy
     for the partition-pruning plan/metrics tests."""
-    q = queries.select(
-        F.col(query_id).alias("qid"), F.expr(_as_double_sql(vec_col)).alias("qv")
-    )
+    q = query_vectors(queries, query_id, vec_col)
 
     def scan(meta):
         vectors = spark.read.parquet(f"{path}/vectors")
@@ -523,30 +574,17 @@ def cosine_topk_ivf_index(
                 )
         # routing is centroid-table-sized work; checkpoint so the collect
         # below and the scoring join don't recompute it
-        routed = _route_queries(
+        routed = route_queries(
             q, spark.read.parquet(f"{path}/centroids"), nprobe
         ).localCheckpoint(eager=True)
         probed = sorted(
             r["cluster"] for r in routed.select("cluster").distinct().collect()
         )
-        c = vectors.filter(F.col("cluster").isin(probed)).select(
-            F.col(id_col).alias("cid"),
-            "cluster",
-            F.expr(_as_double_sql(index_vec_col)).alias("cv"),
+        c = corpus_vectors(
+            vectors.filter(F.col("cluster").isin(probed)),
+            id_col, index_vec_col, "cluster",
         )
-        scored = c.join(F.broadcast(routed), "cluster").select(
-            "qid",
-            "cid",
-            F.expr(f"round({_cosine_sql('qv', 'cv')}, 6)").alias("cosine"),
-        )
-        w = Window.partitionBy("qid").orderBy(
-            F.col("cosine").desc(), F.col("cid").asc()
-        )
-        return (
-            scored.withColumn("rnk", F.row_number().over(w))
-            .filter(F.col("rnk") <= k)
-            .select("qid", "rnk", "cid", "cosine")
-        )
+        return _score_routed(c, routed, k)
 
     _, out = ivfstore.probe(
         spark, path, IVF, scan, verify_consistency=verify_consistency,

@@ -16,12 +16,28 @@ driver-sized. These greps pin that convention:
 - the set of engine modules catching ``AnalysisException`` is CLOSED
   too: state reads go through ``functions/generations.read_state``,
   and only the two index-probe race fences read the error class
-  themselves.
+  themselves;
+- no ``assert`` in engine code: argument checks raise ``ValueError``
+  (an assert vanishes under ``python -O``);
+- the per-query ANN rank window and the cosine SQL text live only in
+  ``operators/similarity.py``, so every ANN kernel ends in its one
+  safe cosine and one rank.
 """
 
 from __future__ import annotations
 
+import ast
 import pathlib
+
+import pytest
+
+from finance_etl_system_spark.operators import (
+    chunking,
+    dedup,
+    mining,
+    pq,
+    similarity,
+)
 
 ENGINE = pathlib.Path(__file__).parent.parent / "finance_etl_system_spark"
 
@@ -131,3 +147,77 @@ def test_analysis_exception_catch_sites_are_closed():
         "a state read must go through functions/generations.read_state, "
         f"not its own except AnalysisException: {sorted(using)}"
     )
+
+
+def test_no_assert_in_engine():
+    hits = [
+        f"{p.relative_to(ENGINE)}:{node.lineno}"
+        for p in _engine_files()
+        for node in ast.walk(ast.parse(p.read_text()))
+        if isinstance(node, ast.Assert)
+    ]
+    assert not hits, (
+        "check caller arguments with a ValueError, not assert (asserts "
+        f"vanish under python -O): {hits}"
+    )
+
+
+# the per-query rank window, the safe division and the dot-product
+# lambda of the cosine text
+_ANN_TAIL_MARKERS = ('partitionBy("qid")', "try_divide(", "-> x * y")
+
+
+def test_ann_rank_and_cosine_text_are_closed_to_similarity():
+    using = {
+        str(p.relative_to(ENGINE))
+        for p in _engine_files()
+        if any(m in p.read_text() for m in _ANN_TAIL_MARKERS)
+    }
+    assert using == {"operators/similarity.py"}, (
+        "ANN kernels rank with similarity.rank_per_query/exact_rerank "
+        f"and score with its cosine_score_sql: {sorted(using)}"
+    )
+
+
+# one call per engine argument check, each with a bad split or range
+_BAD_ARGUMENT_CALLS = {
+    "chunking.avg_size_power_of_2": lambda df: (
+        chunking.content_defined_chunks(df, avg_size=48)
+    ),
+    "chunking.size_order": lambda df: chunking.content_defined_chunks(
+        df, min_size=128, avg_size=64
+    ),
+    "dedup.minhash_dedup_incremental": lambda df: (
+        dedup.minhash_dedup_incremental(df, df, num_perm=10, bands=3)
+    ),
+    "dedup.minhash_lsh_pairs": lambda df: dedup.minhash_lsh_pairs(
+        df, num_perm=10, bands=3
+    ),
+    "dedup.minhash_lsh_match": lambda df: dedup.minhash_lsh_match(
+        df, df, num_perm=10, bands=3
+    ),
+    "dedup.lsh_candidate_stats": lambda df: dedup.lsh_candidate_stats(
+        df, num_perm=10, bands=3
+    ),
+    "dedup.embedding_cosine_pairs": lambda df: dedup.embedding_cosine_pairs(
+        df, lsh_nbits=10, bands=3, dim=2
+    ),
+    "mining.mine_triplets": lambda df: mining.mine_triplets(
+        df, neg_lo=0.3, neg_hi=0.2
+    ),
+    "pq.opq_rotation": lambda df: pq.opq_rotation(df, dim=10, m=3),
+    "pq.pq_train": lambda df: pq.pq_train(df, dim=10, m=3),
+    "similarity.cosine_topk_lsh": lambda df: similarity.cosine_topk_lsh(
+        df, df, nbits=10, bands=3, dim=2
+    ),
+}
+
+
+@pytest.mark.parametrize("site", sorted(_BAD_ARGUMENT_CALLS))
+def test_bad_arguments_raise_value_error(spark, site):
+    df = spark.createDataFrame(
+        [(1, 1, "a b c", [1.0, 0.0])],
+        "doc_id long, vec_id long, text string, embedding array<double>",
+    )
+    with pytest.raises(ValueError):
+        _BAD_ARGUMENT_CALLS[site](df)

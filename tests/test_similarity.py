@@ -636,6 +636,73 @@ def test_sq8_zero_norm_vectors_score_null_and_rank_last(spark):
                for r in zero_rows)
 
 
+@pytest.mark.parametrize("ansi", [True, False], ids=["ansi", "no_ansi"])
+@pytest.mark.parametrize(
+    "method",
+    ["brute", "lsh", "ivf", "sq8", "pq", "ivf_index", "ivf_pq_index"],
+)
+def test_zero_norm_vector_scores_null_and_ranks_last(
+    spark, tmp_path, method, ansi
+):
+    """Every ANN method gives an all-zero corpus vector a NULL score
+    and ranks it last for each query that meets it, whatever the ANSI
+    setting: the shared cosine is ``try_divide``, so ANSI mode's
+    DIVIDE_BY_ZERO never fires and a NULL sorts last in the desc
+    rank."""
+    import numpy as np
+
+    from finance_etl_system_spark.operators.ann import similarity_search
+    from finance_etl_system_spark.operators.pq import build_ivf_pq_index
+    from finance_etl_system_spark.operators.similarity import build_ivf_index
+
+    rng = np.random.RandomState(7)
+    rows = [(i, i % 2, [float(x) for x in rng.randn(8)]) for i in range(20)]
+    rows.append((99, 1, [0.0] * 8))  # the zero-norm vector
+    corpus = spark.createDataFrame(
+        rows, "vec_id long, label int, embedding array<double>"
+    )
+    queries = corpus.filter("vec_id < 2").select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
+    opts = {
+        "brute": {},
+        "lsh": {"nbits": 4, "bands": 4},
+        "ivf": {"nprobe": 2},
+        "sq8": {"rerank": 30},
+        "pq": {"m": 2, "k_codes": 4, "max_iter": 2, "rerank": 30},
+        "ivf_index": {"nprobe": 2},
+        "ivf_pq_index": {"nprobe": 2, "rerank": 30},
+    }[method]
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", str(ansi).lower())
+    try:
+        path = str(tmp_path / method)
+        if method == "ivf_index":
+            build_ivf_index(corpus, path, k_clusters=2, max_iter=2)
+        elif method == "ivf_pq_index":
+            build_ivf_pq_index(
+                corpus, path, dim=8, k_clusters=2, m=2, k_codes=4, max_iter=2
+            )
+        got = similarity_search(
+            queries,
+            method=method,
+            corpus=corpus,
+            index_path=path,
+            k=30,
+            dim=8,
+            **opts,
+        ).collect()
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)
+    zero_rows = [r for r in got if r.cid == 99]
+    assert zero_rows, got
+    assert all(r.score is None for r in zero_rows)
+    assert all(r.score is not None for r in got if r.cid != 99)
+    assert all(
+        r.rnk == max(x.rnk for x in got if x.qid == r.qid) for r in zero_rows
+    )
+
+
 def test_verify_ivf_index_detects_crash_and_replay_residue(
     spark, tmp_path
 ):

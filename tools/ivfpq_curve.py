@@ -106,17 +106,14 @@ def curve(spark, corpus, label: str):
         # pays); the batch union is larger but amortized across the
         # batch — re-derive routing with the probe's own helper
         from finance_etl_system_spark.operators.similarity import (
-            _as_double_sql,
-            _route_queries,
+            query_vectors,
+            route_queries,
         )
 
         cents = spark.read.parquet(f"{path}/centroids")
-        q = queries.select(
-            F.col("query_id").alias("qid"),
-            F.expr(_as_double_sql("embedding")).alias("qv"),
-        )
+        q = query_vectors(queries, "query_id", "embedding")
         per_q: dict[int, int] = {}
-        for r in _route_queries(q, cents, nprobe).select(
+        for r in route_queries(q, cents, nprobe).select(
             "qid", "cluster"
         ).collect():
             per_q[r["qid"]] = per_q.get(r["qid"], 0) + cluster_sizes.get(
