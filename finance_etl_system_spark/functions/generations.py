@@ -236,7 +236,8 @@ def read_state(spark: SparkSession, path: str, schema: str) -> DataFrame:
     is a path that does not exist, or a directory holding a committed
     ``_SUCCESS`` and no data file (what a zero-row static or append
     ``partitionBy`` write leaves; a zero-row dynamic overwrite leaves
-    an empty directory, so writers skip it). Anything else raises: a
+    an empty directory, which ``streaming/sinks.write_batch`` removes
+    again). Anything else raises: a
     corrupt part, an empty directory without ``_SUCCESS``, a
     half-written ``_temporary`` — an unreadable state read as empty
     would admit or re-append a whole batch and then overwrite the

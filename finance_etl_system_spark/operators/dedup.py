@@ -28,7 +28,14 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .partitioning import spread_for_expansion
-from .similarity import _dot_sql, _norm_sql, _planes, as_double_sql, signature_udf
+from .similarity import (
+    _dot_sql,
+    _norm_sql,
+    _planes,
+    as_double_sql,
+    signature_udf,
+    unit_vector_sql,
+)
 from .text import fingerprint, tokens, tokens_expr
 
 # MinHash modulus: 31-bit Mersenne prime keeps a*h+b within int64
@@ -783,12 +790,13 @@ def embedding_cosine_pairs(
     # so the O(n²) pair stage does a single dot product per pair. The
     # norm is materialized as its own column first — referencing it
     # from inside the transform lambda would re-fold it per element.
+    # A zero vector normalizes to NULLs, so it forms no pair.
     base = (
         df.select(
             F.col(id_col).alias("id"), F.expr(as_double_sql(vec_col)).alias("v0")
         )
         .withColumn("_n", F.expr(_norm_sql("v0")))
-        .select("id", F.transform("v0", lambda x: x / F.col("_n")).alias("v"))
+        .select("id", F.expr(unit_vector_sql("v0", "_n")).alias("v"))
     )
     if lsh_nbits is None:
         a = base.select(F.col("id").alias("id_a"), F.col("v").alias("va"))

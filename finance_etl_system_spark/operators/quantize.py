@@ -27,9 +27,10 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.sqltext import sql_ident
 from .similarity import as_double_sql, exact_rerank, rank_per_query
 
 Q_MAX = 127
@@ -79,9 +80,12 @@ def quantize_int8(
     )
 
 
-def dequantize(codes: Column, scale: Column) -> Column:
+def dequantize_sql(codes: str, scale: str) -> str:
     """Reconstruct doubles from int8 codes: q_i * scale."""
-    return F.transform(codes, lambda q: q.cast("double") * scale)
+    return (
+        f"transform({sql_ident(codes)}, q -> CAST(q AS DOUBLE)"
+        f" * {sql_ident(scale)})"
+    )
 
 
 def cosine_topk_sq8(

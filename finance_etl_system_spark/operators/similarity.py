@@ -56,6 +56,13 @@ def _cosine_sql(a: str, b: str) -> str:
     return f"try_divide({_dot_sql(a, b)}, {_norm_sql(a)} * {_norm_sql(b)})"
 
 
+def unit_vector_sql(vec: str, norm: str) -> str:
+    """``vec`` divided by its precomputed ``norm`` column. A zero-norm
+    vector becomes all NULL under either ANSI setting, so every cosine
+    it enters is NULL, like :func:`_cosine_sql`'s."""
+    return f"transform({vec}, x -> try_divide(x, {norm}))"
+
+
 def cosine_score_sql(a: str, b: str, round_dp: int = 6) -> str:
     """The score every ANN path ranks by: the safe cosine, rounded
     BEFORE ranking so ordering is deterministic across engines/plans."""

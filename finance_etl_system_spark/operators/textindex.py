@@ -34,7 +34,12 @@ from pyspark.sql import functions as F
 from ..queries.retrieval import B, K1, token_array
 from ..functions.frames import ranked_topk
 from ..functions.confs import partition_overwrite
-from ..functions.generations import hadoop_fs, path_exists, read_state
+from ..functions.generations import (
+    hadoop_fs,
+    list_names,
+    path_exists,
+    read_state,
+)
 
 N_BUCKETS = 16
 
@@ -66,13 +71,17 @@ def _read_meta(spark: SparkSession, path: str) -> dict | None:
 
 def _read_index_table(spark: SparkSession, path: str, schema: str) -> DataFrame:
     """Read an index table. build_text_index always creates the dir
-    (an empty corpus leaves only _SUCCESS, read as an empty frame), so
-    a missing path is a typo'd or never-built index — that raises
-    rather than answering zero hits. The read is generation-resolved:
-    a streaming-built index may be compacted concurrently
-    (streaming/compaction.py::compact_stream_index)."""
+    (an empty corpus leaves only _SUCCESS, read as an empty frame),
+    and a streaming index whose batches held no token yet is an empty
+    index dir (streaming/sinks.write_batch leaves no empty table dir),
+    so any other missing table is a typo'd or never-built index — that
+    raises rather than answering zero hits. The read is
+    generation-resolved: a streaming-built index may be compacted
+    concurrently (streaming/compaction.py::compact_stream_index)."""
     if not path_exists(spark, path):
-        raise FileNotFoundError(f"no text index table at {path}")
+        index_dir = path.rsplit("/", 1)[0]
+        if not path_exists(spark, index_dir) or list_names(spark, index_dir):
+            raise FileNotFoundError(f"no text index table at {path}")
     return read_state(spark, path, schema)
 
 

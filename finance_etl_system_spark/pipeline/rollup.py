@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 
 from ..functions.confs import partition_overwrite
 from ..functions.generations import read_state
+from ..streaming.sinks import file_stream, start_foreach_batch
 
 _EVENTS_SCHEMA = "event_id LONG, ts TIMESTAMP, event_type STRING, value DOUBLE"
 
@@ -82,16 +83,11 @@ def stream_rollup(
     refresh re-aggregates the touched buckets — streaming arrival
     pattern, not log size, drives the work.
     """
-    raw = spark.readStream.schema(_EVENTS_SCHEMA).json(source_dir)
-
     def refresh(batch_df: DataFrame, batch_id: int) -> None:
         rollup_batch(batch_df, events_dir, rollup_dir, bucket=bucket)
 
-    return (
-        raw.writeStream.foreachBatch(refresh)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return start_foreach_batch(
+        file_stream(spark, source_dir, _EVENTS_SCHEMA), refresh, checkpoint_dir
     )
 
 

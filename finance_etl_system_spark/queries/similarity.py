@@ -13,8 +13,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from ..operators.quantize import cosine_topk_sq8, dequantize, quantize_int8
+from ..operators.quantize import cosine_topk_sq8, dequantize_sql, quantize_int8
 from ..operators.similarity import (
+    as_double_sql,
+    cosine_score_sql,
     cosine_topk_bruteforce,
     cosine_topk_ivf,
     cosine_topk_lsh,
@@ -262,13 +264,8 @@ def q_embedding_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     e = load_table(spark, sf_dir, "embeddings")
     q = quantize_int8(e)
-    v = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    dq = dequantize(F.col("qv"), F.col("q_scale"))
-    dot = lambda a, b: F.aggregate(  # noqa: E731
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    v = as_double_sql("embedding")
+    dq = dequantize_sql("qv", "q_scale")
     return (
         q.select(
             "vec_id",
@@ -283,11 +280,12 @@ def q_embedding_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
                 lambda acc, x: acc + F.abs(x),
             ).alias("q_l1"),
             F.round(
-                F.array_max(F.zip_with(v, dq, lambda x, y: F.abs(x - y))), 9
+                F.array_max(
+                    F.zip_with(F.expr(v), F.expr(dq), lambda x, y: F.abs(x - y))
+                ),
+                9,
             ).alias("max_abs_err"),
-            F.round(
-                dot(v, dq) / (F.sqrt(dot(v, v)) * F.sqrt(dot(dq, dq))), 6
-            ).alias("cos_dq"),
+            F.expr(cosine_score_sql(v, dq)).alias("cos_dq"),
         )
         .orderBy("vec_id")
     )

@@ -37,6 +37,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
 
+from .sinks import file_stream, start_foreach_batch, start_parquet_append
+
 BAR_SCHEMA = (
     "symbol string, bar_start timestamp, open double, high double, "
     "low double, close double, volume long, n_trades long"
@@ -191,12 +193,12 @@ def run_stream_ohlc(
 ):
     """File-source wiring for tests/demos: JSON ticks -> bars ->
     parquet sink, availableNow trigger. Returns the started query."""
-    raw = (
-        spark.readStream.schema(
-            "symbol STRING, event_time TIMESTAMP, price DOUBLE, volume LONG"
-        )
-        .option("maxFilesPerTrigger", 1)  # one micro-batch per file so
-        .json(source_dir)  # the watermark advances between batches
+    # one micro-batch per file, so the watermark advances between batches
+    raw = file_stream(
+        spark,
+        source_dir,
+        "symbol STRING, event_time TIMESTAMP, price DOUBLE, volume LONG",
+        max_files_per_trigger=1,
     )
     if imperative:
         # transformWithState requires the RocksDB state store provider
@@ -216,19 +218,9 @@ def run_stream_ohlc(
         def _write(batch_df: DataFrame, _bid: int) -> None:
             batch_df.write.mode("append").parquet(out_dir)
 
-        return (
-            bars.writeStream.outputMode("update")
-            .foreachBatch(_write)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
+        return start_foreach_batch(
+            bars, _write, checkpoint_dir, output_mode="update"
         )
-    bars = stream_ohlc_bars(raw, bucket=bucket)
-    return (
-        bars.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return start_parquet_append(
+        stream_ohlc_bars(raw, bucket=bucket), out_dir, checkpoint_dir
     )

@@ -39,10 +39,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.confs import partition_overwrite
 from ..functions.generations import read_state
 from ..functions.sqltext import pin_sql_text_conf
 from ..operators.substring import gram_keys, spans_from_flagged
+from .sinks import file_stream, start_foreach_batch, write_batch
 
 _COUNT_SCHEMA = "_h1 bigint, _h2 bigint, n bigint, batch_id bigint"
 
@@ -93,21 +93,8 @@ def boilerplate_increment_batch(
     spans = spans_from_flagged(
         grams.join(hot, key_cols).select("doc_id", "i"), k=k
     )
-    with partition_overwrite(spark, "dynamic"):
-        spans = spans.localCheckpoint(eager=True)
-        if not spans.isEmpty():
-            (
-                spans.withColumn("batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .partitionBy("batch_id")
-                .parquet(verdict_dir)
-            )
-        (
-            batch_counts.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .partitionBy("batch_id")
-            .parquet(counts_dir)
-        )
+    write_batch(spans, batch_id, verdict_dir)
+    write_batch(batch_counts, batch_id, counts_dir)
 
 
 def stream_boilerplate(
@@ -124,10 +111,9 @@ def stream_boilerplate(
     """Checkpointed streaming composition: JSON document batches →
     per-batch boilerplate spans against the cumulative gram-count log.
     Returns the started (availableNow) query."""
-    reader = spark.readStream.schema("doc_id LONG, text STRING")
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    docs = reader.json(source_dir)
+    docs = file_stream(
+        spark, source_dir, "doc_id LONG, text STRING", max_files_per_trigger
+    )
 
     def fb(batch_df: DataFrame, batch_id: int) -> None:
         boilerplate_increment_batch(
@@ -139,9 +125,4 @@ def stream_boilerplate(
             min_count=min_count,
         )
 
-    return (
-        docs.writeStream.foreachBatch(fb)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_foreach_batch(docs, fb, checkpoint_dir)

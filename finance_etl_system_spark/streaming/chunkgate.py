@@ -43,7 +43,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.confs import partition_overwrite
 from ..functions.generations import read_state
 from ..operators.chunking import chunk_dup_doc_ids, content_defined_chunks
 # re-exported: the chunk index compacts through the shared crash-safe
@@ -52,6 +51,7 @@ from .compaction import (  # noqa: F401 — public API of this module
     COMPACTED_BATCH_ID,
     compact_chunk_state,
 )
+from .sinks import file_stream, start_foreach_batch, write_batch
 
 _STATE_SCHEMA = "chunk_hash string, batch_id int"
 
@@ -94,11 +94,9 @@ def chunk_gate_batch(
         batch, text_col=text_col, id_col=id_col
     ).localCheckpoint(eager=True)
     # checkpoint the decision set too (r12, verdict r11 #6): its plan
-    # (owners groupBy + chunk-keyed join) used to re-execute for each
-    # of the four downstream actions (two isEmpty probes + two sink
-    # writes) — 3 redundant multi-stage jobs per batch, the dominant
-    # share of the measured ~8.6 s fixed floor. After the checkpoint
-    # the sinks join two in-memory tables.
+    # (owners groupBy + chunk-keyed join) would otherwise re-execute
+    # for each of the sink writes below. After the checkpoint the
+    # sinks join two in-memory tables.
     dup_ids = chunk_dup_doc_ids(
         batch,
         text_col=text_col,
@@ -107,61 +105,21 @@ def chunk_gate_batch(
         history_chunks=history,
         chunks=chunks,
     ).localCheckpoint(eager=True)
-    # emptiness decided from counts on checkpointed frames (driver
-    # arithmetic), not per-sink isEmpty() jobs. n_ids (distinct)
-    # guards the duplicate-id edge: kept is empty iff EVERY distinct
-    # id was rejected, regardless of row multiplicity. NULL ids form
-    # their own +1 bucket (advisor r12): countDistinct ignores NULLs
-    # while the left_anti below always KEEPS null-id rows (a null id
-    # never equi-matches dup_ids), so without the bucket a batch of
-    # all-duplicate non-null ids plus some null-id rows would skip
-    # the kept write and silently drop those rows.
-    stats = batch.agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        (
-            F.countDistinct(id_col)
-            + F.coalesce(  # max over an EMPTY batch is NULL, not 0
-                F.max(F.col(id_col).isNull().cast("int")), F.lit(0)
-            )
-        ).alias("n_ids"),
-    ).collect()[0]
-    n_dup = dup_ids.count()
-    rejected = batch.join(dup_ids, id_col, "left_semi")
-    kept = batch.join(dup_ids, id_col, "left_anti")
-    with partition_overwrite(spark, "dynamic"):
-        for frame, path, empty in (
-            (kept, kept_dir, n_dup >= stats.n_ids),
-            (rejected, rejected_dir, n_dup == 0),
-        ):
-            # empty-partition guard: a data-file-less partitioned dir
-            # is unreadable downstream (the forget lesson) — absence
-            # means zero rows
-            if empty:
-                continue
-            (
-                frame.withColumn("batch_id", F.lit(int(batch_id)))
-                .write.mode("overwrite")
-                .partitionBy("batch_id")
-                .parquet(path)
-            )
-        # state grows by ALL of the batch's chunk hashes — rejected
-        # docs' chunks included, mirroring the corpus_increment rule
-        # (ownership is computed over exact survivors, independent of
-        # later drop decisions, which is what keeps the rule
-        # order-independent)
-        new_hashes = (
-            chunks.select("chunk_hash")
-            .distinct()
-            .join(history, "chunk_hash", "left_anti")
-            .localCheckpoint(eager=True)
-        )
-        if not new_hashes.isEmpty():
-            (
-                new_hashes.withColumn("batch_id", F.lit(int(batch_id)))
-                .write.mode("overwrite")
-                .partitionBy("batch_id")
-                .parquet(state_dir)
-            )
+    write_batch(batch.join(dup_ids, id_col, "left_anti"), batch_id, kept_dir)
+    write_batch(
+        batch.join(dup_ids, id_col, "left_semi"), batch_id, rejected_dir
+    )
+    # state grows by ALL of the batch's chunk hashes — rejected docs'
+    # chunks included, mirroring the corpus_increment rule (ownership
+    # is computed over exact survivors, independent of later drop
+    # decisions, which is what keeps the rule order-independent)
+    write_batch(
+        chunks.select("chunk_hash")
+        .distinct()
+        .join(history, "chunk_hash", "left_anti"),
+        batch_id,
+        state_dir,
+    )
 
 
 def stream_chunk_gate(
@@ -180,10 +138,9 @@ def stream_chunk_gate(
     started query. ``max_files_per_trigger=1`` pins the file→batch
     mapping so reruns replay identical batches (the replay tests'
     convergence contract)."""
-    reader = spark.readStream.schema("doc_id LONG, text STRING")
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    docs = reader.json(source_dir)
+    docs = file_stream(
+        spark, source_dir, "doc_id LONG, text STRING", max_files_per_trigger
+    )
 
     def fb(batch_df: DataFrame, batch_id: int) -> None:
         chunk_gate_batch(
@@ -195,9 +152,4 @@ def stream_chunk_gate(
             threshold=threshold,
         )
 
-    return (
-        docs.writeStream.foreachBatch(fb)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_foreach_batch(docs, fb, checkpoint_dir)

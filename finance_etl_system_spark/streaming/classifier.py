@@ -26,12 +26,12 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.confs import partition_overwrite
 from ..functions.generations import read_state
 from ..operators.quality_classifier import (
     hashed_text_features,
     logreg_score,
 )
+from .sinks import file_stream, start_foreach_batch, write_batch
 
 
 def classifier_gate_batch(
@@ -50,10 +50,8 @@ def classifier_gate_batch(
     is rounded to 6dp BEFORE thresholding so the keep decision is
     engine- and replay-deterministic at the boundary. Each document
     is featurized+scored exactly ONCE per batch (the scored frame is
-    checkpointed before the two-way split — without the barrier the
-    emptiness guards plus the two writes would re-run the pandas-UDF
-    pipeline up to four times, review finding r9)."""
-    spark = batch.sparkSession
+    checkpointed before the two-way split, so the two writes do not
+    each re-run the pandas-UDF pipeline)."""
     scored = (
         logreg_score(
             hashed_text_features(
@@ -67,18 +65,8 @@ def classifier_gate_batch(
     )
     kept = scored.filter(F.col("quality_prob") >= threshold)
     rejected = scored.filter(F.col("quality_prob") < threshold)
-    for frame, path in ((kept, kept_dir), (rejected, rejected_dir)):
-        # a zero-row dynamic overwrite would leave a never-written sink
-        # an empty directory, which the audit's read_state refuses
-        if frame.isEmpty():
-            continue
-        with partition_overwrite(spark, "dynamic"):
-            (
-                frame.withColumn("batch_id", F.lit(int(batch_id)))
-                .write.mode("overwrite")
-                .partitionBy("batch_id")
-                .parquet(path)
-            )
+    write_batch(kept, batch_id, kept_dir)
+    write_batch(rejected, batch_id, rejected_dir)
 
 
 def stream_classifier_gate(
@@ -95,10 +83,9 @@ def stream_classifier_gate(
 ):
     """Checkpointed availableNow stream: JSON document files →
     classifier gate. Returns the started query."""
-    reader = spark.readStream.schema("doc_id LONG, text STRING")
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    docs = reader.json(source_dir)
+    docs = file_stream(
+        spark, source_dir, "doc_id LONG, text STRING", max_files_per_trigger
+    )
 
     def fb(batch_df: DataFrame, batch_id: int) -> None:
         classifier_gate_batch(
@@ -111,12 +98,7 @@ def stream_classifier_gate(
             threshold=threshold,
         )
 
-    return (
-        docs.writeStream.foreachBatch(fb)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_foreach_batch(docs, fb, checkpoint_dir)
 
 
 def classifier_gate_audit(

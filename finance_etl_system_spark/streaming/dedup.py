@@ -31,12 +31,11 @@ pinned by tests/test_streaming.py replay tests.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from ..operators.dedup import minhash_dedup_incremental
 from ..functions.generations import read_state
-from ..functions.confs import partition_overwrite
 from ..functions.sqltext import pin_sql_text_conf
+from ..operators.dedup import minhash_dedup_incremental
+from .sinks import file_stream, start_foreach_batch, write_batch
 
 _SIG_SCHEMA = "id bigint, sig array<bigint>"
 
@@ -63,22 +62,8 @@ def dedup_increment_batch(
     verdicts, _updated, survivors = minhash_dedup_incremental(
         batch_df, history, with_new_survivors=True, **minhash_kwargs
     )
-    with partition_overwrite(spark, "dynamic"):
-        (
-            verdicts.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .partitionBy("batch_id")
-            .parquet(verdict_dir)
-        )
-        survivors = survivors.localCheckpoint(eager=True)
-        if survivors.isEmpty():
-            return  # an all-duplicate batch adds no signatures
-        (
-            survivors.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .partitionBy("batch_id")
-            .parquet(state_dir)
-        )
+    write_batch(verdicts, batch_id, verdict_dir)
+    write_batch(survivors, batch_id, state_dir)
 
 
 def stream_dedup_incremental(
@@ -101,19 +86,13 @@ def stream_dedup_incremental(
     available files — verdict CONTENT still converges, only the
     batch_id partitioning differs.
     """
-    reader = spark.readStream.schema("doc_id LONG, text STRING")
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    docs = reader.json(source_dir)
+    docs = file_stream(
+        spark, source_dir, "doc_id LONG, text STRING", max_files_per_trigger
+    )
 
     def fb(batch_df: DataFrame, batch_id: int) -> None:
         dedup_increment_batch(
             batch_df, batch_id, verdict_dir, state_dir, **minhash_kwargs
         )
 
-    return (
-        docs.writeStream.foreachBatch(fb)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_foreach_batch(docs, fb, checkpoint_dir)

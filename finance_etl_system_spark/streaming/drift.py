@@ -35,8 +35,8 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.confs import partition_overwrite
 from ..functions.generations import read_state
+from .sinks import file_stream, start_foreach_batch, write_batch
 
 PSI_ALARM = 0.2
 
@@ -90,7 +90,7 @@ def drift_monitor_batch(
 
     An all-NULL (or value-free) batch still writes its verdict row
     (n_batch=0, psi_batch=0, alarm=false) so the verdict log never
-    gaps — only the counts-log write is skipped (zero counted rows).
+    gaps — only the counts log gains no partition (zero counted rows).
     Retry semantics for psi_cum: a retried OLD batch recomputes
     psi_cum over ALL counts-log partitions present at retry time, not
     the prefix up to its batch_id — cumulative PSI is order-free
@@ -117,24 +117,16 @@ def drift_monitor_batch(
     )
     for r in log.groupBy("bucket").agg(F.sum("n").alias("n")).collect():
         cum_counts[r["bucket"]] = cum_counts.get(r["bucket"], 0) + r["n"]
-    if batch_counts:
-        counts = spark.createDataFrame(
-            [(b, n, int(batch_id)) for b, n in batch_counts.items()],
-            _COUNTS_SCHEMA,
-        )
-        with partition_overwrite(spark, "dynamic"):
-            counts.write.mode("overwrite").partitionBy("batch_id").parquet(
-                counts_dir
-            )
-    # else: every monitored value in the batch was NULL — nothing to
-    # count, but the verdict row below still lands so the log has one
-    # row per non-empty batch
+    write_batch(
+        spark.createDataFrame(list(batch_counts.items()), "bucket int, n bigint"),
+        batch_id,
+        counts_dir,
+    )
     psi_batch = psi_from_counts(batch_counts, ref_fracs)
     psi_cum = psi_from_counts(cum_counts, ref_fracs)
     verdict = spark.createDataFrame(
         [
             (
-                int(batch_id),
                 int(sum(batch_counts.values())),
                 int(sum(cum_counts.values())),
                 round(psi_batch, 6),
@@ -142,13 +134,10 @@ def drift_monitor_batch(
                 bool(psi_batch > PSI_ALARM),
             )
         ],
-        "batch_id long, n_batch long, n_total long, psi_batch double,"
-        " psi_cum double, alarm boolean",
+        "n_batch long, n_total long, psi_batch double, psi_cum double,"
+        " alarm boolean",
     )
-    with partition_overwrite(spark, "dynamic"):
-        verdict.write.mode("overwrite").partitionBy("batch_id").parquet(
-            verdict_dir
-        )
+    write_batch(verdict, batch_id, verdict_dir)
 
 
 def reference_grid(
@@ -187,20 +176,16 @@ def stream_drift_monitor(
     """Wire the monitor to a file-source stream (availableNow — the
     test harness path; swap the source for Kafka in production, the
     batch body is source-agnostic). Returns the started query."""
-    src = spark.readStream.schema(schema).json(source_dir)
-    return (
-        src.writeStream.foreachBatch(
-            lambda df, bid: drift_monitor_batch(
-                df,
-                bid,
-                value_col=value_col,
-                edges=edges,
-                ref_fracs=ref_fracs,
-                counts_dir=counts_dir,
-                verdict_dir=verdict_dir,
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return start_foreach_batch(
+        file_stream(spark, source_dir, schema),
+        lambda df, bid: drift_monitor_batch(
+            df,
+            bid,
+            value_col=value_col,
+            edges=edges,
+            ref_fracs=ref_fracs,
+            counts_dir=counts_dir,
+            verdict_dir=verdict_dir,
+        ),
+        checkpoint_dir,
     )

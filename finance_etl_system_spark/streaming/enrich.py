@@ -37,7 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.confs import partition_overwrite
+from .sinks import file_stream, start_foreach_batch, write_batch
 
 
 def temporal_enrich(
@@ -81,14 +81,11 @@ def stream_enrich_batch(
     partition)."""
     if batch_df.isEmpty():
         return
-    spark = batch_df.sparkSession
-    enriched = temporal_enrich(
-        batch_df, dim, key=key, ts_col=ts_col, how=how
-    ).withColumn("batch_id", F.lit(batch_id))
-    with partition_overwrite(spark, "dynamic"):
-        enriched.write.mode("overwrite").partitionBy("batch_id").parquet(
-            out_dir
-        )
+    write_batch(
+        temporal_enrich(batch_df, dim, key=key, ts_col=ts_col, how=how),
+        batch_id,
+        out_dir,
+    )
 
 
 def stream_enrich_temporal(
@@ -108,15 +105,10 @@ def stream_enrich_temporal(
     batch body is source-agnostic). The dim frame is resolved ONCE at
     wiring time; a dim refresh restarts the query (SCD2 appends new
     versions, so a restart only ever ADDS match candidates)."""
-    src = spark.readStream.schema(schema).json(source_dir)
-    return (
-        src.writeStream.foreachBatch(
-            lambda df, bid: stream_enrich_batch(
-                df, bid, dim=dim, out_dir=out_dir, key=key,
-                ts_col=ts_col, how=how,
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return start_foreach_batch(
+        file_stream(spark, source_dir, schema),
+        lambda df, bid: stream_enrich_batch(
+            df, bid, dim=dim, out_dir=out_dir, key=key, ts_col=ts_col, how=how
+        ),
+        checkpoint_dir,
     )

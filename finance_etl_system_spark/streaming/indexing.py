@@ -20,11 +20,10 @@ replay test in tests/test_streaming.py.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from ..operators.textindex import _postings
-from ..functions.confs import partition_overwrite
 from ..functions.sqltext import pin_sql_text_conf
+from ..operators.textindex import _postings
+from .sinks import file_stream, start_foreach_batch, write_batch
 
 
 def index_batch(
@@ -40,28 +39,21 @@ def index_batch(
     retry (dynamic overwrite of the batch's own partitions)."""
     if batch_df.isEmpty():
         return
+    pin_sql_text_conf(batch_df.sparkSession)
     post, dl = _postings(
         batch_df, text_col=text_col, id_col=id_col, analyzed=analyzed
     )
-    spark = batch_df.sparkSession
-    pin_sql_text_conf(spark)
-    with partition_overwrite(spark, "dynamic"):
-        (
-            post.withColumn("batch_id", F.lit(batch_id))
-            # (partition cols, term) sort: keeps each bucket file
-            # term-clustered so probe-time term predicates row-group-
-            # skip — same layout contract as the batch writers
-            .sortWithinPartitions("batch_id", "bucket", "term")
-            .write.mode("overwrite")
-            .partitionBy("batch_id", "bucket")
-            .parquet(f"{index_path}/postings")
-        )
-        (
-            dl.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .partitionBy("batch_id")
-            .parquet(f"{index_path}/doclen")
-        )
+    # term-sorted within each (batch_id, bucket) file, so probe-time
+    # term predicates row-group-skip — same layout contract as the
+    # batch writers
+    write_batch(
+        post,
+        batch_id,
+        f"{index_path}/postings",
+        partition_by=("bucket",),
+        sort_within=("term",),
+    )
+    write_batch(dl, batch_id, f"{index_path}/doclen")
 
 
 def stream_index_documents(
@@ -77,17 +69,11 @@ def stream_index_documents(
     per-batch postings/doclen partitions. Returns the started
     (availableNow) query. ``max_files_per_trigger`` pins the
     file→batch mapping so reruns replay identical batches."""
-    reader = spark.readStream.schema("doc_id LONG, text STRING")
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    docs = reader.json(source_dir)
+    docs = file_stream(
+        spark, source_dir, "doc_id LONG, text STRING", max_files_per_trigger
+    )
 
     def fb(batch_df: DataFrame, batch_id: int) -> None:
         index_batch(batch_df, batch_id, index_path, analyzed=analyzed)
 
-    return (
-        docs.writeStream.foreachBatch(fb)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_foreach_batch(docs, fb, checkpoint_dir)

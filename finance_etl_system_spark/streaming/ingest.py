@@ -7,7 +7,7 @@ Reference behavior being re-expressed:
 - ``consumed_at`` UTC enrichment (consumer.py:135)
   -> ``current_timestamp()``
 - micro-batch flush at 500 msgs / 10 s (consumer.py:35-36,113-146)
-  -> trigger(processingTime) + foreachBatch
+  -> foreachBatch micro-batches (streaming/sinks.py starters)
 - manual offset commit after flush = at-least-once (consumer.py:67,145)
   -> checkpointed offsets + idempotent sink = effectively-once
 - per-ticker grouping before insert (consumer.py:139)
@@ -31,6 +31,11 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.confs import partition_overwrite
+from .sinks import file_stream, start_foreach_batch, start_parquet_append
+
+# the Kafka record as the file source carries it: one JSON line per
+# message with ``key``/``value`` fields
+WIRE_SCHEMA = "key STRING, value STRING"
 
 # crawler record shape (reference crawler/crawler.py:99-108)
 KAFKA_VALUE_SCHEMA = T.StructType(
@@ -62,6 +67,12 @@ def parse_kafka_records(df: DataFrame) -> DataFrame:
         .withColumn("consumed_at", F.current_timestamp())
         .withColumn("event_time", F.to_timestamp("timestamp"))
     )
+
+
+def wire_stream(spark: SparkSession, source_dir: str) -> DataFrame:
+    """The file-source stand-in for the Kafka topic, parsed: every
+    wire-format stream in this package starts here."""
+    return parse_kafka_records(file_stream(spark, source_dir, WIRE_SCHEMA))
 
 
 def write_keyed_overwrite(batch_df: DataFrame, out_dir: str) -> None:
@@ -111,8 +122,6 @@ def stream_ingest(
     source_dir: str,
     out_dir: str,
     checkpoint_dir: str,
-    *,
-    available_now: bool = True,
 ):
     """File-source stand-in for the Kafka topic: each JSON line is one
     message with ``key``/``value`` fields. Returns the started query.
@@ -128,24 +137,11 @@ def stream_ingest(
     quirk fixed, not copied). Later batches carrying an existing key
     upsert it (last writer wins); new keys land in new partitions.
     """
-    raw = (
-        spark.readStream.schema("key STRING, value STRING")
-        .json(source_dir)
+    return start_foreach_batch(
+        wire_stream(spark, source_dir),
+        lambda batch_df, _bid: write_keyed_overwrite(batch_df, out_dir),
+        checkpoint_dir,
     )
-    parsed = parse_kafka_records(raw)
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        write_keyed_overwrite(batch_df, out_dir)
-
-    writer = (
-        parsed.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime="10 seconds")
-    return writer.start()
 
 
 def stream_ingest_kafka(
@@ -156,7 +152,6 @@ def stream_ingest_kafka(
     checkpoint_dir: str,
     *,
     starting_offsets: str = "earliest",
-    available_now: bool = True,
 ):
     """The REAL Kafka source path (reference
     kafka-consumer/consumer.py:62-73 subscribe/poll/commit):
@@ -178,20 +173,11 @@ def stream_ingest_kafka(
         .option("startingOffsets", starting_offsets)
         .load()
     )
-    parsed = parse_kafka_records(raw)
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        write_keyed_overwrite(batch_df, out_dir)
-
-    writer = (
-        parsed.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
+    return start_foreach_batch(
+        parse_kafka_records(raw),
+        lambda batch_df, _bid: write_keyed_overwrite(batch_df, out_dir),
+        checkpoint_dir,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime="10 seconds")
-    return writer.start()
 
 
 def stream_to_kafka(
@@ -239,10 +225,9 @@ def stream_windowed_counts(
     ``watermark_delay`` behind the max seen event time are dropped.
     Returns the started query (availableNow trigger).
     """
-    raw = spark.readStream.schema("key STRING, value STRING").json(source_dir)
-    parsed = parse_kafka_records(raw)
     agg = (
-        parsed.withWatermark("event_time", watermark_delay)
+        wire_stream(spark, source_dir)
+        .withWatermark("event_time", watermark_delay)
         .groupBy(
             F.window("event_time", window).alias("win"),
             F.upper("ticker").alias("symbol"),
@@ -250,14 +235,7 @@ def stream_windowed_counts(
         .agg(F.count(F.lit(1)).alias("n_rows"))
         .select(F.col("win.start").alias("window_start"), "symbol", "n_rows")
     )
-    return (
-        agg.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_parquet_append(agg, out_dir, checkpoint_dir)
 
 
 def stream_ingest_dual_sink(
@@ -282,10 +260,8 @@ def stream_ingest_dual_sink(
     while the append sink dedups on read via the deterministic
     (symbol, date) key.
     """
-    raw = spark.readStream.schema("key STRING, value STRING").json(source_dir)
-    parsed = parse_kafka_records(raw)
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
+    def write_both(batch_df: DataFrame, batch_id: int) -> None:
         # deterministic per-key pick (NOT dropDuplicates, which keeps
         # an arbitrary row and would diverge on replay)
         batch = pick_latest_per_key(batch_df).persist()
@@ -304,11 +280,8 @@ def stream_ingest_dual_sink(
         finally:
             batch.unpersist()
 
-    return (
-        parsed.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return start_foreach_batch(
+        wire_stream(spark, source_dir), write_both, checkpoint_dir
     )
 
 
@@ -330,21 +303,13 @@ def stream_dedup(
     plain dropDuplicates on a stream, whose state grows forever.
     Returns the started query (availableNow trigger).
     """
-    raw = spark.readStream.schema("key STRING, value STRING").json(source_dir)
     deduped = (
-        parse_kafka_records(raw)
+        wire_stream(spark, source_dir)
         .withColumn("symbol", F.upper("ticker"))
         .withWatermark("event_time", watermark_delay)
         .dropDuplicatesWithinWatermark(["symbol", "date"])
     )
-    return (
-        deduped.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_parquet_append(deduped, out_dir, checkpoint_dir)
 
 
 def stream_stream_join(
@@ -370,10 +335,8 @@ def stream_stream_join(
     would have to keep BOTH streams forever. Returns the started query
     (availableNow trigger, append-only parquet sink).
     """
-    raw_l = spark.readStream.schema("key STRING, value STRING").json(trades_dir)
-    raw_r = spark.readStream.schema("key STRING, value STRING").json(signals_dir)
     trades = (
-        parse_kafka_records(raw_l)
+        wire_stream(spark, trades_dir)
         .select(
             F.upper("ticker").alias("symbol"),
             F.col("event_time").alias("trade_time"),
@@ -382,7 +345,7 @@ def stream_stream_join(
         .withWatermark("trade_time", watermark_delay)
     )
     signals = (
-        parse_kafka_records(raw_r)
+        wire_stream(spark, signals_dir)
         .select(
             F.upper("ticker").alias("sig_symbol"),
             F.col("event_time").alias("signal_time"),
@@ -401,14 +364,7 @@ def stream_stream_join(
     joined = trades.join(signals, cond).select(
         "symbol", "trade_time", "trade_close", "signal_time", "signal_value"
     )
-    return (
-        joined.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_parquet_append(joined, out_dir, checkpoint_dir)
 
 
 def stream_session_agg(
@@ -431,10 +387,9 @@ def stream_session_agg(
     expires closed ones, so state is bounded by activity, not history.
     Returns the started query (availableNow trigger).
     """
-    raw = spark.readStream.schema("key STRING, value STRING").json(source_dir)
-    parsed = parse_kafka_records(raw)
     sess = (
-        parsed.withWatermark("event_time", watermark_delay)
+        wire_stream(spark, source_dir)
+        .withWatermark("event_time", watermark_delay)
         .groupBy(
             F.session_window("event_time", gap).alias("win"),
             F.upper("ticker").alias("symbol"),
@@ -451,14 +406,7 @@ def stream_session_agg(
             "avg_close",
         )
     )
-    return (
-        sess.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_parquet_append(sess, out_dir, checkpoint_dir)
 
 
 def stream_static_enrich(
@@ -487,9 +435,8 @@ def stream_static_enrich(
     query (availableNow trigger, append parquet sink).
     """
     dim = F.broadcast(spark.read.parquet(dim_path))
-    raw = spark.readStream.schema("key STRING, value STRING").json(source_dir)
     enriched = (
-        parse_kafka_records(raw)
+        wire_stream(spark, source_dir)
         .select(
             F.upper("ticker").alias("symbol"),
             "event_time",
@@ -498,14 +445,7 @@ def stream_static_enrich(
         )
         .join(dim, "symbol", "left")
     )
-    return (
-        enriched.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_parquet_append(enriched, out_dir, checkpoint_dir)
 
 
 def windowed_stream_agg(

@@ -29,11 +29,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.sampling import budget_take
 from ..functions.generations import read_state
-from ..functions.confs import partition_overwrite
 from ..functions.sqltext import pin_sql_text_conf
+from ..operators.sampling import budget_take
 from ..operators.text import ws_tokens
+from .sinks import file_stream, start_foreach_batch, write_batch
+
 
 def _load_kept(
     spark: SparkSession, kept_dir: str, group_col: str, weight_col: str
@@ -78,20 +79,7 @@ def mixture_increment_batch(
         budgets=budgets,
         consumed=consumed,
     )
-    kept = kept.localCheckpoint(eager=True)  # compute once: emptiness
-    # probe + write must see the same rows
-    if kept.isEmpty():
-        # budgets exhausted or every group unlisted; a zero-row dynamic
-        # overwrite would leave a first carry an empty directory, which
-        # read_state refuses
-        return
-    with partition_overwrite(spark, "dynamic"):
-        (
-            kept.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .partitionBy("batch_id")
-            .parquet(kept_dir)
-        )
+    write_batch(kept, batch_id, kept_dir)
 
 
 def stream_mixture_budget(
@@ -110,12 +98,12 @@ def stream_mixture_budget(
     pins the file→batch mapping for replay tests (None lets one batch
     swallow everything; kept CONTENT still respects the budgets, only
     batch attribution differs)."""
-    reader = spark.readStream.schema(
-        f"doc_id LONG, {group_col} STRING, text STRING"
+    docs = file_stream(
+        spark,
+        source_dir,
+        f"doc_id LONG, {group_col} STRING, text STRING",
+        max_files_per_trigger,
     )
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    docs = reader.json(source_dir)
 
     def fb(batch_df: DataFrame, batch_id: int) -> None:
         pin_sql_text_conf(batch_df.sparkSession)
@@ -143,9 +131,4 @@ def stream_mixture_budget(
             budgets=budgets,
         )
 
-    return (
-        docs.writeStream.foreachBatch(fb)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_foreach_batch(docs, fb, checkpoint_dir)

@@ -30,8 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .ingest import parse_kafka_records, write_keyed_overwrite
-from ..functions.confs import partition_overwrite
+from .ingest import wire_stream, write_keyed_overwrite
+from .sinks import start_foreach_batch, write_batch
 
 
 def batch_quality_metrics(batch: DataFrame) -> DataFrame:
@@ -85,31 +85,18 @@ def gate_batch(
     try:
         if batch.isEmpty():
             return
-        verdicts = batch_quality_metrics(batch).withColumn(
-            "batch_id", F.lit(batch_id)
+        rows = batch_quality_metrics(batch).collect()  # |checks| rows
+        write_batch(
+            batch.sparkSession.createDataFrame(
+                rows, "check_name string, metric double, passed boolean"
+            ),
+            batch_id,
+            verdict_dir,
         )
-        rows = verdicts.collect()  # |checks| rows — driver-sized
-        spark = batch.sparkSession
-        with partition_overwrite(spark, "dynamic"):
-            (
-                spark.createDataFrame(
-                    rows,
-                    schema="check_name string, metric double, "
-                    "passed boolean, batch_id long",
-                )
-                .write.mode("overwrite")
-                .partitionBy("batch_id")
-                .parquet(verdict_dir)
-            )
-            if all(r.passed for r in rows):
-                write_keyed_overwrite(batch, clean_dir)
-            else:
-                (
-                    batch.withColumn("batch_id", F.lit(batch_id))
-                    .write.mode("overwrite")
-                    .partitionBy("batch_id")
-                    .parquet(quarantine_dir)
-                )
+        if all(r.passed for r in rows):
+            write_keyed_overwrite(batch, clean_dir)
+        else:
+            write_batch(batch, batch_id, quarantine_dir)
     finally:
         batch.unpersist()
 
@@ -129,15 +116,8 @@ def stream_quality_gate(
     written with dynamic-partition overwrite, so a batch retried after
     a mid-batch crash is idempotent (it rewrites its own partition).
     Returns the started query."""
-    raw = spark.readStream.schema("key STRING, value STRING").json(source_dir)
-    parsed = parse_kafka_records(raw)
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
+    def fb(batch_df: DataFrame, batch_id: int) -> None:
         gate_batch(batch_df, batch_id, clean_dir, quarantine_dir, verdict_dir)
 
-    return (
-        parsed.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_foreach_batch(wire_stream(spark, source_dir), fb, checkpoint_dir)

@@ -22,8 +22,8 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from .ingest import parse_kafka_records
-from ..functions.confs import partition_overwrite
+from .ingest import wire_stream
+from .sinks import start_foreach_batch, start_parquet_append, write_batch
 
 
 def stream_score(
@@ -46,8 +46,7 @@ def stream_score(
             F.col("group_key").alias("symbol"), "coefficients", "intercept"
         )
     )
-    raw = spark.readStream.schema("key STRING, value STRING").json(source_dir)
-    feats = parse_kafka_records(raw).select(
+    feats = wire_stream(spark, source_dir).select(
         F.upper("ticker").alias("symbol"),
         "event_time",
         *feature_cols,
@@ -66,14 +65,7 @@ def stream_score(
             ),
         ),
     ).drop("coefficients", "intercept")
-    return (
-        scored.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_parquet_append(scored, out_dir, checkpoint_dir)
 
 
 def stream_score_best_model(
@@ -105,8 +97,7 @@ def stream_score_best_model(
     from ..pipeline.ml import serve_best_model
 
     registry = spark.read.parquet(registry_path)
-    raw = spark.readStream.schema("key STRING, value STRING").json(source_dir)
-    feats = parse_kafka_records(raw).select(
+    feats = wire_stream(spark, source_dir).select(
         F.upper("ticker").alias(group_col), "event_time", *feature_cols
     )
 
@@ -120,17 +111,6 @@ def stream_score_best_model(
             feature_cols=list(feature_cols),
             blob_strategy="broadcast",  # registry is dim-sized here
         )
-        with partition_overwrite(spark, "dynamic"):
-            (
-                scored.withColumn("batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .partitionBy("batch_id")
-                .parquet(out_dir)
-            )
+        write_batch(scored, batch_id, out_dir)
 
-    return (
-        feats.writeStream.foreachBatch(fb)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_foreach_batch(feats, fb, checkpoint_dir)

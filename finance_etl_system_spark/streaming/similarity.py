@@ -22,6 +22,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .sinks import file_stream, start_foreach_batch
+
 
 def _append_batch(append, batch_df: DataFrame, batch_id: int, path: str) -> None:
     """Both kinds' foreachBatch body (see :func:`ivf_append_batch`)."""
@@ -30,24 +32,6 @@ def _append_batch(append, batch_df: DataFrame, batch_id: int, path: str) -> None
     if batch_df.isEmpty():
         return
     append(batch_df, path, batch_id=IVF_STREAM_BATCH_BASE + int(batch_id))
-
-
-def _stream_append(spark, body, source_dir, schema, index_path,
-                   checkpoint_dir, max_files_per_trigger):
-    """Start an availableNow file-source stream with foreachBatch
-    ``body`` writing into the index at ``index_path``."""
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", int(max_files_per_trigger))
-    return (
-        reader.json(source_dir)
-        .writeStream.foreachBatch(
-            lambda df, bid: body(df, bid, path=index_path)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
 
 
 def ivf_append_batch(batch_df: DataFrame, batch_id: int, *, path: str) -> None:
@@ -105,9 +89,10 @@ def stream_append_ivf_pq(
     embedding ingestion lands as residual PQ codes — the stream pays
     the 16× compression at write time, so the index a probe reads
     stays codes-sized however long the stream runs."""
-    return _stream_append(
-        spark, ivf_pq_append_batch, source_dir, schema, index_path,
-        checkpoint_dir, max_files_per_trigger,
+    return start_foreach_batch(
+        file_stream(spark, source_dir, schema, max_files_per_trigger),
+        lambda df, bid: ivf_pq_append_batch(df, bid, path=index_path),
+        checkpoint_dir,
     )
 
 
@@ -125,7 +110,8 @@ def stream_append_ivf(
     source-agnostic) into the IVF index. Returns the started query.
     ``max_files_per_trigger`` bounds micro-batch size (availableNow
     honors it and drains in several batches)."""
-    return _stream_append(
-        spark, ivf_append_batch, source_dir, schema, index_path,
-        checkpoint_dir, max_files_per_trigger,
+    return start_foreach_batch(
+        file_stream(spark, source_dir, schema, max_files_per_trigger),
+        lambda df, bid: ivf_append_batch(df, bid, path=index_path),
+        checkpoint_dir,
     )

@@ -22,6 +22,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from .sinks import start_parquet_append
+
 EMA_OUTPUT_SCHEMA = T.StructType(
     [
         T.StructField("symbol", T.StringType()),
@@ -118,15 +120,10 @@ def run_streaming_ema(
 ):
     """File-source wiring: JSON messages -> parse -> stateful EMA ->
     parquet sink. availableNow trigger; returns the started query."""
-    from .ingest import parse_kafka_records
+    from .ingest import wire_stream
 
-    raw = spark.readStream.schema("key STRING, value STRING").json(source_dir)
-    ema = streaming_ema(parse_kafka_records(raw), span=span)
-    return (
-        ema.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return start_parquet_append(
+        streaming_ema(wire_stream(spark, source_dir), span=span),
+        out_dir,
+        checkpoint_dir,
     )

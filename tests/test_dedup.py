@@ -356,3 +356,27 @@ def test_lsh_cap_boilerplate_skew_keeps_content_recall(spark):
 import pytest as _pytest_tier
 
 pytestmark = _pytest_tier.mark.certify
+
+
+@pytest.mark.parametrize("lsh_nbits", [None, 8], ids=["exact", "lsh"])
+@pytest.mark.parametrize("ansi", [True, False], ids=["ansi", "no_ansi"])
+def test_embedding_cosine_zero_vector_forms_no_pair(spark, ansi, lsh_nbits):
+    """An all-zero vector normalizes to NULLs under either ANSI setting
+    (no DIVIDE_BY_ZERO), so it forms no pair in either mode."""
+    from finance_etl_system_spark.functions.confs import session_conf
+
+    df = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, [0.9, 0.1]), (3, [0.0, 0.0])],
+        "vec_id LONG, embedding ARRAY<FLOAT>",
+    )
+    with session_conf(spark, "spark.sql.ansi.enabled", str(ansi).lower()):
+        pairs = {
+            (r.id_a, r.id_b)
+            for r in embedding_cosine_pairs(
+                df, threshold=0.4, lsh_nbits=lsh_nbits, bands=4, dim=2
+            ).collect()
+        }
+    if lsh_nbits is None:
+        assert pairs == {(1, 2)}
+    else:
+        assert pairs <= {(1, 2)}

@@ -21,7 +21,11 @@ driver-sized. These greps pin that convention:
   (an assert vanishes under ``python -O``);
 - the per-query ANN rank window and the cosine SQL text live only in
   ``operators/similarity.py``, so every ANN kernel ends in its one
-  safe cosine and one rank.
+  safe cosine and one rank;
+- stream starters (``writeStream``, ``.trigger(``) and batch-keyed
+  sinks (``partitionBy("batch_id"``) live only in
+  ``streaming/sinks.py``, so every streaming path shares one
+  checkpointed starter and one write that owns the zero-row rule.
 """
 
 from __future__ import annotations
@@ -176,6 +180,48 @@ def test_ann_rank_and_cosine_text_are_closed_to_similarity():
     assert using == {"operators/similarity.py"}, (
         "ANN kernels rank with similarity.rank_per_query/exact_rerank "
         f"and score with its cosine_score_sql: {sorted(using)}"
+    )
+
+
+# stream starters and batch-keyed sinks: streaming/sinks.py owns them
+_STREAM_IO_MARKERS = ("writeStream", ".trigger(", 'partitionBy("batch_id"')
+_STREAM_IO_ALLOWED = {
+    # the Kafka producer sink: a broker, not a batch-keyed store
+    "streaming/ingest.py::stream_to_kafka",
+    # the vector index store's fenced (batch_id, cluster) payload write
+    "operators/ivfstore.py::_write_payload",
+}
+
+
+def _marker_sites(markers, skip):
+    """``file::top-level def`` of every line holding one of ``markers``."""
+    sites = set()
+    for p in _engine_files():
+        rel = str(p.relative_to(ENGINE))
+        text = p.read_text()
+        if rel == skip or not any(m in text for m in markers):
+            continue
+        spans = [
+            (node.lineno, node.end_lineno, node.name)
+            for node in ast.parse(text).body
+            if isinstance(node, (ast.FunctionDef, ast.ClassDef))
+        ]
+        for i, line in enumerate(text.splitlines(), 1):
+            if any(m in line for m in markers):
+                name = next(
+                    (n for a, b, n in spans if a <= i <= b), "<module>"
+                )
+                sites.add(f"{rel}::{name}")
+    return sites
+
+
+def test_stream_starters_and_batch_sinks_are_closed_to_sinks():
+    using = _marker_sites(_STREAM_IO_MARKERS, skip="streaming/sinks.py")
+    assert using == _STREAM_IO_ALLOWED, (
+        "start streams with streaming/sinks.start_foreach_batch or "
+        "start_parquet_append and write batch-keyed sinks with its "
+        f"write_batch: {sorted(using - _STREAM_IO_ALLOWED)}; stale "
+        f"allowlist entries: {sorted(_STREAM_IO_ALLOWED - using)}"
     )
 
 

@@ -11,6 +11,7 @@ empty in BOTH directions.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+import pytest
 
 from finance_etl_system_spark.catalog import load_table
 from finance_etl_system_spark.operators.quantize import (
@@ -103,3 +104,45 @@ def test_sq8_exact_rerank_matches_columns(spark):
     )
     _frames_equal(new_all, ref)
     _frames_equal(new, ref.filter(F.col("rnk") <= 10))
+
+
+def test_quantize_audit_cosine_matches_columns(spark):
+    """``embedding_quantize_int8``'s ``cos_dq`` comes from the shared
+    safe cosine text; on fixture vectors (none has zero norm) it is
+    bit-equal to the plain-division Column formulation it replaced."""
+    from finance_etl_system_spark.queries.similarity import (
+        q_embedding_quantize_int8,
+    )
+
+    got = q_embedding_quantize_int8(spark, SF_SMOKE)
+    v = _as_double(F.col("embedding"))
+    dq = F.transform(F.col("qv"), lambda q: q.cast("double") * F.col("q_scale"))
+    ref = quantize_int8(load_table(spark, SF_SMOKE, "embeddings")).select(
+        "vec_id",
+        F.round(_dot(v, dq) / (_norm(v) * _norm(dq)), 6).alias("cos_dq"),
+    )
+    _frames_equal(got.select("vec_id", "cos_dq"), ref)
+
+
+@pytest.mark.parametrize("ansi", [True, False], ids=["ansi", "no_ansi"])
+def test_quantize_audit_zero_vector_scores_null(spark, tmp_path, ansi):
+    """An all-zero embedding quantizes to scale 0 and all-zero codes;
+    its ``cos_dq`` is NULL under either ANSI setting instead of raising
+    DIVIDE_BY_ZERO."""
+    from finance_etl_system_spark.functions.confs import session_conf
+    from finance_etl_system_spark.queries.similarity import (
+        q_embedding_quantize_int8,
+    )
+
+    spark.createDataFrame(
+        [(0, [0.0, 0.0], 0), (1, [1.0, 2.0], 1)],
+        "vec_id long, embedding array<float>, label int",
+    ).write.parquet(str(tmp_path / "embeddings.parquet"))
+    with session_conf(spark, "spark.sql.ansi.enabled", str(ansi).lower()):
+        rows = {
+            r.vec_id: r
+            for r in q_embedding_quantize_int8(spark, str(tmp_path)).collect()
+        }
+    assert rows[0].cos_dq is None
+    assert rows[0].scale_q == 0.0 and rows[0].max_abs_err == 0.0
+    assert 0.99 < rows[1].cos_dq <= 1.0

@@ -1117,3 +1117,81 @@ def test_stream_enrich_temporal_scd2_versions(spark, tmp_path):
 import pytest as _pytest_tier
 
 pytestmark = _pytest_tier.mark.certify
+
+
+def _enrich_without_match(spark, root):
+    """An inner temporal enrichment whose only event precedes every
+    dim version: the batch keeps no row."""
+    from pyspark.sql import functions as F
+
+    from finance_etl_system_spark.functions.generations import read_state
+    from finance_etl_system_spark.streaming.enrich import stream_enrich_batch
+
+    dim = spark.createDataFrame(
+        [("u1", "2024-01-10 00:00:00", None, "gold")],
+        "user_id string, valid_from string, valid_to string, tier string",
+    ).select(
+        "user_id",
+        F.col("valid_from").cast("timestamp").alias("valid_from"),
+        F.col("valid_to").cast("timestamp").alias("valid_to"),
+        "tier",
+    )
+    events = spark.createDataFrame(
+        [("u1", "2024-01-02 12:00:00", 1)], "user_id string, ts string, eid int"
+    ).select("user_id", F.col("ts").cast("timestamp").alias("ts"), "eid")
+    out = f"{root}/enr"
+    stream_enrich_batch(
+        events, 0, dim=dim, out_dir=out, key="user_id", how="inner"
+    )
+    return read_state(spark, out, "user_id string, eid int, batch_id int")
+
+
+def _index_without_tokens(spark, root):
+    """A first index batch whose documents hold no token."""
+    from finance_etl_system_spark.operators.textindex import bm25_search_index
+    from finance_etl_system_spark.streaming.indexing import index_batch
+
+    docs = spark.createDataFrame([(1, ""), (2, None)], "doc_id long, text string")
+    index_batch(docs, 0, f"{root}/idx")
+    return bm25_search_index(spark, f"{root}/idx", ["stream"])
+
+
+def _score_without_model(spark, root):
+    """A scoring stream whose only symbol has no model in the registry."""
+    from finance_etl_system_spark.functions.generations import read_state
+    from finance_etl_system_spark.pipeline.ml import unify_registries
+    from finance_etl_system_spark.streaming.scoring import stream_score_best_model
+
+    lin = spark.createDataFrame(
+        [("AAPL", "linear_regression", 10, 0.9, 0.1, [2.0, 0.5], 10.0)],
+        "group_key STRING, model_name STRING, n_rows LONG, r2 DOUBLE,"
+        " mse DOUBLE, coefficients ARRAY<DOUBLE>, intercept DOUBLE",
+    )
+    trees = spark.createDataFrame(
+        [],
+        "group_key STRING, model_name STRING, n_rows LONG, r2 DOUBLE,"
+        " mse DOUBLE, model_blob BINARY",
+    )
+    registry = f"{root}/registry"
+    unify_registries(lin, trees).write.parquet(registry)
+    _write_messages(root / "src", _rows("ZZZZ", ["2024-01-02", "2024-01-03"]))
+    out = f"{root}/scored"
+    finish(
+        stream_score_best_model(
+            spark, f"{root}/src", registry, out, f"{root}/ckpt"
+        )
+    )
+    return read_state(spark, out, "symbol string, batch_id int")
+
+
+@pytest.mark.timeout(600)
+@pytest.mark.parametrize(
+    "case",
+    [_enrich_without_match, _index_without_tokens, _score_without_model],
+    ids=["enrich_inner", "index_token_free", "score_no_model"],
+)
+def test_zero_row_batch_leaves_readable_empty_sink(spark, tmp_path, case):
+    """A micro-batch that writes zero rows to a fresh batch-keyed sink
+    leaves it readable as "no state yet": the sink's reader returns no
+    row and raises nothing."""
+    assert case(spark, tmp_path).count() == 0
